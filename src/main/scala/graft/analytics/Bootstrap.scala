@@ -126,7 +126,8 @@ object Bootstrap {
 
   /** Exact multinomial bootstrap on collected columns (reference-scale
     * path). Columns resample in parallel driver threads with a per-column
-    * SplitMix64 stream (deterministic regardless of scheduling); the inner
+    * SplitMix64 stream over the sorted values (deterministic regardless of
+    * scheduling and of the input's row order); the inner
     * loop is branch-free — ~1ns/draw, so 5000×100k×8 finishes in seconds.
     */
   def driverSide(
@@ -146,6 +147,10 @@ object Bootstrap {
           .filter(col(c).isNotNull)
           .collect()
           .map(_.getDouble(0))
+        // resampling draws by index: sorting first makes the result depend
+        // on the column's values only, not on the row order the upstream
+        // shuffle join happened to write
+        java.util.Arrays.sort(values)
         if (values.length <= 20) None // monte_carlo.py:271
         else {
           var state = seed + 0x9E3779B97F4A7C15L * (ci + 1)

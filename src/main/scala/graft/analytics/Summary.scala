@@ -2,7 +2,9 @@ package graft.analytics
 
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.stat.Correlation
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.etl.Cleaning
@@ -39,12 +41,13 @@ object Summary {
          else Nil)
     }
     val r = df.agg(exprs.head, exprs.tail: _*).head()
-    // exact quartiles via the shared histogram-refinement helper — the
-    // single-buffer percentile aggregate merged every distinct value of
-    // every column in ONE reduce task (2.5 s of q43's 3.8 s at sf0.1).
-    // r12: the big aggregate above already carries (count, min, max) of
-    // the same cast-to-double columns — pass them in so the helper skips
-    // its bounds scan (3 passes → 2)
+    // exact quartiles via Summary.exactPercentilesHist — the single-buffer
+    // percentile aggregate merged every distinct value of every column in
+    // ONE reduce task (2.5 s of q43's 3.8 s at sf0.1). The big aggregate
+    // above already carries (count, min, max) of the same cast-to-double
+    // columns: passed in, they decide the helper's driver/histogram gate
+    // before any pass — the driver path is then one collect scan, the
+    // histogram path skips its bounds pass (histogram + resolve only)
     val exact: Map[String, Seq[Option[Double]]] =
       if (approximate) Map.empty
       else {
@@ -81,33 +84,59 @@ object Summary {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Exact GLOBAL percentiles for several columns at once, via histogram
-    * refinement instead of Spark's `percentile` aggregate (r11).
+  /** Driver byte budget of [[exactPercentilesHist]]'s collect path: a
+    * thirty-second of the driver's max heap, capped at half of
+    * `spark.driver.maxResultSize` so the collected task results never trip
+    * that limit (0 there means unlimited).
+    */
+  def percentileDriverBytes: Long = {
+    val heap = Runtime.getRuntime.maxMemory / 32
+    val maxResult = SparkSession.active.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (maxResult > 0) math.min(heap, maxResult / 2) else heap
+  }
+
+  /** Exact GLOBAL percentiles for several columns at once, without Spark's
+    * `percentile` aggregate.
     *
     * The builtin buffers every (value, count) pair into one
     * TypedImperativeAggregate whose FINAL merge+sort runs in a single
     * reduce task (q43's 2.5 s / q151's 3.3 s single-task stages at sf0.1 —
     * and the buffer is corpus-sized on mostly-distinct columns, which is
     * exactly what breaks at lake scale). Here:
-    *   1. one aggregate: per-column count / min / max;
+    *   1. one fused, shuffle-free scan of the cast-to-double projection:
+    *      per partition, each column's non-null count / min / max, plus the
+    *      non-null values themselves as primitive arrays while the partition
+    *      holds at most `driverBytes / numPartitions` bytes of them. When
+    *      every partition kept its values (the DRIVER path) the driver sorts
+    *      each column and reads the order statistics off the sorted arrays:
+    *      one Spark job in all. Otherwise (the HISTOGRAM path):
     *   2. one map-side-combined pass: per-column `nBuckets` fixed-width
-    *      histogram (columns exploded into (ci, v) so ALL columns share
-    *      the pass); the driver walks cumulative counts to locate the
-    *      bucket holding each needed order statistic;
+    *      histogram over pass 1's bounds (columns exploded into (ci, v) so
+    *      ALL columns share the pass); the driver walks cumulative counts
+    *      to locate the bucket holding each needed order statistic;
     *   3. exact resolve inside the located buckets only (≈1/nBuckets of
     *      the rows): distinct-value counts collected and walked on the
     *      driver (bounded by `maxResolveRows`, pre-checked from the
     *      histogram itself; above the bound the plain aggregate runs
     *      instead — correctness never depends on the distribution).
     *
-    * BIT-IDENTICAL to the builtin on NaN-free columns: order statistics
-    * are exact ranks over the identical double ordering, and the
-    * interpolation replays Percentile.getPercentile — position =
-    * (n−1)·p, keys at ⌊position⌋/⌈position⌉, result
-    * (higher−position)·lowerKey + (position−lower)·higherKey with the
-    * same equal-key short-circuits. Nulls are ignored like the builtin;
-    * NaN-bearing columns must use the builtin (histogram bucketing cannot
-    * place NaN) — every oracle-backed caller is NaN-free by construction.
+    * Callers that already aggregated (non-null count, min, max) of the
+    * SAME cast-to-double columns pass them as `boundsIn`: the gate is then
+    * decided exactly from the counts before any pass runs — the driver
+    * path's scan gets the whole budget, the histogram path skips pass 1.
+    *
+    * `driverBytes` bounds the values the driver holds (8 bytes each, twice
+    * that while the partitions' arrays are joined); the default is
+    * [[percentileDriverBytes]] and 0 forces the histogram path.
+    *
+    * BIT-IDENTICAL to the builtin on NaN-free columns, on both paths:
+    * order statistics are exact ranks over the identical double ordering
+    * (-0.0 read as 0.0, as Spark's grouping normalizes it), and
+    * [[interpolate]] replays Percentile.getPercentile. Nulls are ignored
+    * like the builtin; NaN-bearing columns must use the builtin (histogram
+    * bucketing cannot place NaN) — every oracle-backed caller is NaN-free
+    * by construction.
     *
     * Returns per column one Option[Double] per requested prob (None when
     * the column has no non-null values).
@@ -117,8 +146,23 @@ object Summary {
       specs: Seq[(String, Seq[Double])],
       nBuckets: Int = 4096,
       maxResolveRows: Long = 4000000L,
-      boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]] = None
-  ): Map[String, Seq[Option[Double]]] = {
+      boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]] = None,
+      driverBytes: Long = percentileDriverBytes
+  ): Map[String, Seq[Option[Double]]] =
+    exactPercentilesWithPath(
+      df, specs, nBuckets, maxResolveRows, boundsIn, driverBytes)._1
+
+  /** [[exactPercentilesHist]] plus the path it took: "driver", "histogram"
+    * or "builtin" (the `maxResolveRows` fallback).
+    */
+  private[graft] def exactPercentilesWithPath(
+      df: DataFrame,
+      specs: Seq[(String, Seq[Double])],
+      nBuckets: Int,
+      maxResolveRows: Long,
+      boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]],
+      driverBytes: Long
+  ): (Map[String, Seq[Option[Double]]], String) = {
     require(specs.nonEmpty)
     val k = specs.length
     // the passes run straight over the caller's frame: callers with an
@@ -130,43 +174,128 @@ object Summary {
     val narrow = df
       .select(specs.zipWithIndex.map { case ((c, _), i) =>
         col(c).cast("double").as(s"_c$i") }: _*)
-    val vcols = specs.indices.map(i => col(s"_c$i"))
-    // pass 1: per-column bounds — r12: callers that already aggregated
-    // (non-null count, min, max) of the SAME cast-to-double columns pass
-    // them in (describeNumeric's one big aggregate) and this pass is
-    // skipped outright, saving a full scan per call
-    val (ns, loOpts, hiOpts) = boundsIn match {
+    lazy val rows = narrow.queryExecution.toRdd
+    val bounds = boundsIn match {
       case Some(b) =>
         require(b.length == k, "boundsIn must cover every spec column")
-        (b.map(_._1), b.map(_._2), b.map(_._3))
+        val ns = b.map(_._1)
+        if (ns.exists(_ > 0) && ns.sum <= driverBytes / 8)
+          fusedBoundsPass(rows, k, driverBytes)
+        else ColumnBounds(ns.toArray, b.map(_._2.getOrElse(0.0)).toArray,
+          b.map(_._3.getOrElse(0.0)).toArray, None)
       case None =>
-        val bRow = narrow.agg(
-          vcols.flatMap(c => Seq(count(c), min(c), max(c))).head,
-          vcols.flatMap(c => Seq(count(c), min(c), max(c))).tail: _*).head()
-        (specs.indices.map(i => bRow.getLong(i * 3)),
-          specs.indices.map(i =>
-            if (bRow.isNullAt(i * 3 + 1)) None
-            else Some(bRow.getDouble(i * 3 + 1))),
-          specs.indices.map(i =>
-            if (bRow.isNullAt(i * 3 + 2)) None
-            else Some(bRow.getDouble(i * 3 + 2))))
+        fusedBoundsPass(rows, k, driverBytes / math.max(1, rows.getNumPartitions))
     }
-    val los = loOpts.map(_.getOrElse(0.0))
-    val his = hiOpts.map(_.getOrElse(0.0))
-    val widths = specs.indices.map(i =>
-      if (his(i) > los(i)) (his(i) - los(i)) / nBuckets else 1.0)
-    // needed 0-based ranks per column
-    val ranksByCol: Seq[Seq[Long]] = specs.zipWithIndex.map { case ((_, ps), i) =>
-      if (ns(i) == 0) Nil
-      else ps.flatMap { p =>
-        val pos = (ns(i) - 1).toDouble * p
-        Seq(pos.floor.toLong, pos.ceil.toLong)
-      }.distinct.sorted
+    val ns = bounds.n
+    val ranksByCol = specs.zipWithIndex.map { case ((_, ps), i) =>
+      neededRanks(ns(i), ps) }
+    val (key, path): ((Int, Long) => Double, String) = bounds.sorted match {
+      case Some(sorted) => ((ci, rank) => sorted(ci)(rank.toInt), "driver")
+      case None if ranksByCol.forall(_.isEmpty) => ((_, _) => 0.0, "driver")
+      case None =>
+        histogramKeys(narrow, bounds, ranksByCol, nBuckets, maxResolveRows) match {
+          case Some(keys) => ((ci, rank) => keys((ci, rank)), "histogram")
+          case None => return (builtinPercentiles(narrow, specs), "builtin")
+        }
     }
-    if (ranksByCol.forall(_.isEmpty))
-      return specs.map { case (c, ps) => c -> ps.map(_ => None) }.toMap
+    (specs.zipWithIndex.map { case ((c, ps), ci) =>
+      c -> ps.map(p =>
+        if (ns(ci) == 0) None else Some(interpolate(ns(ci), p, key(ci, _))))
+    }.toMap, path)
+  }
+
+  /** Pass 1's result: per column the non-null count, min and max (0.0 for
+    * an empty column) and, when every partition kept them, the sorted
+    * non-null values.
+    */
+  private final case class ColumnBounds(
+      n: Array[Long],
+      lo: Array[Double],
+      hi: Array[Double],
+      sorted: Option[Array[Array[Double]]])
+
+  /** Pass 1 of [[exactPercentilesHist]]: one job, no shuffle. Each
+    * partition keeps its values only while they fit `capBytes`.
+    */
+  private def fusedBoundsPass(
+      rows: RDD[InternalRow], k: Int, capBytes: Long): ColumnBounds = {
+    val parts = rows.mapPartitions { it =>
+      val n = new Array[Long](k)
+      val lo = Array.fill(k)(Double.PositiveInfinity)
+      val hi = Array.fill(k)(Double.NegativeInfinity)
+      var vals = Array.fill(k)(new Array[Double](64))
+      var bytes = 0L
+      while (it.hasNext) {
+        val row = it.next()
+        var i = 0
+        while (i < k) {
+          if (!row.isNullAt(i)) {
+            val v = row.getDouble(i) + 0.0 // -0.0 + 0.0 == +0.0
+            if (v < lo(i)) lo(i) = v
+            if (v > hi(i)) hi(i) = v
+            if (vals != null) {
+              if (bytes + 8 > capBytes) vals = null
+              else {
+                val m = n(i).toInt
+                if (m == vals(i).length)
+                  vals(i) = java.util.Arrays.copyOf(vals(i), m * 2)
+                vals(i)(m) = v
+                bytes += 8
+              }
+            }
+            n(i) += 1
+          }
+          i += 1
+        }
+      }
+      Iterator((n, lo, hi,
+        if (vals == null) null
+        else Array.tabulate(k)(i => java.util.Arrays.copyOf(vals(i), n(i).toInt))))
+    }.collect()
+    val n = Array.tabulate(k)(i => parts.map(_._1(i)).sum)
+    val sorted =
+      if (parts.exists(_._4 == null)) None
+      else Some(Array.tabulate(k) { i =>
+        val all =
+          if (parts.length == 1) parts.head._4(i)
+          else {
+            val a = new Array[Double](n(i).toInt)
+            var off = 0
+            parts.foreach { p =>
+              System.arraycopy(p._4(i), 0, a, off, p._4(i).length)
+              off += p._4(i).length
+            }
+            a
+          }
+        java.util.Arrays.sort(all)
+        all
+      })
+    ColumnBounds(n,
+      Array.tabulate(k)(i =>
+        if (n(i) == 0) 0.0 else parts.map(_._2(i)).reduce((a, b) => math.min(a, b))),
+      Array.tabulate(k)(i =>
+        if (n(i) == 0) 0.0 else parts.map(_._3(i)).reduce((a, b) => math.max(a, b))),
+      sorted)
+  }
+
+  /** Passes 2–3 of [[exactPercentilesHist]]: (column, rank) → value for
+    * every needed rank, or None when the located buckets hold more than
+    * `maxResolveRows` rows.
+    */
+  private def histogramKeys(
+      narrow: DataFrame,
+      bounds: ColumnBounds,
+      ranksByCol: Seq[Seq[Long]],
+      nBuckets: Int,
+      maxResolveRows: Long
+  ): Option[Map[(Int, Long), Double]] = {
+    val k = ranksByCol.length
+    val vcols = (0 until k).map(i => col(s"_c$i"))
+    val widths = (0 until k).map(i =>
+      if (bounds.hi(i) > bounds.lo(i)) (bounds.hi(i) - bounds.lo(i)) / nBuckets
+      else 1.0)
     // pass 2: shared per-column histogram
-    val loLit = typedLit(los)
+    val loLit = typedLit(bounds.lo.toSeq)
     val wLit = typedLit(widths)
     val ex = narrow
       .select(posexplode(array(vcols: _*)).as(Seq("_ci", "_v")))
@@ -186,7 +315,7 @@ object Summary {
     val neededBuckets =
       scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Set[Int]]
     var resolveRows = 0L
-    for (ci <- specs.indices; if ranksByCol(ci).nonEmpty) {
+    for (ci <- 0 until k; if ranksByCol(ci).nonEmpty) {
       val bs = hist.getOrElse(ci, Array.empty[(Int, Long)])
       var cum = 0L
       var ri = 0
@@ -203,65 +332,74 @@ object Summary {
         cum += c
       }
     }
-    val keys: Map[(Int, Long), Double] =
-      if (resolveRows <= maxResolveRows) {
-        // pass 3: exact resolve inside the located buckets
-        val pred = specs.indices
-          .filter(ci => neededBuckets.contains(ci))
-          .map(ci => col("_ci") === ci &&
-            bucketOf.isin(neededBuckets(ci).toSeq: _*))
-          .reduce(_ || _)
-        val vals = ex.filter(pred)
-          .groupBy(col("_ci"), bucketOf.as("_b"), col("_v"))
-          .agg(count(lit(1)).as("_n"))
-          .collect()
-          .groupBy(r => (r.getInt(0), r.getInt(1)))
-          .map { case (key, rows) =>
-            key -> rows.map(r => (r.getDouble(2), r.getLong(3)))
-              .sortBy(_._1)(Ordering.fromLessThan(
-                (a, b) => java.lang.Double.compare(a, b) < 0))
-          }
-        perRank.toMap.map { case ((ci, rank), (b, rib)) =>
-          val vs = vals((ci, b))
-          var rem = rib
-          var vi = 0
-          while (rem >= vs(vi)._2) { rem -= vs(vi)._2; vi += 1 }
-          (ci, rank) -> vs(vi)._1
-        }
-      } else {
-        // distribution defeated the refinement — run the builtin
-        // single-buffer aggregate at the caller's probs instead
-        val aggRow = narrow.agg(
-          specs.indices.map(i =>
-            percentile(vcols(i), array(specs(i)._2.map(lit): _*))).head,
-          specs.indices.map(i =>
-            percentile(vcols(i), array(specs(i)._2.map(lit): _*))).tail: _*)
-          .head()
-        return specs.zipWithIndex.map { case ((c, ps), i) =>
-          c -> (if (aggRow.isNullAt(i)) ps.map(_ => Option.empty[Double])
-                else aggRow.getSeq[Double](i).map(Option(_)))
-        }.toMap
+    if (resolveRows > maxResolveRows) return None
+    // pass 3: exact resolve inside the located buckets
+    val pred = (0 until k)
+      .filter(ci => neededBuckets.contains(ci))
+      .map(ci => col("_ci") === ci &&
+        bucketOf.isin(neededBuckets(ci).toSeq: _*))
+      .reduce(_ || _)
+    val vals = ex.filter(pred)
+      .groupBy(col("_ci"), bucketOf.as("_b"), col("_v"))
+      .agg(count(lit(1)).as("_n"))
+      .collect()
+      .groupBy(r => (r.getInt(0), r.getInt(1)))
+      .map { case (key, rows) =>
+        key -> rows.map(r => (r.getDouble(2), r.getLong(3)))
+          .sortBy(_._1)(Ordering.fromLessThan(
+            (a, b) => java.lang.Double.compare(a, b) < 0))
       }
-    // interpolation — Percentile.getPercentile replayed exactly
-    specs.zipWithIndex.map { case ((c, ps), ci) =>
-      c -> ps.map { p =>
-        if (ns(ci) == 0) None
-        else {
-          val position = (ns(ci) - 1).toDouble * p
-          val lower = position.floor.toLong
-          val higher = position.ceil.toLong
-          val lowerKey = keys((ci, lower))
-          if (higher == lower) Some(lowerKey)
-          else {
-            val higherKey = keys((ci, higher))
-            if (java.lang.Double.valueOf(higherKey)
-                .equals(java.lang.Double.valueOf(lowerKey))) Some(lowerKey)
-            else Some((higher - position) * lowerKey +
-              (position - lower) * higherKey)
-          }
-        }
-      }
+    Some(perRank.toMap.map { case ((ci, rank), (b, rib)) =>
+      val vs = vals((ci, b))
+      var rem = rib
+      var vi = 0
+      while (rem >= vs(vi)._2) { rem -= vs(vi)._2; vi += 1 }
+      (ci, rank) -> vs(vi)._1
+    })
+  }
+
+  /** The builtin single-buffer aggregate at the caller's probs — run when
+    * the distribution defeated the histogram refinement.
+    */
+  private def builtinPercentiles(
+      narrow: DataFrame,
+      specs: Seq[(String, Seq[Double])]
+  ): Map[String, Seq[Option[Double]]] = {
+    val aggs = specs.zipWithIndex.map { case ((_, ps), i) =>
+      percentile(col(s"_c$i"), array(ps.map(lit): _*)) }
+    val aggRow = narrow.agg(aggs.head, aggs.tail: _*).head()
+    specs.zipWithIndex.map { case ((c, ps), i) =>
+      c -> (if (aggRow.isNullAt(i)) ps.map(_ => Option.empty[Double])
+            else aggRow.getSeq[Double](i).map(Option(_)))
     }.toMap
+  }
+
+  /** The 0-based ranks [[interpolate]] reads for probs `ps` over n values. */
+  private def neededRanks(n: Long, ps: Seq[Double]): Seq[Long] =
+    if (n == 0) Nil
+    else ps.flatMap { p =>
+      val pos = (n - 1).toDouble * p
+      Seq(pos.floor.toLong, pos.ceil.toLong)
+    }.distinct.sorted
+
+  /** Percentile.getPercentile replayed exactly: the p-th percentile of n
+    * values whose 0-based order statistics are `key(rank)` — position =
+    * (n−1)·p, keys at ⌊position⌋/⌈position⌉, result
+    * (higher−position)·lowerKey + (position−lower)·higherKey with the same
+    * equal-key short-circuits.
+    */
+  private def interpolate(n: Long, p: Double, key: Long => Double): Double = {
+    val position = (n - 1).toDouble * p
+    val lower = position.floor.toLong
+    val higher = position.ceil.toLong
+    val lowerKey = key(lower)
+    if (higher == lower) lowerKey
+    else {
+      val higherKey = key(higher)
+      if (java.lang.Double.valueOf(higherKey)
+          .equals(java.lang.Double.valueOf(lowerKey))) lowerKey
+      else (higher - position) * lowerKey + (position - lower) * higherKey
+    }
   }
 
   /** Exact PER-GROUP percentiles for several columns at once — the grouped
@@ -324,11 +462,7 @@ object Summary {
     }.toMap
     // needed 0-based ranks per (group, column)
     val ranksOf: Map[(Any, Int), Seq[Long]] = gcs.map { case (key, gc) =>
-      key -> (if (gc.n == 0) Nil
-              else specs(key._2)._2.flatMap { p =>
-                val pos = (gc.n - 1).toDouble * p
-                Seq(pos.floor.toLong, pos.ceil.toLong)
-              }.distinct.sorted)
+      key -> neededRanks(gc.n, specs(key._2)._2)
     }
     def emptyResult: Map[Any, Map[String, Seq[Option[Double]]]] =
       bRows.map(r => r.get(0) -> specs.map { case (c, ps) =>
@@ -426,28 +560,13 @@ object Summary {
           }.toMap
         }.toMap
       }
-    // interpolation — Percentile.getPercentile replayed exactly
     bRows.map { r =>
       val g = r.get(0)
       g -> specs.zipWithIndex.map { case ((c, ps), ci) =>
         val n = gcs((g, ci)).n
-        c -> ps.map { p =>
+        c -> ps.map(p =>
           if (n == 0) None
-          else {
-            val position = (n - 1).toDouble * p
-            val lower = position.floor.toLong
-            val higher = position.ceil.toLong
-            val lowerKey = keys((g, ci, lower))
-            if (higher == lower) Some(lowerKey)
-            else {
-              val higherKey = keys((g, ci, higher))
-              if (java.lang.Double.valueOf(higherKey)
-                  .equals(java.lang.Double.valueOf(lowerKey))) Some(lowerKey)
-              else Some((higher - position) * lowerKey +
-                (position - lower) * higherKey)
-            }
-          }
-        }
+          else Some(interpolate(n, p, rank => keys((g, ci, rank)))))
       }.toMap
     }.toMap
   }
