@@ -5,22 +5,44 @@ in DuckDB over the same testdata tables and compare (row count, sorted-column
 sorted-row values).
 
 Usage: python3 scripts/check_oracle.py [sf] [--skip-verify]
+                                       [--only q99,q117,...] [--timeout S]
   sf defaults to 0.01 (the driver's correctness tier).
+  --only     compare only the queries whose names start with one of the
+             comma-separated prefixes (graft.Verify still dumps every query).
+  --timeout  run each DuckDB oracle for at most S seconds; an oracle that
+             runs out prints TIMEOUT <name>, is not counted as ok, and makes
+             the exit status non-zero.
 """
+import argparse
 import json
 import math
 import subprocess
 import sys
+import threading
 from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") else "0.01"
+ap = argparse.ArgumentParser()
+ap.add_argument("sf", nargs="?", default="0.01")
+ap.add_argument("--skip-verify", action="store_true")
+ap.add_argument("--only", default="",
+                help="comma-separated query-name prefixes, e.g. q99,q117")
+ap.add_argument("--timeout", type=float, default=0,
+                help="seconds per DuckDB oracle (0 = no limit)")
+args = ap.parse_args()
+SF = args.sf
 SFDIR = f"/root/testdata/sf{SF}"
 OUT = Path(f"/tmp/verify_sf{SF}")
+ONLY = tuple(p for p in args.only.split(",") if p)
 
-if "--skip-verify" not in sys.argv:
+
+def selected(name: str) -> bool:
+    return not ONLY or name.startswith(ONLY)
+
+
+if not args.skip_verify:
     r = subprocess.run(
         ["sbt", "--client", f"runMain graft.Verify {SFDIR} {OUT}"],
         capture_output=True, text=True, cwd="/root/repo")
@@ -82,8 +104,20 @@ def values_equal(a, b):
     return str(a) == str(b)
 
 
-ok = fail = 0
-for name in sorted(oracles):
+def run_oracle(sql: str) -> pd.DataFrame:
+    """One oracle, interrupted after --timeout seconds when one is set."""
+    if not args.timeout:
+        return con.execute(sql).df()
+    timer = threading.Timer(args.timeout, con.interrupt)
+    timer.start()
+    try:
+        return con.execute(sql).df()
+    finally:
+        timer.cancel()
+
+
+ok = fail = timeout = 0
+for name in sorted(n for n in oracles if selected(n)):
     pdir = OUT / name
     if not pdir.exists():
         print(f"FAIL {name}: spark result missing")
@@ -92,7 +126,11 @@ for name in sorted(oracles):
     spark_df = canon(con.execute(
         f"SELECT * FROM '{pdir}/*.parquet'").df())
     try:
-        duck_df = canon(con.execute(oracles[name]).df())
+        duck_df = canon(run_oracle(oracles[name]))
+    except duckdb.InterruptException:
+        print(f"TIMEOUT {name}: oracle ran past {args.timeout:g} s, unverified")
+        timeout += 1
+        continue
     except Exception as e:
         print(f"FAIL {name}: oracle SQL error: {e}")
         fail += 1
@@ -133,12 +171,12 @@ for name in sorted(oracles):
 
 # rows-only entries (no oracle): just report row counts
 for pdir in sorted(OUT.iterdir()):
-    if pdir.is_dir() and pdir.name not in oracles:
+    if pdir.is_dir() and pdir.name not in oracles and selected(pdir.name):
         try:
             n = con.execute(f"SELECT count(*) FROM '{pdir}/*.parquet'").fetchone()[0]
             print(f"rows {pdir.name}: {n}")
         except Exception as e:
             print(f"rows {pdir.name}: unreadable ({e})")
 
-print(f"\n{ok} ok, {fail} fail")
-sys.exit(1 if fail else 0)
+print(f"\n{ok} ok, {fail} fail" + (f", {timeout} timeout" if timeout else ""))
+sys.exit(1 if fail or timeout else 0)

@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -556,7 +557,7 @@ object Dedup {
   def clusterIds(
       pairs: DataFrame,
       maxIterations: Int = 25,
-      driverEdgeLimit: Long = 2000000L
+      driverEdgeLimit: Long = DriverGraph.MaxEdges
   ): DataFrame = {
     val edges0 = pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
@@ -587,69 +588,53 @@ object Dedup {
       .filter(col("id_a") =!= col("id_b"))
       .distinct() // bidirectional by construction: edges0 holds both arcs
       .cache()
-    // r11: the contracted graph is TINY by construction on dedup-shaped
-    // inputs (cliques collapse into stars; x77's 10M pairs leave ~10^3
-    // inter-star arcs) — yet the distributed fixpoint below paid 5+ jobs
-    // of planning/scheduling PER ROUND on it (measured 10.3 s over 2054
-    // verified pairs at sf0.1). When the contracted edge list fits the
-    // driver comfortably, run min-label union-find there (the bounded
-    // driver-state pattern: Bradley-Terry cells, IVF codebooks) and
-    // broadcast the component minima back; the distributed
-    // pointer-jumping loop stays for graphs the contraction cannot
-    // shrink (long chains), where it is the right plan.
-    val nContracted = edges.count()
-    // r12 (ADVICE): the driver branch reads ids as LONGS — gate it on an
-    // integral id type. Non-numeric ids would NPE on the cast-null, and
-    // numeric STRINGS would silently diverge (the l1 contraction picks
-    // the lexicographic min while the driver resolved the numeric min).
-    // Non-integral ids take the type-generic distributed loop below.
+    // the contracted graph is TINY by construction on dedup-shaped inputs
+    // (cliques collapse into stars; x77's 10M pairs leave ~10^3 inter-star
+    // arcs), yet the distributed fixpoint below pays 5+ jobs per round on
+    // it. Within the driver gate, min-label union-find runs there and the
+    // component minima broadcast back; the distributed pointer-jumping
+    // loop stays for graphs the contraction cannot shrink (long chains).
+    // The driver reads ids as LONGS, so it is gated on an integral id type:
+    // numeric STRINGS would diverge (the l1 contraction picks the
+    // lexicographic min), and non-integral ids take the type-generic loop.
     val idsIntegral = edges.schema("id_a").dataType match {
-      case org.apache.spark.sql.types.ByteType |
-          org.apache.spark.sql.types.ShortType |
-          org.apache.spark.sql.types.IntegerType |
-          org.apache.spark.sql.types.LongType => true
+      case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    if (idsIntegral && nContracted <= driverEdgeLimit) {
-      val arcs = edges
-        .select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .collect()
-      edges.unpersist(false)
-      edges0.unpersist(false)
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      arcs.foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      // component minimum: roots chosen as the smaller label at every
-      // union, so find(x) IS the component min
-      val spark = pairs.sparkSession
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size)
-      val it = parent.keySet().iterator()
-      while (it.hasNext) {
-        val n = it.next().longValue()
-        rows.add(org.apache.spark.sql.Row(n, find(n)))
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("_l1l",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType)))
-      val labelsDf = broadcast(spark.createDataFrame(rows, schema))
-      return l1
-        .join(labelsDf, col("_l1").cast("long") === col("_l1l"), "left")
-        .select(col("id"),
-          coalesce(col("cluster_id"), col("_l1")).as("cluster_id"))
+    val onDriver =
+      if (!idsIntegral) None
+      else DriverGraph.collect(
+        edges.select(col("id_a").cast("long"), col("id_b").cast("long")),
+        driverEdgeLimit)
+    onDriver match {
+      case Some(g) =>
+        edges.unpersist(false)
+        edges0.unpersist(false)
+        val parent = Array.tabulate(g.n)(identity)
+        def find(x: Int): Int = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x
+          while (parent(c) != r) { val up = parent(c); parent(c) = r; c = up }
+          r
+        }
+        var p = 0
+        while (p < g.m) {
+          val ra = find(g.src(p)); val rb = find(g.dst(p))
+          // the smaller id becomes the root, so find(x) IS the component min
+          if (ra != rb) {
+            if (g.ids(ra) < g.ids(rb)) parent(rb) = ra else parent(ra) = rb
+          }
+          p += 1
+        }
+        val labelsDf = broadcast(DriverGraph.frame(pairs.sparkSession,
+          Seq.tabulate(g.n)(i => Row(g.ids(i), g.ids(find(i)))),
+          "_l1l" -> LongType, "cluster_id" -> LongType))
+        return l1
+          .join(labelsDf, col("_l1").cast("long") === col("_l1l"), "left")
+          .select(col("id"),
+            coalesce(col("cluster_id"), col("_l1")).as("cluster_id"))
+      case None =>
     }
     var labels = edges.select(col("id_a").as("id")).distinct()
       .withColumn("cluster_id", col("id"))

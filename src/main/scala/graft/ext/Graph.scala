@@ -1,18 +1,21 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Iterative graph analytics over edge DataFrames. Complements
-  * [[Dedup.connectedComponents]] (min-label propagation) with rank-style
+  * [[Dedup.clusterIds]] (min-label propagation) with rank-style
   * fixpoints.
   *
   * Scale design: one shuffle per iteration (the contribution aggregate on
   * dst) plus an equi-join of edges against the current ranks — the Pregel
   * cost shape; lineage is truncated per round with localCheckpoint (same
-  * pattern as connectedComponents) so the plan does not grow with the
+  * pattern as clusterIds) so the plan does not grow with the
   * iteration count. Degrees are computed once and reused.
+  *
+  * Every operator with a `driverEdgeLimit` first tries [[DriverGraph]]:
+  * an edge list within the limit runs the same fixpoint on the driver.
   */
 object Graph {
 
@@ -38,7 +41,7 @@ object Graph {
       damping: Double = 0.85,
       assumeDistinct: Boolean = false,
       broadcastRanksBelow: Long = 4000000L,
-      driverEdgeLimit: Long = 2000000L
+      driverEdgeLimit: Long = DriverGraph.MaxEdges
   ): DataFrame = {
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"),
@@ -46,86 +49,42 @@ object Graph {
     // pass assumeDistinct=true when the caller already deduplicated (e.g.
     // mirrored a distinct pair list) — skips a full-edge-list shuffle
     val e = if (assumeDistinct) e0 else e0.distinct().localCheckpoint(true)
-    // r12 (the clusterIds/Bradley-Terry bounded-driver-state pattern): the
-    // whole fixpoint state is |nodes| doubles + |edges| longs. When the
-    // DISTINCT edge list fits the driver comfortably, run the identical
-    // arithmetic there instead of paying ~4 jobs + 1 broadcast build +
-    // 1 checkpoint PER ITERATION on a graph whose rank vector a driver
-    // array holds anyway (q99's 160k-edge graph measured ~4 s of mostly
-    // scheduling at sf0.1). Bit-identity: contributions replay Spark's
-    // double→DECIMAL(28,12) cast (BigDecimal.valueOf → setScale HALF_UP)
-    // as scaled longs — exact because every contribution ≤ 1 and
-    // Σ ≤ driverEdgeLimit·10^12 < 2^63 — and the damping update is the
-    // same fixed IEEE shape; one limit-collect is the gate AND the read
-    // (no separate count job). Above the limit the distributed loop below
-    // is the right plan and runs unchanged.
-    val lim = e.limit(math.min(driverEdgeLimit, Int.MaxValue - 2L).toInt + 1)
-      .collect()
-    if (lim.length <= driverEdgeLimit &&
-        !lim.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-      val spark = edges.sparkSession
-      val m = lim.length
-      val idx = new java.util.HashMap[java.lang.Long, Integer](m * 2)
-      val srcI = new Array[Int](m)
-      val dstI = new Array[Int](m)
-      val nodeIds = new java.util.ArrayList[java.lang.Long]()
-      def id(x: Long): Int = {
-        val got = idx.get(x)
-        if (got != null) got.intValue()
-        else {
-          val i = nodeIds.size(); idx.put(x, i); nodeIds.add(x); i
-        }
-      }
-      var p = 0
-      while (p < m) {
-        val row = lim(p)
-        srcI(p) = id(row.getLong(0)); dstI(p) = id(row.getLong(1)); p += 1
-      }
-      val k = nodeIds.size()
-      val deg = new Array[Long](k)
-      p = 0
-      while (p < m) { deg(srcI(p)) += 1; p += 1 }
-      val n = k.toLong
-      var r = Array.fill(k)(1.0 / n)
-      val base = (1.0 - damping) / n
-      for (_ <- 1 to iterations) {
-        // per-NODE contribution, Spark's Cast(double → DECIMAL(28,12))
-        // replayed: BigDecimal.valueOf(d).setScale(12, HALF_UP), carried
-        // as a scaled long (exact: r/deg ≤ 1)
-        val c = new Array[Long](k)
-        var i = 0
-        while (i < k) {
-          if (deg(i) > 0)
-            c(i) = java.math.BigDecimal.valueOf(r(i) / deg(i))
-              .setScale(12, java.math.RoundingMode.HALF_UP)
-              .unscaledValue().longValueExact()
-          i += 1
-        }
-        val s = new Array[Long](k)
-        p = 0
-        while (p < m) { s(dstI(p)) += c(srcI(p)); p += 1 }
-        val nr = new Array[Double](k)
-        i = 0
-        while (i < k) {
+    // the fixpoint state is |nodes| doubles + |edges| ints: within the
+    // driver gate the same arithmetic runs there instead of ~4 jobs, one
+    // broadcast build and one checkpoint per iteration
+    DriverGraph.collect(e, driverEdgeLimit) match {
+      case Some(g) =>
+        val k = g.n
+        val deg = new Array[Long](k)
+        var p = 0
+        while (p < g.m) { deg(g.src(p)) += 1; p += 1 }
+        val n = k.toLong
+        var r = Array.fill(k)(1.0 / n)
+        val base = (1.0 - damping) / n
+        for (_ <- 1 to iterations) {
+          // per-NODE contribution, Spark's Cast(double → DECIMAL(28,12))
+          // replayed: BigDecimal.valueOf(d).setScale(12, HALF_UP), carried
+          // as a scaled long (exact: r/deg ≤ 1 and the ranks sum to ≤ 1)
+          val c = new Array[Long](k)
+          var i = 0
+          while (i < k) {
+            if (deg(i) > 0)
+              c(i) = java.math.BigDecimal.valueOf(r(i) / deg(i))
+                .setScale(12, java.math.RoundingMode.HALF_UP)
+                .unscaledValue().longValueExact()
+            i += 1
+          }
+          val s = new Array[Long](k)
+          p = 0
+          while (p < g.m) { s(g.dst(p)) += c(g.src(p)); p += 1 }
           // Decimal(38,12).toDouble == BigDecimal(unscaled, 12).doubleValue
-          nr(i) = base + damping *
-            java.math.BigDecimal.valueOf(s(i), 12).doubleValue()
-          i += 1
+          r = Array.tabulate(k)(i =>
+            base + damping * java.math.BigDecimal.valueOf(s(i), 12).doubleValue())
         }
-        r = nr
-      }
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](k)
-      var i = 0
-      while (i < k) {
-        rows.add(org.apache.spark.sql.Row(nodeIds.get(i).longValue(), r(i)))
-        i += 1
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("r",
-          org.apache.spark.sql.types.DoubleType, nullable = false)))
-      return spark.createDataFrame(rows, schema)
+        return DriverGraph.frame(edges.sparkSession,
+          Seq.tabulate(k)(i => Row(g.ids(i), r(i))),
+          "node" -> LongType, "r" -> DoubleType)
+      case None =>
     }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
@@ -183,7 +142,7 @@ object Graph {
     * ties broken to the LOWEST label (the deterministic variant of
     * Raghavan et al. 2007 — synchronous sweeps + total tie order make the
     * result engine-reproducible, unlike the randomized-order original).
-    * Complements [[Dedup.connectedComponents]] (which merges everything
+    * Complements [[Dedup.clusterIds]] (which merges everything
     * reachable): LPA splits dense regions joined by thin bridges.
     *
     * Returns (node, community) for every node; isolated endpoints cannot
@@ -204,7 +163,7 @@ object Graph {
       srcCol: String,
       dstCol: String,
       rounds: Int = 3,
-      driverEdgeLimit: Long = 2000000L
+      driverEdgeLimit: Long = DriverGraph.MaxEdges
   ): DataFrame = {
     val s = col(srcCol).cast("long")
     val d = col(dstCol).cast("long")
@@ -212,59 +171,22 @@ object Graph {
       .select(least(s, d).as("a"), greatest(s, d).as("b"))
       .filter(col("a") < col("b"))
       .distinct()
-    // r12 (the clusterIds/pageRank/kCore bounded-driver-state pattern):
-    // the sweep state is one label per node. When the canonical edge list
-    // fits the driver, the synchronous most-frequent-neighbor sweep runs
-    // there over CSR arrays — the semantics are purely deterministic
-    // integer argmax (count desc, label asc), so the replication is
-    // trivial — instead of a join + two aggregations + an eager
-    // checkpoint PER ROUND (q224 measured 31 jobs / 11.7 s cold at
-    // sf0.1). Past the limit the distributed loop below is the right
-    // plan and runs unchanged.
-    locally {
-      val lim = canon
-        .limit(math.min(driverEdgeLimit, Int.MaxValue - 2L).toInt + 1)
-        .collect()
-      if (lim.length <= driverEdgeLimit) {
-        val m = lim.length
-        val idx = new java.util.HashMap[java.lang.Long, Integer](m * 2)
-        val nodeIds = new java.util.ArrayList[java.lang.Long]()
-        def id(x: Long): Int = {
-          val got = idx.get(x)
-          if (got != null) got.intValue()
-          else { val i = nodeIds.size(); idx.put(x, i); nodeIds.add(x); i }
-        }
-        val ea = new Array[Int](m); val eb = new Array[Int](m)
-        var p = 0
-        while (p < m) {
-          ea(p) = id(lim(p).getLong(0)); eb(p) = id(lim(p).getLong(1)); p += 1
-        }
-        val n = nodeIds.size()
-        val deg = new Array[Int](n)
-        p = 0
-        while (p < m) { deg(ea(p)) += 1; deg(eb(p)) += 1; p += 1 }
-        val start = new Array[Int](n + 1)
-        var i = 0
-        while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
-        val fill = java.util.Arrays.copyOf(start, n)
-        val adjA = new Array[Int](2 * m)
-        p = 0
-        while (p < m) {
-          adjA(fill(ea(p))) = eb(p); fill(ea(p)) += 1
-          adjA(fill(eb(p))) = ea(p); fill(eb(p)) += 1
-          p += 1
-        }
-        var lab = new Array[Long](n)
-        i = 0
-        while (i < n) { lab(i) = nodeIds.get(i).longValue(); i += 1 }
+    // the sweep state is one label per node: within the driver gate the
+    // synchronous sweep runs there over CSR arrays instead of a join, two
+    // aggregations and an eager checkpoint per round
+    DriverGraph.collect(canon, driverEdgeLimit) match {
+      case Some(g) =>
+        val n = g.n
+        val (start, adj) = g.undirected
+        var lab = g.ids
         val scratch = new Array[Long](n) // neighbor labels, reused
         for (_ <- 1 to rounds) {
           val next = new Array[Long](n)
-          i = 0
+          var i = 0
           while (i < n) {
             val lo = start(i); val hi = start(i + 1)
             var q = lo
-            while (q < hi) { scratch(q - lo) = lab(adjA(q)); q += 1 }
+            while (q < hi) { scratch(q - lo) = lab(adj(q)); q += 1 }
             java.util.Arrays.sort(scratch, 0, hi - lo)
             // most frequent, ties to LOWEST label: ascending scan keeps
             // the first label reaching the max run length
@@ -284,20 +206,10 @@ object Graph {
           }
           lab = next
         }
-        val spark = edges.sparkSession
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-        i = 0
-        while (i < n) {
-          rows.add(org.apache.spark.sql.Row(nodeIds.get(i).longValue(), lab(i)))
-          i += 1
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("community",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        return spark.createDataFrame(rows, schema)
-      }
+        return DriverGraph.frame(edges.sparkSession,
+          Seq.tabulate(n)(i => Row(g.ids(i), lab(i))),
+          "node" -> LongType, "community" -> LongType)
+      case None =>
     }
     val adj = canon
       .select(col("a").as("node"), col("b").as("nbr"))
@@ -324,92 +236,138 @@ object Graph {
     labels
   }
 
-  /** Exact triangle census over an undirected edge list: node/edge counts,
-    * wedge (open-path) count, triangle count, and the global clustering
-    * coefficient 3·triangles / wedges.
+  /** Exact triangle census over an undirected edge list: node, edge,
+    * wedge (open-path) and triangle counts, and the transitivity (global
+    * clustering coefficient) 3·triangles / wedges — exact integer counts
+    * until the one division; null when there are no wedges. Self-loops,
+    * null endpoints, duplicates and reversed edges are dropped by
+    * canonicalizing to a < b.
     *
     * Algorithm: degree-ordered orientation (the standard exact method —
     * cf. Suri & Vassilvitskii, "Counting Triangles and the Curse of the
     * Last Reducer", WWW'11). Each undirected edge is directed from its
     * lower-(degree, id) endpoint to the higher; every triangle then has
     * exactly ONE node with two out-edges, so triangles = wedges formed by
-    * out-edge pairs that close via the oriented edge between their
-    * endpoints — counted once, no /3 correction, no duplicate explosion.
+    * out-edge pairs that close via the edge between their endpoints —
+    * counted once, no /3 correction, no duplicate explosion.
     *
     * Scale design: orientation bounds out-degrees by O(√m), so the wedge
     * fan-out is O(m^1.5) — the best known for exact counting — instead of
     * the Σdeg² a naive neighbor self-join pays (a single celebrity node
     * with 1M neighbors would otherwise emit 10^12 wedges from one key).
-    * All joins are equi-joins (node keys / (v,w) pairs); the degree table
-    * is one row per node and broadcasts when small. Edges are canonicalized
-    * (a<b) + distinct'd once and reused via localCheckpoint.
+    * Wedges W = Σ C(deg,2) come from the degree table (no join); the
+    * triangle probe is two equi-joins shuffling (long, long) pairs only.
     */
-  def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
-      driverEdgeLimit: Long = 2000000L): DataFrame = {
+  def triangleCensus(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      driverEdgeLimit: Long = DriverGraph.MaxEdges
+  ): DataFrame = {
     val s = col(srcCol).cast("long")
     val d = col(dstCol).cast("long")
-    val e0 = edges
+    val und0 = edges
       .select(least(s, d).as("a"), greatest(s, d).as("b"))
-      .filter(col("a") < col("b")) // drops self-loops and null endpoints
+      .filter(col("a") < col("b"))
       .distinct()
-    // r12: bounded-driver fast path (the q117 graph is 43k edges; the
-    // distributed orientation machinery paid ~20 jobs of scheduling on it)
-    driverTriangleCounts(e0, driverEdgeLimit) match {
-      case Some((n, m, w2, t)) =>
-        val w = w2 / 2
-        val spark = edges.sparkSession
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("n_nodes",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_edges",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_wedges",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_triangles",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("global_clustering",
-            org.apache.spark.sql.types.DoubleType)))
-        return spark.createDataFrame(
-          java.util.Collections.singletonList(org.apache.spark.sql.Row(
-            n, m, w, t, round6(3.0 * t.toDouble / w.toDouble))), schema)
+    DriverGraph.collect(und0, driverEdgeLimit) match {
+      case Some(g) =>
+        val (w, t) = wedgesAndTriangles(g)
+        // Spark's round(x, 6): HALF_UP on the BigDecimal.valueOf rendering
+        val ratio: java.lang.Double =
+          if (w == 0) null
+          else java.math.BigDecimal.valueOf(3.0 * t.toDouble / w.toDouble)
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        return DriverGraph.frame(edges.sparkSession,
+          Seq(Row(g.n.toLong, g.m.toLong, w, t, ratio)),
+          "n_nodes" -> LongType, "n_edges" -> LongType,
+          "n_wedges" -> LongType, "n_triangles" -> LongType,
+          "transitivity" -> DoubleType)
       case None =>
     }
-    val e = e0.localCheckpoint(true)
-    val deg = e.select(col("a").as("node"))
-      .unionByName(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).cast("long").as("deg"))
+    val und = und0.localCheckpoint(true)
+    val deg = und.select(col("a").as("node"))
+      .unionByName(und.select(col("b").as("node")))
+      .groupBy("node")
+      .agg(count(lit(1)).cast("long").as("deg"))
       .localCheckpoint(true)
-    // total-order rank (deg, node); orient each edge low-rank → high-rank
-    val withRanks = e
-      .join(deg.select(col("node").as("a"), col("deg").as("_da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("_db")), "b")
-    val aFirst = struct(col("_da"), col("a")) < struct(col("_db"), col("b"))
-    val oriented = withRanks
+    // orient by (deg, node): u -> v iff (deg_u, u) < (deg_v, v)
+    val withDeg = und
+      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+    val aFirst = col("da") < col("db") ||
+      (col("da") === col("db") && col("a") < col("b"))
+    val oriented = withDeg
       .select(
         when(aFirst, col("a")).otherwise(col("b")).as("u"),
-        when(aFirst, struct(col("_db").as("dg"), col("b").as("node")))
-          .otherwise(struct(col("_da").as("dg"), col("a").as("node")))
-          .as("rv"))
-      .select(col("u"), col("rv"), col("rv").getField("node").as("v"))
+        when(aFirst, col("b")).otherwise(col("a")).as("v"))
       .localCheckpoint(true)
-    // wedges: ordered out-edge pairs from one center; close on the (v,w) edge
-    val o1 = oriented.select(col("u"), col("rv").as("r1"), col("v").as("w1"))
-    val o2 = oriented.select(col("u"), col("rv").as("r2"), col("v").as("w2"))
-    val wedges = o1.join(o2, Seq("u")).filter(col("r1") < col("r2"))
-      .select(col("w1"), col("w2"))
-    val triangles = wedges
-      .join(oriented.select(col("u").as("w1"), col("v").as("w2")),
-        Seq("w1", "w2"), "left_semi")
-    val nTri = triangles.agg(count(lit(1)).cast("long").as("n_triangles"))
-    val nE = e.agg(count(lit(1)).cast("long").as("n_edges"))
-    val degAgg = deg.agg(
-      count(lit(1)).cast("long").as("n_nodes"),
-      sum(expr("deg * (deg - 1) DIV 2")).cast("long").as("n_wedges"))
-    degAgg.crossJoin(nE).crossJoin(nTri)
-      .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-        col("n_triangles"),
-        round(lit(3L).cast("double") * col("n_triangles") / col("n_wedges"), 6)
-          .as("global_clustering"))
+    val e1 = oriented.select(col("u").as("x"), col("v").as("y"))
+    val e2 = oriented.select(col("u").as("x"), col("v").as("z"))
+    val wedges = e1.join(e2, "x").filter(col("y") < col("z"))
+    val tri = wedges
+      .join(
+        oriented.select(
+          least(col("u"), col("v")).as("y"),
+          greatest(col("u"), col("v")).as("z")),
+        Seq("y", "z"))
+      .agg(count(lit(1)).cast("long").as("t"))
+    // coalesce: an empty graph has zero counts, not null sums
+    val stats = deg
+      .agg(
+        count(lit(1)).cast("long").as("n_nodes"),
+        coalesce(sum(col("deg")), lit(0L)).as("degsum"),
+        coalesce(sum(col("deg") * (col("deg") - 1)), lit(0L)).as("wedges2"))
+      // integer div keeps the counts exact (Spark's `/` on longs is double)
+      .select(
+        col("n_nodes"),
+        expr("degsum div 2").as("n_edges"),
+        expr("wedges2 div 2").as("n_wedges"))
+    stats
+      .crossJoin(broadcast(tri))
+      .select(
+        col("n_nodes"),
+        col("n_edges"),
+        col("n_wedges"),
+        col("t").as("n_triangles"),
+        round(lit(3.0) * col("t").cast("double") /
+          col("n_wedges").cast("double"), 6).as("transitivity"))
+  }
+
+  /** Wedges Σ C(deg,2) and exact triangles of a canonical (a < b,
+    * distinct) driver edge list. Triangles: the forward algorithm over the
+    * same (deg, id) orientation — mark the out-neighbours of u, then every
+    * marked out-neighbour of an out-neighbour closes one triangle, counted
+    * once at its lowest-ranked node.
+    */
+  private def wedgesAndTriangles(g: DriverGraph): (Long, Long) = {
+    val n = g.n
+    val deg = new Array[Int](n)
+    var p = 0
+    while (p < g.m) { deg(g.src(p)) += 1; deg(g.dst(p)) += 1; p += 1 }
+    def rankLt(x: Int, y: Int): Boolean =
+      deg(x) < deg(y) || (deg(x) == deg(y) && g.ids(x) < g.ids(y))
+    val lo = Array.tabulate(g.m)(p =>
+      if (rankLt(g.src(p), g.dst(p))) g.src(p) else g.dst(p))
+    val hi = Array.tabulate(g.m)(p =>
+      if (lo(p) == g.src(p)) g.dst(p) else g.src(p))
+    val (start, adj) = DriverGraph.csr(n, lo, hi)
+    val mark = Array.fill(n)(-1)
+    var tri = 0L
+    var u = 0
+    while (u < n) {
+      var q = start(u)
+      while (q < start(u + 1)) { mark(adj(q)) = u; q += 1 }
+      q = start(u)
+      while (q < start(u + 1)) {
+        val v = adj(q)
+        var r = start(v)
+        while (r < start(v + 1)) { if (mark(adj(r)) == u) tri += 1; r += 1 }
+        q += 1
+      }
+      u += 1
+    }
+    (deg.map(x => x.toLong * (x - 1) / 2).sum, tri)
   }
 
   /** Degree assortativity: the Pearson correlation of endpoint degrees
@@ -476,7 +434,7 @@ object Graph {
       dstCol: String,
       k: Int,
       maxRounds: Int = 12,
-      driverEdgeLimit: Long = 2000000L
+      driverEdgeLimit: Long = DriverGraph.MaxEdges
   ): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
     val s = col(srcCol).cast("long")
@@ -486,53 +444,18 @@ object Graph {
       .filter(col("a") < col("b"))
       .distinct()
       .localCheckpoint(true)
-    // r12 (the clusterIds/pageRank bounded-driver-state pattern): peeling
-    // is CONFLUENT — removal order cannot change the maximal k-core or
-    // its induced degrees — so when the canonical edge list fits the
-    // driver, a queue-based peel there replaces ~4 jobs (degree agg +
-    // count + two semi-joins + checkpoint) PER ROUND of the distributed
-    // fixpoint (q135 measured 54 jobs / 11.7 s cold at sf0.1 on a graph
-    // whose edges fit in ~3 MB). The distributed loop stays for graphs
-    // past the limit, where per-round shuffles are the right plan.
-    locally {
-      val lim = e.limit(math.min(driverEdgeLimit, Int.MaxValue - 2L).toInt + 1)
-        .collect()
-      if (lim.length <= driverEdgeLimit) {
-        val m = lim.length
-        val idx = new java.util.HashMap[java.lang.Long, Integer](m * 2)
-        val nodeIds = new java.util.ArrayList[java.lang.Long]()
-        def id(x: Long): Int = {
-          val got = idx.get(x)
-          if (got != null) got.intValue()
-          else { val i = nodeIds.size(); idx.put(x, i); nodeIds.add(x); i }
-        }
-        val ea = new Array[Int](m); val eb = new Array[Int](m)
-        var p = 0
-        while (p < m) {
-          ea(p) = id(lim(p).getLong(0)); eb(p) = id(lim(p).getLong(1)); p += 1
-        }
-        val n = nodeIds.size()
-        // CSR adjacency over both endpoints
-        val deg = new Array[Int](n)
-        p = 0
-        while (p < m) { deg(ea(p)) += 1; deg(eb(p)) += 1; p += 1 }
-        val start = new Array[Int](n + 1)
-        var i = 0
-        while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
-        val fill = java.util.Arrays.copyOf(start, n)
-        val adj = new Array[Int](2 * m)
-        p = 0
-        while (p < m) {
-          adj(fill(ea(p))) = eb(p); fill(ea(p)) += 1
-          adj(fill(eb(p))) = ea(p); fill(eb(p)) += 1
-          p += 1
-        }
-        // queue-based peel: remove any node with degree < k, cascade
-        val alive = new Array[Boolean](n)
-        java.util.Arrays.fill(alive, true)
-        val cur = java.util.Arrays.copyOf(deg, n)
+    // peeling is CONFLUENT (removal order cannot change the maximal k-core
+    // or its induced degrees), so within the driver gate a queue-based
+    // peel there replaces ~4 jobs per round of the distributed fixpoint
+    DriverGraph.collect(e, driverEdgeLimit) match {
+      case Some(g) =>
+        val n = g.n
+        val (start, adj) = g.undirected
+        val alive = Array.fill(n)(true)
+        val cur = Array.tabulate(n)(i => start(i + 1) - start(i))
+        // remove any node with degree < k, cascade
         val queue = new java.util.ArrayDeque[Integer]()
-        i = 0
+        var i = 0
         while (i < n) { if (cur(i) < k) { queue.add(i); alive(i) = false }; i += 1 }
         while (!queue.isEmpty) {
           val v = queue.poll().intValue()
@@ -546,22 +469,10 @@ object Graph {
             q += 1
           }
         }
-        val spark = edges.sparkSession
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        i = 0
-        while (i < n) {
-          if (alive(i))
-            rows.add(org.apache.spark.sql.Row(
-              nodeIds.get(i).longValue(), cur(i).toLong))
-          i += 1
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("core_degree",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        return spark.createDataFrame(rows, schema)
-      }
+        return DriverGraph.frame(edges.sparkSession,
+          (0 until n).filter(alive(_)).map(i => Row(g.ids(i), cur(i).toLong)),
+          "node" -> LongType, "core_degree" -> LongType)
+      case None =>
     }
     var prev = -1L
     var rounds = 0
@@ -585,203 +496,6 @@ object Graph {
         .localCheckpoint(true)
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** r12 shared driver fast path for the two triangle ops: collect the
-    * canonical distinct edge list under `driverEdgeLimit` (one
-    * limit-collect is the gate and the read) and count
-    * nodes/edges/Σdeg(deg−1)/triangles over CSR arrays — exact integer
-    * counts, so the result is identical to the distributed
-    * orientation-join form by definition (both count each triangle once).
-    * Returns None past the gate or on an empty graph (callers keep the
-    * distributed plan, which is the right one at scale).
-    */
-  private def driverTriangleCounts(
-      und0: DataFrame,
-      driverEdgeLimit: Long
-  ): Option[(Long, Long, Long, Long)] = {
-    val lim = und0
-      .limit(math.min(driverEdgeLimit, Int.MaxValue - 2L).toInt + 1)
-      .collect()
-    if (lim.length > driverEdgeLimit || lim.isEmpty) return None
-    val m = lim.length
-    val idx = new java.util.HashMap[java.lang.Long, Integer](m * 2)
-    val nodeIds = new java.util.ArrayList[java.lang.Long]()
-    def id(x: Long): Int = {
-      val got = idx.get(x)
-      if (got != null) got.intValue()
-      else { val i = nodeIds.size(); idx.put(x, i); nodeIds.add(x); i }
-    }
-    val ea = new Array[Int](m); val eb = new Array[Int](m)
-    var p = 0
-    while (p < m) {
-      ea(p) = id(lim(p).getLong(0)); eb(p) = id(lim(p).getLong(1)); p += 1
-    }
-    val n = nodeIds.size()
-    val deg = new Array[Int](n)
-    p = 0
-    while (p < m) { deg(ea(p)) += 1; deg(eb(p)) += 1; p += 1 }
-    var wedges2 = 0L
-    var i = 0
-    while (i < n) { wedges2 += deg(i).toLong * (deg(i) - 1); i += 1 }
-    // degree-ordered orientation: u -> v iff (deg_u, id_u) < (deg_v, id_v)
-    def rankLt(x: Int, y: Int): Boolean =
-      deg(x) < deg(y) || (deg(x) == deg(y) &&
-        nodeIds.get(x).longValue() < nodeIds.get(y).longValue())
-    val outDeg = new Array[Int](n)
-    p = 0
-    while (p < m) {
-      if (rankLt(ea(p), eb(p))) outDeg(ea(p)) += 1 else outDeg(eb(p)) += 1
-      p += 1
-    }
-    val start = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { start(i + 1) = start(i) + outDeg(i); i += 1 }
-    val fill = java.util.Arrays.copyOf(start, n)
-    val adj = new Array[Int](m)
-    // canonical (a_idx<<32 | b_idx) membership keys, a < b by NODE VALUE
-    // (the collected rows already satisfy a < b)
-    val keys = new Array[Long](m)
-    p = 0
-    while (p < m) {
-      val (u, v) = if (rankLt(ea(p), eb(p))) (ea(p), eb(p)) else (eb(p), ea(p))
-      adj(fill(u)) = v; fill(u) += 1
-      keys(p) = (ea(p).toLong << 32) | eb(p).toLong
-      p += 1
-    }
-    java.util.Arrays.sort(keys)
-    def isEdge(x: Int, y: Int): Boolean = {
-      // canonicalize by node VALUE, matching the collected a < b keys
-      val (a, b) =
-        if (nodeIds.get(x).longValue() < nodeIds.get(y).longValue()) (x, y)
-        else (y, x)
-      java.util.Arrays.binarySearch(keys, (a.toLong << 32) | b.toLong) >= 0
-    }
-    var tri = 0L
-    var u = 0
-    while (u < n) {
-      var a = start(u)
-      while (a < start(u + 1)) {
-        var b = a + 1
-        while (b < start(u + 1)) {
-          if (isEdge(adj(a), adj(b))) tri += 1
-          b += 1
-        }
-        a += 1
-      }
-      u += 1
-    }
-    Some((n.toLong, m.toLong, wedges2, tri))
-  }
-
-  /** Spark's round(x, 6) replayed for the driver fast paths: HALF_UP on
-    * the BigDecimal.valueOf rendering, NaN/Infinity passed through (the
-    * RoundBase guard).
-    */
-  private def round6(v: Double): Double =
-    if (v.isNaN || v.isInfinite) v
-    else java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Global triangle census + clustering coefficient of an undirected
-    * graph: node/edge/wedge/triangle counts and the transitivity ratio
-    * 3·T / W (rational — exact integer counts until one division).
-    *
-    * Scale design — degree orientation: every undirected edge is directed
-    * from its (degree, id)-smaller endpoint to the larger, so each
-    * triangle is enumerated exactly once (no /3 dedup pass) and the
-    * wedge-join fan-out per node is bounded by its OUT-degree, which the
-    * orientation caps at O(√m) on any graph — the standard defense
-    * against hub nodes that makes the naive a<b ordering quadratic.
-    * Wedges W = Σ C(deg,2) come from the degree table (no join); the
-    * triangle probe is two equi-joins shuffling (long, long) pairs only.
-    */
-  def triangleCensus(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      driverEdgeLimit: Long = 2000000L
-  ): DataFrame = {
-    val s = col(srcCol).cast("long")
-    val dd = col(dstCol).cast("long")
-    val und0 = edges
-      .select(least(s, dd).as("a"), greatest(s, dd).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-    // r12: bounded-driver fast path (q162's graph is 43k edges; the
-    // distributed orientation machinery paid 23 jobs of scheduling on it)
-    driverTriangleCounts(und0, driverEdgeLimit) match {
-      case Some((n, m, w2, t)) =>
-        val w = w2 / 2
-        val spark = edges.sparkSession
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("n_nodes",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_edges",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_wedges",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_triangles",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("transitivity",
-            org.apache.spark.sql.types.DoubleType)))
-        return spark.createDataFrame(
-          java.util.Collections.singletonList(org.apache.spark.sql.Row(
-            n, m, w, t, round6(3.0 * t.toDouble / w.toDouble))), schema)
-      case None =>
-    }
-    val und = und0.localCheckpoint(true)
-    val deg = und.select(col("a").as("node"))
-      .unionByName(und.select(col("b").as("node")))
-      .groupBy("node")
-      .agg(count(lit(1)).cast("long").as("deg"))
-      .localCheckpoint(true)
-    // orient by (deg, node): u -> v iff (deg_u, u) < (deg_v, v)
-    val withDeg = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-    val oriented = withDeg
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("u"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("v")
-      )
-      .localCheckpoint(true)
-    val e1 = oriented.select(col("u").as("x"), col("v").as("y"))
-    val e2 = oriented.select(col("u").as("x"), col("v").as("z"))
-    val wedges = e1.join(e2, "x").filter(col("y") < col("z"))
-    val tri = wedges
-      .join(
-        oriented.select(
-          least(col("u"), col("v")).as("y"),
-          greatest(col("u"), col("v")).as("z")),
-        Seq("y", "z"))
-      .agg(count(lit(1)).cast("long").as("t"))
-    val stats = deg
-      .agg(
-        count(lit(1)).cast("long").as("n_nodes"),
-        sum(col("deg")).cast("long").as("degsum"),
-        sum(col("deg") * (col("deg") - 1)).cast("long").as("wedges2")
-      )
-      // integer div keeps the counts exact (Spark's `/` on longs is double)
-      .select(
-        col("n_nodes"),
-        expr("degsum div 2").as("n_edges"),
-        expr("wedges2 div 2").as("n_wedges")
-      )
-    stats
-      .crossJoin(broadcast(tri))
-      .select(
-        col("n_nodes"),
-        col("n_edges"),
-        col("n_wedges"),
-        col("t").as("n_triangles"),
-        round(lit(3.0) * col("t").cast("double") /
-          col("n_wedges").cast("double"), 6).as("transitivity")
-      )
   }
 
   /** Common-neighbor link prediction: rank the NON-edges of an undirected
@@ -811,137 +525,17 @@ object Graph {
       topK: Int,
       maxDegree: Long = 0L,
       assumeDistinct: Boolean = false,
-      driverEdgeLimit: Long = 2000000L
+      driverEdgeLimit: Long = DriverGraph.MaxEdges
   ): DataFrame = {
     val e0 = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
     // a repeated (a,b) input edge would double-count every wedge through
     // it — dedup unless the caller already did (pageRank's flag pattern)
     val e = if (assumeDistinct) e0 else e0.distinct().localCheckpoint(true)
-    // r12: bounded-driver fast path (the q228 graph is 43k edges / 358k
-    // wedges; the distributed wedge machinery paid 18 jobs of scheduling
-    // on it). Gates: ≤2M collected edges, no null endpoints, and the
-    // wedge budget Σ C(deg,2) ≤ 50M computed from the collected degrees —
-    // past any of them the map-side-combining distributed plan below is
-    // the right one and runs unchanged.
-    locally {
-      val dLimit = driverEdgeLimit
-      val lim = e.limit(math.min(dLimit, Int.MaxValue - 2L).toInt + 1)
-        .collect()
-      if (dLimit > 0 && lim.length <= dLimit &&
-          !lim.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val m = lim.length
-        val idx = new java.util.HashMap[java.lang.Long, Integer](m * 2)
-        val nodeIds = new java.util.ArrayList[java.lang.Long]()
-        def id(x: Long): Int = {
-          val got = idx.get(x)
-          if (got != null) got.intValue()
-          else { val i = nodeIds.size(); idx.put(x, i); nodeIds.add(x); i }
-        }
-        val ea = new Array[Int](m); val eb = new Array[Int](m)
-        var p = 0
-        while (p < m) {
-          ea(p) = id(lim(p).getLong(0)); eb(p) = id(lim(p).getLong(1)); p += 1
-        }
-        val n = nodeIds.size()
-        val deg = new Array[Long](n)
-        p = 0
-        while (p < m) { deg(ea(p)) += 1; deg(eb(p)) += 1; p += 1 }
-        // wedge budget over the CENTERS the distributed form would expand
-        var budget = 0L
-        var i = 0
-        while (i < n) {
-          if (maxDegree <= 0 || deg(i) <= maxDegree)
-            budget += deg(i) * (deg(i) - 1) / 2
-          i += 1
-        }
-        if (budget <= 16000000L) {
-          val vals = new Array[Long](n)
-          i = 0
-          while (i < n) { vals(i) = nodeIds.get(i).longValue(); i += 1 }
-          val start = new Array[Int](n + 1)
-          i = 0
-          while (i < n) { start(i + 1) = start(i) + deg(i).toInt; i += 1 }
-          val fill = java.util.Arrays.copyOf(start, n)
-          val adjA = new Array[Int](2 * m)
-          p = 0
-          while (p < m) {
-            adjA(fill(ea(p))) = eb(p); fill(ea(p)) += 1
-            adjA(fill(eb(p))) = ea(p); fill(eb(p)) += 1
-            p += 1
-          }
-          // existing-edge membership on EXACT collected (a, b) tuples —
-          // the anti-join's semantics
-          val ekeys = new Array[Long](m)
-          p = 0
-          while (p < m) {
-            ekeys(p) = (ea(p).toLong << 32) | eb(p).toLong; p += 1
-          }
-          java.util.Arrays.sort(ekeys)
-          // wedge keys into one primitive array, sort, run-length count —
-          // the boxed-HashMap form measured ~2 s cold on 358k wedges
-          val wedges = new Array[Long](budget.toInt)
-          var wp = 0
-          var c = 0
-          while (c < n) {
-            if (maxDegree <= 0 || deg(c) <= maxDegree) {
-              var a = start(c)
-              while (a < start(c + 1)) {
-                var b = a + 1
-                while (b < start(c + 1)) {
-                  val x = adjA(a); val y = adjA(b)
-                  val key =
-                    if (vals(x) < vals(y)) (x.toLong << 32) | y.toLong
-                    else (y.toLong << 32) | x.toLong
-                  wedges(wp) = key; wp += 1
-                  b += 1
-                }
-                a += 1
-              }
-            }
-            c += 1
-          }
-          java.util.Arrays.sort(wedges, 0, wp)
-          // rank by (cn desc, a asc, b asc), take k — run-length counting
-          // over the sorted keys, existing edges dropped
-          val cand = new java.util.ArrayList[(Long, Long, Long)]()
-          var q = 0
-          while (q < wp) {
-            val key = wedges(q)
-            var cnt = 0L
-            while (q < wp && wedges(q) == key) { cnt += 1; q += 1 }
-            if (java.util.Arrays.binarySearch(ekeys, key) < 0)
-              cand.add((vals((key >>> 32).toInt),
-                vals((key & 0xffffffffL).toInt), cnt))
-            ()
-          }
-          import scala.jdk.CollectionConverters._
-          val top = cand.asScala
-            .sortBy { case (a, b, c0) => (-c0, a, b) }
-            .take(topK)
-          val spark = edges.sparkSession
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("a",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("b",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("cn",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("deg_a",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("deg_b",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("jaccard",
-              org.apache.spark.sql.types.DoubleType)))
-          val rows = top.map { case (a, b, c0) =>
-            val da = deg(idx.get(a).intValue())
-            val db = deg(idx.get(b).intValue())
-            org.apache.spark.sql.Row(a, b, c0, da, db,
-              c0.toDouble / (da + db - c0).toDouble)
-          }
-          return spark.createDataFrame(rows.asJava, schema)
-        }
-      }
+    DriverGraph.collect(e, driverEdgeLimit)
+      .flatMap(commonNeighborsOnDriver(edges.sparkSession, _, topK, maxDegree)) match {
+      case Some(df) => return df
+      case None =>
     }
     val adj = e.select(col("a").as("ctr"), col("b").as("nbr"))
       .union(e.select(col("b").as("ctr"), col("a").as("nbr")))
@@ -971,5 +565,70 @@ object Graph {
           (col("deg_a") + col("deg_b") - col("cn")).cast("double"))
           .as("jaccard"))
       .orderBy(desc("cn"), asc("a"), asc("b"))
+  }
+
+  /** commonNeighborTopK on a driver graph, or None when the wedge budget
+    * Σ C(deg,2) over the expanded centers exceeds 16M — past it the
+    * map-side-combining distributed plan is the right one.
+    */
+  private def commonNeighborsOnDriver(spark: SparkSession, g: DriverGraph,
+      topK: Int, maxDegree: Long): Option[DataFrame] = {
+    val n = g.n
+    val (start, adj) = g.undirected
+    def deg(i: Int): Long = (start(i + 1) - start(i)).toLong
+    def isCenter(c: Int): Boolean = maxDegree <= 0 || deg(c) <= maxDegree
+    val budget =
+      (0 until n).filter(isCenter).map(c => deg(c) * (deg(c) - 1) / 2).sum
+    if (budget > 16000000L) return None
+    // existing-edge membership on the EXACT collected (a, b) tuples — the
+    // anti-join's semantics
+    val ekeys = Array.tabulate(g.m)(p => (g.src(p).toLong << 32) | g.dst(p))
+    java.util.Arrays.sort(ekeys)
+    // wedge keys (lower node value first) into one primitive array, sort,
+    // run-length count; equal endpoints (a self-loop or a repeated
+    // neighbour) are no pair, as the distributed na < nb filter has it
+    val wedges = new Array[Long](budget.toInt)
+    var wp = 0
+    var c = 0
+    while (c < n) {
+      if (isCenter(c)) {
+        var a = start(c)
+        while (a < start(c + 1)) {
+          var b = a + 1
+          while (b < start(c + 1)) {
+            val x = adj(a); val y = adj(b)
+            if (x != y) {
+              wedges(wp) =
+                if (g.ids(x) < g.ids(y)) (x.toLong << 32) | y
+                else (y.toLong << 32) | x
+              wp += 1
+            }
+            b += 1
+          }
+          a += 1
+        }
+      }
+      c += 1
+    }
+    java.util.Arrays.sort(wedges, 0, wp)
+    val cand = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
+    var q = 0
+    while (q < wp) {
+      val key = wedges(q)
+      var cnt = 0L
+      while (q < wp && wedges(q) == key) { cnt += 1; q += 1 }
+      if (java.util.Arrays.binarySearch(ekeys, key) < 0)
+        cand += (((key >>> 32).toInt, key.toInt, cnt))
+    }
+    // rank by (cn desc, a asc, b asc), take k
+    val top = cand.sortBy { case (x, y, cn) => (-cn, g.ids(x), g.ids(y)) }
+      .take(topK)
+    Some(DriverGraph.frame(spark,
+      top.toSeq.map { case (x, y, cn) =>
+        Row(g.ids(x), g.ids(y), cn, deg(x), deg(y),
+          cn.toDouble / (deg(x) + deg(y) - cn).toDouble)
+      },
+      "a" -> LongType, "b" -> LongType, "cn" -> LongType,
+      "deg_a" -> LongType, "deg_b" -> LongType, "jaccard" -> DoubleType))
   }
 }

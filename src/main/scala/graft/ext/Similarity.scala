@@ -1849,22 +1849,17 @@ object Similarity {
   def beamRecallCurve(df: DataFrame, idCol: String, vecCol: String,
       graph: DataFrame, queryPred: Column, k: Int, efs: Seq[Int],
       hops: Int, entryId: Long, driverRowLimit: Int = 100000,
-      driverEdgeLimit: Long = 2000000L): DataFrame = {
-    // r12 (the pageRank/kCore/LPA bounded-driver-state pattern): the whole
-    // search state is |vectors|·dim quantized longs + the degree-capped
-    // edge list — q258's operating point is 2,000 dim-64 vectors, 12k
-    // edges, 20 queries, yet the synchronized-round join form paid ~135
-    // tiny jobs across three widths (and a fused one-plan-per-hop variant,
-    // measured first, still paid 62 serial stages — scheduling latency is
-    // the cost here, not compute). When the QUANTIZED vector table and
-    // the graph fit the driver, the identical integer search runs there:
-    // quantization still happens in Spark (quantVec collected, zero
-    // re-derivation), distances are the same wrapping long arithmetic,
-    // and every cut is the same (qd, id) signed order used by BOTH the
-    // packed and the windowed distributed forms — so results are
-    // bit-identical and the DuckDB oracle replays unchanged. Past the
-    // limits (or non-integral ids / ragged vectors) the distributed
-    // machinery below runs as before.
+      driverEdgeLimit: Long = DriverGraph.MaxEdges): DataFrame = {
+    // the whole search state is |vectors|·dim quantized longs plus the
+    // edge list, and the synchronized-round join form pays scheduling
+    // latency, not compute. When the QUANTIZED vector table (within
+    // driverRowLimit) and the graph (within the DriverGraph gate) fit the
+    // driver, the same integer search runs there: quantization still
+    // happens in Spark (quantVec is collected), distances are the same
+    // wrapping long arithmetic, and every cut is the (qd, id) signed order
+    // of BOTH the packed and the windowed distributed forms — so results
+    // are bit-identical. Past the limits (or with non-integral ids or
+    // ragged vectors) the distributed machinery below runs.
     locally {
       val idIntegral = df.schema(df.schema.fieldIndex(idCol)).dataType match {
         case org.apache.spark.sql.types.ByteType |
@@ -1884,110 +1879,90 @@ object Similarity {
           vrows.map(_.getLong(0)).distinct.length == vrows.length
         if (uniform) {
           val gcols = graph.columns
-          val erows = graph.select(col(gcols(0)).cast("long"),
-              col(gcols(1)).cast("long"))
-            .limit(math.min(driverEdgeLimit, Int.MaxValue - 2L).toInt + 1)
-            .collect()
-          if (erows.length <= driverEdgeLimit &&
-              !erows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-            val n = vrows.length
-            val ids = new Array[Long](n)
-            val vv = new Array[Array[Long]](n)
-            val isQ = new Array[Boolean](n)
-            val idx = new java.util.HashMap[java.lang.Long, Integer](n * 2)
-            var i = 0
-            while (i < n) {
-              val r = vrows(i)
-              ids(i) = r.getLong(0)
-              vv(i) = r.getSeq[Long](1).toArray
-              isQ(i) = !r.isNullAt(2) && r.getBoolean(2)
-              idx.put(ids(i), i)
-              i += 1
-            }
-            // CSR out-adjacency (directed, as the join consumed it)
-            val m = erows.length
-            val es = new Array[Int](m); val ed = new Array[Int](m)
-            var ok = true
-            var p = 0
-            while (p < m && ok) {
-              val si = idx.get(erows(p).getLong(0))
-              val di = idx.get(erows(p).getLong(1))
-              // an edge endpoint with no vector row never scores in the
-              // distributed join either — drop it identically via a
-              // sentinel
-              if (si == null || di == null) { es(p) = -1; ed(p) = -1 }
-              else { es(p) = si.intValue(); ed(p) = di.intValue() }
-              p += 1
-            }
-            val deg = new Array[Int](n)
-            p = 0
-            while (p < m) { if (es(p) >= 0) deg(es(p)) += 1; p += 1 }
-            val start = new Array[Int](n + 1)
-            i = 0
-            while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
-            val fill = java.util.Arrays.copyOf(start, n)
-            val adj = new Array[Int](start(n))
-            p = 0
-            while (p < m) {
-              if (es(p) >= 0) { adj(fill(es(p))) = ed(p); fill(es(p)) += 1 }
-              p += 1
-            }
-            // same wrapping long arithmetic as the qdist_l2 expression
-            def qd(a: Array[Long], b: Array[Long]): Long = {
-              var s = 0L
-              var j = 0
-              while (j < a.length) {
-                val d = a(j) - b(j); s += d * d; j += 1
+          DriverGraph.collect(graph.select(col(gcols(0)).cast("long"),
+              col(gcols(1)).cast("long")), driverEdgeLimit) match {
+            case Some(g) =>
+              val n = vrows.length
+              val ids = new Array[Long](n)
+              val vv = new Array[Array[Long]](n)
+              val isQ = new Array[Boolean](n)
+              val idx = new java.util.HashMap[java.lang.Long, Integer](n * 2)
+              var i = 0
+              while (i < n) {
+                val r = vrows(i)
+                ids(i) = r.getLong(0)
+                vv(i) = r.getSeq[Long](1).toArray
+                isQ(i) = !r.isNullAt(2) && r.getBoolean(2)
+                idx.put(ids(i), i)
+                i += 1
               }
-              s
-            }
-            // (qd, id) ascending — the shared order of the packed AND
-            // windowed forms
-            def lt(qd1: Long, v1: Long, qd2: Long, v2: Long): Boolean =
-              qd1 < qd2 || (qd1 == qd2 && v1 < v2)
-            val qIdx = (0 until n).filter(isQ)
-            val nq = qIdx.length.toLong
-            val entry = idx.get(entryId)
-            val hits = scala.collection.mutable.Map.empty[Int, Long]
-            efs.foreach(ef => hits(ef) = 0L)
-            for (qi <- qIdx) {
-              val qv = vv(qi)
-              // brute-force exact top-k by (qd, id), self excluded
-              val bqd = new Array[Long](n)
-              i = 0
-              while (i < n) { bqd(i) = qd(qv, vv(i)); i += 1 }
-              val order = (0 until n).filter(_ != qi).sortWith((a, b) =>
-                lt(bqd(a), ids(a), bqd(b), ids(b)))
-              val exact = order.take(k).toSet
-              for (ef <- efs) {
-                // beam: sorted-distinct (qd, id) member set, cut to ef
-                var beam: Vector[Int] =
-                  if (entry == null) Vector.empty else Vector(entry.intValue())
-                for (_ <- 1 to hops) {
-                  val cand = scala.collection.mutable.LinkedHashSet.empty[Int]
-                  beam.foreach(cand += _)
-                  beam.foreach { b =>
-                    var e = start(b)
-                    while (e < start(b + 1)) { cand += adj(e); e += 1 }
-                  }
-                  beam = cand.toVector
-                    .sortWith((a, b) => lt(bqd(a), ids(a), bqd(b), ids(b)))
-                    .take(ef)
+              // CSR out-adjacency (directed, as the join consumed it) over
+              // the vector-table index. An edge endpoint with no vector row
+              // never scores in the distributed join either — its edge is
+              // dropped via the builder's negative sentinel
+              val at = g.ids.map { x =>
+                val i = idx.get(x); if (i == null) -1 else i.intValue()
+              }
+              val from = Array.tabulate(g.m)(p =>
+                if (at(g.dst(p)) < 0) -1 else at(g.src(p)))
+              val (start, adj) = DriverGraph.csr(n, from, g.dst.map(at(_)))
+              // same wrapping long arithmetic as the qdist_l2 expression
+              def qd(a: Array[Long], b: Array[Long]): Long = {
+                var s = 0L
+                var j = 0
+                while (j < a.length) {
+                  val d = a(j) - b(j); s += d * d; j += 1
                 }
-                val top = beam.filter(_ != qi).take(k)
-                val h = top.count(exact.contains).toLong
-                hits(ef) += h
+                s
               }
-            }
-            val spark = df.sparkSession
-            import spark.implicits._
-            return efs.map(ef => ef -> hits(ef))
-              .toDF("_ef", "_m")
-              .select(col("_ef").cast("long").as("beam_width"),
-                lit(nq).as("n_queries"),
-                round(col("_m").cast("double") /
-                  lit((nq * k).toDouble), 4).as("recall_at_k"))
-              .orderBy("beam_width")
+              // (qd, id) ascending — the shared order of the packed AND
+              // windowed forms
+              def lt(qd1: Long, v1: Long, qd2: Long, v2: Long): Boolean =
+                qd1 < qd2 || (qd1 == qd2 && v1 < v2)
+              val qIdx = (0 until n).filter(isQ)
+              val nq = qIdx.length.toLong
+              val entry = idx.get(entryId)
+              val hits = scala.collection.mutable.Map.empty[Int, Long]
+              efs.foreach(ef => hits(ef) = 0L)
+              for (qi <- qIdx) {
+                val qv = vv(qi)
+                // brute-force exact top-k by (qd, id), self excluded
+                val bqd = new Array[Long](n)
+                i = 0
+                while (i < n) { bqd(i) = qd(qv, vv(i)); i += 1 }
+                val order = (0 until n).filter(_ != qi).sortWith((a, b) =>
+                  lt(bqd(a), ids(a), bqd(b), ids(b)))
+                val exact = order.take(k).toSet
+                for (ef <- efs) {
+                  // beam: sorted-distinct (qd, id) member set, cut to ef
+                  var beam: Vector[Int] =
+                    if (entry == null) Vector.empty else Vector(entry.intValue())
+                  for (_ <- 1 to hops) {
+                    val cand = scala.collection.mutable.LinkedHashSet.empty[Int]
+                    beam.foreach(cand += _)
+                    beam.foreach { b =>
+                      var e = start(b)
+                      while (e < start(b + 1)) { cand += adj(e); e += 1 }
+                    }
+                    beam = cand.toVector
+                      .sortWith((a, b) => lt(bqd(a), ids(a), bqd(b), ids(b)))
+                      .take(ef)
+                  }
+                  val top = beam.filter(_ != qi).take(k)
+                  val h = top.count(exact.contains).toLong
+                  hits(ef) += h
+                }
+              }
+              val spark = df.sparkSession
+              import spark.implicits._
+              return efs.map(ef => ef -> hits(ef))
+                .toDF("_ef", "_m")
+                .select(col("_ef").cast("long").as("beam_width"),
+                  lit(nq).as("n_queries"),
+                  round(col("_m").cast("double") /
+                    lit((nq * k).toDouble), 4).as("recall_at_k"))
+                .orderBy("beam_width")
+            case None =>
           }
         }
       }

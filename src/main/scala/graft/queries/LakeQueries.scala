@@ -881,7 +881,7 @@ object LakeQueries {
 
     // ---- exact triangle census of the quarterly co-purchase graph (parts
     //      appearing in the same order, 1995Q1): degree-ordered orientation
-    //      bounds wedge fan-out at O(m^1.5) — see Graph.triangleStats.
+    //      bounds wedge fan-out at O(m^1.5) — see Graph.triangleCensus.
     //      The date predicate prunes at the orders scan; the DuckDB twin
     //      counts triangles with the naive a<b<c triple join (same census,
     //      different algorithm — an algorithmic cross-check, not an unrolled
@@ -902,7 +902,8 @@ object LakeQueries {
         val y = items.select(col("l_orderkey").as("k"), col("l_partkey").as("pb"))
         val pairs = x.join(y, Seq("k")).filter(col("pa") < col("pb"))
           .select(col("pa").as("src"), col("pb").as("dst"))
-        graft.ext.Graph.triangleStats(pairs, "src", "dst")
+        graft.ext.Graph.triangleCensus(pairs, "src", "dst")
+          .withColumnRenamed("transitivity", "global_clustering")
       },
       Some("""WITH li AS (
              |  SELECT DISTINCT l_orderkey, l_partkey

@@ -2,6 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -69,31 +72,31 @@ class GraphSpec extends SparkSpec {
     val k4 = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
     val edges = (k4 ++ Seq((3L, 4L), (5L, 6L), (6L, 7L), (5L, 7L)))
       .toDF("src", "dst")
-    val r = Graph.triangleStats(edges, "src", "dst").head()
+    val r = Graph.triangleCensus(edges, "src", "dst").head()
     assert(r.getAs[Long]("n_nodes") == 8)
     assert(r.getAs[Long]("n_edges") == 10)
     // wedges: K4 deg (3,3,3,4 with pendant) → 3+3+3+6 from {0..3}, node 4:
     // 0, triangle nodes: 1 each = 15 + 0 + 3 = 18
     assert(r.getAs[Long]("n_wedges") == 18)
     assert(r.getAs[Long]("n_triangles") == 5)
-    assert(math.abs(r.getAs[Double]("global_clustering") - 15.0 / 18.0) < 1e-6)
+    assert(math.abs(r.getAs[Double]("transitivity") - 15.0 / 18.0) < 1e-6)
   }
 
   test("triangleStats is orientation-proof: duplicates, reversed and self edges") {
     // same triangle listed three ways + self loop + duplicate edge
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (1L, 1L), (1L, 2L))
       .toDF("src", "dst")
-    val r = Graph.triangleStats(edges, "src", "dst").head()
+    val r = Graph.triangleCensus(edges, "src", "dst").head()
     assert(r.getAs[Long]("n_edges") == 3)
     assert(r.getAs[Long]("n_triangles") == 1)
   }
 
   test("triangleStats on a triangle-free star is zero with wedges present") {
     val edges = (1L to 5L).map(i => (0L, i)).toDF("src", "dst")
-    val r = Graph.triangleStats(edges, "src", "dst").head()
+    val r = Graph.triangleCensus(edges, "src", "dst").head()
     assert(r.getAs[Long]("n_wedges") == 10)
     assert(r.getAs[Long]("n_triangles") == 0)
-    assert(r.getAs[Double]("global_clustering") == 0.0)
+    assert(r.getAs[Double]("transitivity") == 0.0)
   }
 
   test("kCore peels cascades: chain into a clique") {
@@ -177,36 +180,64 @@ class GraphSpec extends SparkSpec {
         .count() == 0)
   }
 
-  test("r12 driver fast paths equal the distributed plans on a seeded " +
-    "random graph (pageRank, kCore, labelPropagation, triangles, " +
-    "commonNeighborTopK)") {
-    // driverEdgeLimit = 0 forces the distributed loops; the default takes
-    // the driver path — results must be identical row-for-row
-    val rng = new scala.util.Random(42)
-    val edges = Seq.fill(600)(
-      (rng.nextInt(80).toLong, rng.nextInt(80).toLong))
-      .filter { case (a, b) => a != b }
-      .toDF("src", "dst")
+  /** Sorted row renders of every driver fast path's operator on one edge
+    * list, run with the given edge gate (0 = the distributed plans).
+    */
+  private def graphOps(es: Seq[(Long, Long)], limit: Long): Seq[(String, Seq[String])] = {
+    val edges = es.toDF("src", "dst")
     def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    assert(sortedRows(Graph.pageRank(edges, "src", "dst", iterations = 3)) ==
-      sortedRows(Graph.pageRank(edges, "src", "dst", iterations = 3,
-        driverEdgeLimit = 0L)))
-    assert(sortedRows(Graph.kCore(edges, "src", "dst", k = 3)) ==
-      sortedRows(Graph.kCore(edges, "src", "dst", k = 3,
-        driverEdgeLimit = 0L)))
-    assert(sortedRows(Graph.labelPropagation(edges, "src", "dst", 3)) ==
-      sortedRows(Graph.labelPropagation(edges, "src", "dst", 3,
-        driverEdgeLimit = 0L)))
-    assert(sortedRows(Graph.triangleCensus(edges, "src", "dst")) ==
-      sortedRows(Graph.triangleCensus(edges, "src", "dst",
-        driverEdgeLimit = 0L)))
-    assert(sortedRows(Graph.triangleStats(edges, "src", "dst")) ==
-      sortedRows(Graph.triangleStats(edges, "src", "dst",
-        driverEdgeLimit = 0L)))
-    assert(sortedRows(
-      Graph.commonNeighborTopK(edges, "src", "dst", topK = 25)) ==
-      sortedRows(Graph.commonNeighborTopK(edges, "src", "dst", topK = 25,
-        driverEdgeLimit = 0L)))
+    Seq(
+      "pageRank" -> Graph.pageRank(edges, "src", "dst", iterations = 3,
+        driverEdgeLimit = limit),
+      "kCore" -> Graph.kCore(edges, "src", "dst", k = 2,
+        driverEdgeLimit = limit),
+      "labelPropagation" -> Graph.labelPropagation(edges, "src", "dst", 3,
+        driverEdgeLimit = limit),
+      "triangleCensus" -> Graph.triangleCensus(edges, "src", "dst",
+        driverEdgeLimit = limit),
+      "commonNeighborTopK" -> Graph.commonNeighborTopK(edges, "src", "dst",
+        topK = 25, driverEdgeLimit = limit),
+      "clusterIds" -> Dedup.clusterIds(
+        es.toDF("id_a", "id_b"), driverEdgeLimit = limit)
+    ).map { case (op, df) => op -> sortedRows(df) }
+  }
+
+  private val degenerateGraphs: Seq[(String, Seq[(Long, Long)])] = Seq(
+    "empty" -> Nil,
+    "single edge" -> Seq((1L, 2L)),
+    "perfect matching" -> (0L until 5L).map(i => (2 * i, 2 * i + 1)),
+    "self-loops only" -> Seq((1L, 1L), (2L, 2L), (3L, 3L)),
+    "duplicate and reversed edges" ->
+      Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (3L, 3L)),
+    "star hub" -> (1L to 12L).map(i => (0L, i)),
+    "two components" -> Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+      (10L, 11L), (11L, 12L), (12L, 13L), (13L, 10L), (10L, 12L)))
+
+  private val randomGraphs: Gen[Seq[(Long, Long)]] = for {
+    nodes <- Gen.choose(2L, 80L)
+    m <- Gen.choose(1, 400)
+    es <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, nodes - 1), Gen.choose(0L, nodes - 1)))
+  } yield es
+
+  test("driver fast paths equal the distributed plans on generated graphs") {
+    // the default gate takes the driver paths, driverEdgeLimit = 0 the
+    // distributed plans — every operator must give the same sorted rows
+    def differ(es: Seq[(Long, Long)]): Seq[String] =
+      graphOps(es, DriverGraph.MaxEdges).zip(graphOps(es, 0L)).collect {
+        case ((op, onDriver), (_, distributed)) if onDriver != distributed =>
+          s"$op: driver $onDriver vs distributed $distributed"
+      }
+    val failing = degenerateGraphs
+      .map { case (name, es) => name -> differ(es) }.filter(_._2.nonEmpty)
+    assert(failing.isEmpty, failing.mkString("\n"))
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(6)
+        .withInitialSeed(Seed(42L)).withWorkers(1),
+      Prop.forAllNoShrink(randomGraphs) { es =>
+        val d = differ(es)
+        Prop(d.isEmpty) :| s"$es: $d"
+      })
+    assert(result.passed, Pretty.pretty(result))
   }
 }

@@ -11,16 +11,23 @@ class SessionOpsEdgeSpec extends SparkSpec {
   import spark.implicits._
 
   test("triangleStats: empty and single-edge graphs") {
-    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val r0 = Graph.triangleStats(empty, "src", "dst").head()
-    assert(r0.getAs[Long]("n_nodes") == 0)
-    assert(r0.getAs[Long]("n_edges") == 0)
-    assert(r0.getAs[Long]("n_triangles") == 0)
-    val one = Seq((1L, 2L)).toDF("src", "dst")
-    val r1 = Graph.triangleStats(one, "src", "dst").head()
-    assert(r1.getAs[Long]("n_edges") == 1 &&
-      r1.getAs[Long]("n_wedges") == 0 &&
-      r1.getAs[Long]("n_triangles") == 0)
+    // both paths (driver gate and driverEdgeLimit = 0): the empty graph
+    // counts 0 everywhere, and a graph without wedges (one edge, a
+    // matching) has a null ratio, as Spark's x/0 is null
+    val graphs = Seq(
+      Seq.empty[(Long, Long)] -> (0L, 0L),
+      Seq((1L, 2L)) -> (2L, 1L),
+      Seq((1L, 2L), (3L, 4L)) -> (4L, 2L))
+    for (((es, (nodes, nEdges)), limit) <-
+        graphs.flatMap(g => Seq(g -> DriverGraph.MaxEdges, g -> 0L))) {
+      val r = Graph.triangleCensus(es.toDF("src", "dst"), "src", "dst",
+        driverEdgeLimit = limit).head()
+      val at = s"$es, limit $limit: $r"
+      // getAs[Any]: a null count must not unbox to 0
+      assert(Seq("n_nodes", "n_edges", "n_wedges", "n_triangles")
+        .map(r.getAs[Any](_)) == Seq(nodes, nEdges, 0L, 0L), at)
+      assert(r.isNullAt(r.fieldIndex("transitivity")), at)
+    }
   }
 
   test("degreeAssortativity: regular graph has zero-variance degrees") {
