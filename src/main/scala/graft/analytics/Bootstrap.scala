@@ -97,9 +97,9 @@ object Bootstrap {
   }
 
   /** Median-fill all numeric columns (monte_carlo.py:265: fillna(median)).
-    * A cheap null-count pass runs first: exact medians (sort-buffer
-    * aggregates) are only computed for columns that actually contain nulls —
-    * a fill on a null-free column is a no-op.
+    * A cheap null-count pass runs first: exact medians are only computed
+    * for columns that actually contain nulls — a fill on a null-free column
+    * is a no-op.
     */
   def medianFill(df: DataFrame, cols: Seq[String]): DataFrame = {
     val nullCounts = df
@@ -109,19 +109,7 @@ object Bootstrap {
     val withNulls = cols.zipWithIndex.filter { case (_, i) =>
       nullCounts.getLong(i) > 0
     }.map(_._1)
-    if (withNulls.isEmpty) return df
-    // r12: histogram-refinement medians (bit-identical to the builtin) —
-    // the percentile aggregate buffered every distinct value of every
-    // null-bearing column into one reduce task (the corpus-sized-buffer
-    // shape r11 removed from the global-percentile call sites)
-    val med = Summary.exactPercentilesHist(
-      df, withNulls.map(c => c -> Seq(0.5)))
-    withNulls.foldLeft(df) { case (d, c) =>
-      med(c).head match {
-        case Some(v) => d.na.fill(Map(c -> v))
-        case None => d
-      }
-    }
+    Summary.fillMedians(df, withNulls)
   }
 
   /** Exact multinomial bootstrap on collected columns (reference-scale
@@ -369,19 +357,7 @@ object Bootstrap {
     val nonNull = cols.indices.map(i => cntRow.getLong(i + 1))
     val withNulls = cols.zipWithIndex
       .filter { case (_, i) => nonNull(i) > 0 && nonNull(i) < n }.map(_._1)
-    val filled =
-      if (withNulls.isEmpty) raw
-      else {
-        // r12: histogram-refinement medians (see medianFill)
-        val med = Summary.exactPercentilesHist(
-          raw, withNulls.map(c => c -> Seq(0.5)))
-        withNulls.foldLeft(raw) { case (d, c) =>
-          med(c).head match {
-            case Some(v) => d.na.fill(Map(c -> v))
-            case None => d
-          }
-        }
-      }
+    val filled = Summary.fillMedians(raw, withNulls)
     val target = cols.zipWithIndex
       .filter { case (_, i) => nonNull(i) > 0 && n > 20 }.map(_._1)
     if (target.isEmpty) return None

@@ -20,15 +20,13 @@ object FeaturePrep {
   private def d(c: Column): Column = c.cast("double")
 
   /** Equal-frequency (quantile) binning: exact interpolated bin boundaries
-    * (one aggregate pass — the same `percentile` machinery as q07, which
-    * hash-matches DuckDB `quantile_cont`), then a scan-side bucket assign
-    * and a partial-aggregated per-bin profile. Boundaries are collected to
-    * the driver (nBins-1 doubles) and inlined as literals, so the bucketing
+    * ([[Summary.exactPercentilesHist]], as q07, which hash-matches DuckDB
+    * `quantile_cont`), then a scan-side bucket assign and a
+    * partial-aggregated per-bin profile. Boundaries are collected to the
+    * driver (nBins-1 doubles) and inlined as literals, so the bucketing
     * pass is pure whole-stage codegen with no join.
     *
-    * 100 TB: the exact percentile's FINAL MERGE absorbs the whole column
-    * into one buffer (600M doubles at the 100× sweep — the q151 scale
-    * hazard); `approxBoundaries = true` swaps the boundary pass to
+    * `approxBoundaries = true` swaps the boundary pass to
     * `approx_percentile` (t-digest-style mergeable sketch, bounded memory,
     * certified against the exact quantiles by the q98 error pin) while the
     * bucket/profile pass is UNCHANGED. Exact stays the default because the
@@ -43,9 +41,7 @@ object FeaturePrep {
       approxAccuracy: Int = 10000
   ): DataFrame = {
     val probs = (1 until nBins).map(i => i.toDouble / nBins)
-    // exact boundaries via the shared histogram-refinement helper (r11):
-    // the single-buffer percentile aggregate was one 3.3 s reduce task at
-    // sf0.1 and corpus-sized memory on mostly-distinct columns
+    // exact boundaries via Summary.exactPercentilesHist
     val bounds: Seq[Double] =
       if (approxBoundaries)
         df.agg(approx_percentile(col(valueCol).cast("double"),

@@ -2,12 +2,11 @@ package graft.analytics
 
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.stat.Correlation
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.etl.Cleaning
+import scala.jdk.CollectionConverters._
 
 /** Interactive analytics surface (notebook cells 8/13, SURVEY.md §3 E3):
   * describe, nunique, correlation matrix, top-k.
@@ -84,59 +83,16 @@ object Summary {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Driver byte budget of [[exactPercentilesHist]]'s collect path: a
-    * thirty-second of the driver's max heap, capped at half of
-    * `spark.driver.maxResultSize` so the collected task results never trip
-    * that limit (0 there means unlimited).
-    */
-  def percentileDriverBytes: Long = {
-    val heap = Runtime.getRuntime.maxMemory / 32
-    val maxResult = SparkSession.active.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (maxResult > 0) math.min(heap, maxResult / 2) else heap
-  }
-
   /** Exact GLOBAL percentiles for several columns at once, without Spark's
-    * `percentile` aggregate.
-    *
-    * The builtin buffers every (value, count) pair into one
-    * TypedImperativeAggregate whose FINAL merge+sort runs in a single
-    * reduce task (q43's 2.5 s / q151's 3.3 s single-task stages at sf0.1 —
-    * and the buffer is corpus-sized on mostly-distinct columns, which is
-    * exactly what breaks at lake scale). Here:
-    *   1. one fused, shuffle-free scan of the cast-to-double projection:
-    *      per partition, each column's non-null count / min / max, plus the
-    *      non-null values themselves as primitive arrays while the partition
-    *      holds at most `driverBytes / numPartitions` bytes of them. When
-    *      every partition kept its values (the DRIVER path) the driver sorts
-    *      each column and reads the order statistics off the sorted arrays:
-    *      one Spark job in all. Otherwise (the HISTOGRAM path):
-    *   2. one map-side-combined pass: per-column `nBuckets` fixed-width
-    *      histogram over pass 1's bounds (columns exploded into (ci, v) so
-    *      ALL columns share the pass); the driver walks cumulative counts
-    *      to locate the bucket holding each needed order statistic;
-    *   3. exact resolve inside the located buckets only (≈1/nBuckets of
-    *      the rows): distinct-value counts collected and walked on the
-    *      driver (bounded by `maxResolveRows`, pre-checked from the
-    *      histogram itself; above the bound the plain aggregate runs
-    *      instead — correctness never depends on the distribution).
+    * single-buffer `percentile` aggregate (q43's 2.5 s / q151's 3.3 s
+    * single-task merges at sf0.1, and a corpus-sized buffer at lake scale):
+    * the one-group case of [[OrderStats]] — one fused scan sorted on the
+    * driver while the values fit its byte budget, else histogram + resolve
+    * passes — bit-identical to the builtin on NaN-free columns.
     *
     * Callers that already aggregated (non-null count, min, max) of the
     * SAME cast-to-double columns pass them as `boundsIn`: the gate is then
-    * decided exactly from the counts before any pass runs — the driver
-    * path's scan gets the whole budget, the histogram path skips pass 1.
-    *
-    * `driverBytes` bounds the values the driver holds (8 bytes each, twice
-    * that while the partitions' arrays are joined); the default is
-    * [[percentileDriverBytes]] and 0 forces the histogram path.
-    *
-    * BIT-IDENTICAL to the builtin on NaN-free columns, on both paths:
-    * order statistics are exact ranks over the identical double ordering
-    * (-0.0 read as 0.0, as Spark's grouping normalizes it), and
-    * [[interpolate]] replays Percentile.getPercentile. Nulls are ignored
-    * like the builtin; NaN-bearing columns must use the builtin (histogram
-    * bucketing cannot place NaN) — every oracle-backed caller is NaN-free
-    * by construction.
+    * decided from the counts before any pass runs.
     *
     * Returns per column one Option[Double] per requested prob (None when
     * the column has no non-null values).
@@ -144,432 +100,34 @@ object Summary {
   def exactPercentilesHist(
       df: DataFrame,
       specs: Seq[(String, Seq[Double])],
-      nBuckets: Int = 4096,
-      maxResolveRows: Long = 4000000L,
-      boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]] = None,
-      driverBytes: Long = percentileDriverBytes
+      boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]] = None
   ): Map[String, Seq[Option[Double]]] =
-    exactPercentilesWithPath(
-      df, specs, nBuckets, maxResolveRows, boundsIn, driverBytes)._1
-
-  /** [[exactPercentilesHist]] plus the path it took: "driver", "histogram"
-    * or "builtin" (the `maxResolveRows` fallback).
-    */
-  private[graft] def exactPercentilesWithPath(
-      df: DataFrame,
-      specs: Seq[(String, Seq[Double])],
-      nBuckets: Int,
-      maxResolveRows: Long,
-      boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]],
-      driverBytes: Long
-  ): (Map[String, Seq[Option[Double]]], String) = {
-    require(specs.nonEmpty)
-    val k = specs.length
-    // the passes run straight over the caller's frame: callers with an
-    // expensive derived lineage cache/checkpoint it themselves (the
-    // cleaning stage checkpoints its coerced frame), and for the common
-    // raw-scan callers a narrow checkpoint here was measured as a pure
-    // LOSS at 100× (writing rows×k doubles to executor storage cost more
-    // than three parquet re-scans)
-    val narrow = df
-      .select(specs.zipWithIndex.map { case ((c, _), i) =>
-        col(c).cast("double").as(s"_c$i") }: _*)
-    lazy val rows = narrow.queryExecution.toRdd
-    val bounds = boundsIn match {
-      case Some(b) =>
-        require(b.length == k, "boundsIn must cover every spec column")
-        val ns = b.map(_._1)
-        if (ns.exists(_ > 0) && ns.sum <= driverBytes / 8)
-          fusedBoundsPass(rows, k, driverBytes)
-        else ColumnBounds(ns.toArray, b.map(_._2.getOrElse(0.0)).toArray,
-          b.map(_._3.getOrElse(0.0)).toArray, None)
-      case None =>
-        fusedBoundsPass(rows, k, driverBytes / math.max(1, rows.getNumPartitions))
-    }
-    val ns = bounds.n
-    val ranksByCol = specs.zipWithIndex.map { case ((_, ps), i) =>
-      neededRanks(ns(i), ps) }
-    val (key, path): ((Int, Long) => Double, String) = bounds.sorted match {
-      case Some(sorted) => ((ci, rank) => sorted(ci)(rank.toInt), "driver")
-      case None if ranksByCol.forall(_.isEmpty) => ((_, _) => 0.0, "driver")
-      case None =>
-        histogramKeys(narrow, bounds, ranksByCol, nBuckets, maxResolveRows) match {
-          case Some(keys) => ((ci, rank) => keys((ci, rank)), "histogram")
-          case None => return (builtinPercentiles(narrow, specs), "builtin")
-        }
-    }
-    (specs.zipWithIndex.map { case ((c, ps), ci) =>
-      c -> ps.map(p =>
-        if (ns(ci) == 0) None else Some(interpolate(ns(ci), p, key(ci, _))))
-    }.toMap, path)
-  }
-
-  /** Pass 1's result: per column the non-null count, min and max (0.0 for
-    * an empty column) and, when every partition kept them, the sorted
-    * non-null values.
-    */
-  private final case class ColumnBounds(
-      n: Array[Long],
-      lo: Array[Double],
-      hi: Array[Double],
-      sorted: Option[Array[Array[Double]]])
-
-  /** Pass 1 of [[exactPercentilesHist]]: one job, no shuffle. Each
-    * partition keeps its values only while they fit `capBytes`.
-    */
-  private def fusedBoundsPass(
-      rows: RDD[InternalRow], k: Int, capBytes: Long): ColumnBounds = {
-    val parts = rows.mapPartitions { it =>
-      val n = new Array[Long](k)
-      val lo = Array.fill(k)(Double.PositiveInfinity)
-      val hi = Array.fill(k)(Double.NegativeInfinity)
-      var vals = Array.fill(k)(new Array[Double](64))
-      var bytes = 0L
-      while (it.hasNext) {
-        val row = it.next()
-        var i = 0
-        while (i < k) {
-          if (!row.isNullAt(i)) {
-            val v = row.getDouble(i) + 0.0 // -0.0 + 0.0 == +0.0
-            if (v < lo(i)) lo(i) = v
-            if (v > hi(i)) hi(i) = v
-            if (vals != null) {
-              if (bytes + 8 > capBytes) vals = null
-              else {
-                val m = n(i).toInt
-                if (m == vals(i).length)
-                  vals(i) = java.util.Arrays.copyOf(vals(i), m * 2)
-                vals(i)(m) = v
-                bytes += 8
-              }
-            }
-            n(i) += 1
-          }
-          i += 1
-        }
-      }
-      Iterator((n, lo, hi,
-        if (vals == null) null
-        else Array.tabulate(k)(i => java.util.Arrays.copyOf(vals(i), n(i).toInt))))
-    }.collect()
-    val n = Array.tabulate(k)(i => parts.map(_._1(i)).sum)
-    val sorted =
-      if (parts.exists(_._4 == null)) None
-      else Some(Array.tabulate(k) { i =>
-        val all =
-          if (parts.length == 1) parts.head._4(i)
-          else {
-            val a = new Array[Double](n(i).toInt)
-            var off = 0
-            parts.foreach { p =>
-              System.arraycopy(p._4(i), 0, a, off, p._4(i).length)
-              off += p._4(i).length
-            }
-            a
-          }
-        java.util.Arrays.sort(all)
-        all
-      })
-    ColumnBounds(n,
-      Array.tabulate(k)(i =>
-        if (n(i) == 0) 0.0 else parts.map(_._2(i)).reduce((a, b) => math.min(a, b))),
-      Array.tabulate(k)(i =>
-        if (n(i) == 0) 0.0 else parts.map(_._3(i)).reduce((a, b) => math.max(a, b))),
-      sorted)
-  }
-
-  /** Passes 2–3 of [[exactPercentilesHist]]: (column, rank) → value for
-    * every needed rank, or None when the located buckets hold more than
-    * `maxResolveRows` rows.
-    */
-  private def histogramKeys(
-      narrow: DataFrame,
-      bounds: ColumnBounds,
-      ranksByCol: Seq[Seq[Long]],
-      nBuckets: Int,
-      maxResolveRows: Long
-  ): Option[Map[(Int, Long), Double]] = {
-    val k = ranksByCol.length
-    val vcols = (0 until k).map(i => col(s"_c$i"))
-    val widths = (0 until k).map(i =>
-      if (bounds.hi(i) > bounds.lo(i)) (bounds.hi(i) - bounds.lo(i)) / nBuckets
-      else 1.0)
-    // pass 2: shared per-column histogram
-    val loLit = typedLit(bounds.lo.toSeq)
-    val wLit = typedLit(widths)
-    val ex = narrow
-      .select(posexplode(array(vcols: _*)).as(Seq("_ci", "_v")))
-      .filter(col("_v").isNotNull)
-    val bucketOf = least(lit(nBuckets - 1), greatest(lit(0),
-      floor((col("_v") - element_at(loLit, col("_ci") + 1)) /
-        element_at(wLit, col("_ci") + 1)).cast("int")))
-    val hist = ex.groupBy(col("_ci"), bucketOf.as("_b"))
-      .agg(count(lit(1)).as("_n"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (ci, rows) =>
-        ci -> rows.map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1)
-      }
-    // driver walk: (ci, rank) -> (bucket, rankInBucket); needed buckets per ci
-    val perRank = scala.collection.mutable.Map.empty[(Int, Long), (Int, Long)]
-    val neededBuckets =
-      scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Set[Int]]
-    var resolveRows = 0L
-    for (ci <- 0 until k; if ranksByCol(ci).nonEmpty) {
-      val bs = hist.getOrElse(ci, Array.empty[(Int, Long)])
-      var cum = 0L
-      var ri = 0
-      val ranks = ranksByCol(ci)
-      val counted = scala.collection.mutable.Set.empty[Int]
-      for ((b, c) <- bs if ri < ranks.length) {
-        while (ri < ranks.length && ranks(ri) < cum + c) {
-          perRank((ci, ranks(ri))) = (b, ranks(ri) - cum)
-          neededBuckets.getOrElseUpdate(ci,
-            scala.collection.mutable.Set.empty[Int]) += b
-          if (!counted.contains(b)) { counted += b; resolveRows += c }
-          ri += 1
-        }
-        cum += c
-      }
-    }
-    if (resolveRows > maxResolveRows) return None
-    // pass 3: exact resolve inside the located buckets
-    val pred = (0 until k)
-      .filter(ci => neededBuckets.contains(ci))
-      .map(ci => col("_ci") === ci &&
-        bucketOf.isin(neededBuckets(ci).toSeq: _*))
-      .reduce(_ || _)
-    val vals = ex.filter(pred)
-      .groupBy(col("_ci"), bucketOf.as("_b"), col("_v"))
-      .agg(count(lit(1)).as("_n"))
-      .collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1)))
-      .map { case (key, rows) =>
-        key -> rows.map(r => (r.getDouble(2), r.getLong(3)))
-          .sortBy(_._1)(Ordering.fromLessThan(
-            (a, b) => java.lang.Double.compare(a, b) < 0))
-      }
-    Some(perRank.toMap.map { case ((ci, rank), (b, rib)) =>
-      val vs = vals((ci, b))
-      var rem = rib
-      var vi = 0
-      while (rem >= vs(vi)._2) { rem -= vs(vi)._2; vi += 1 }
-      (ci, rank) -> vs(vi)._1
-    })
-  }
-
-  /** The builtin single-buffer aggregate at the caller's probs — run when
-    * the distribution defeated the histogram refinement.
-    */
-  private def builtinPercentiles(
-      narrow: DataFrame,
-      specs: Seq[(String, Seq[Double])]
-  ): Map[String, Seq[Option[Double]]] = {
-    val aggs = specs.zipWithIndex.map { case ((_, ps), i) =>
-      percentile(col(s"_c$i"), array(ps.map(lit): _*)) }
-    val aggRow = narrow.agg(aggs.head, aggs.tail: _*).head()
-    specs.zipWithIndex.map { case ((c, ps), i) =>
-      c -> (if (aggRow.isNullAt(i)) ps.map(_ => Option.empty[Double])
-            else aggRow.getSeq[Double](i).map(Option(_)))
-    }.toMap
-  }
-
-  /** The 0-based ranks [[interpolate]] reads for probs `ps` over n values. */
-  private def neededRanks(n: Long, ps: Seq[Double]): Seq[Long] =
-    if (n == 0) Nil
-    else ps.flatMap { p =>
-      val pos = (n - 1).toDouble * p
-      Seq(pos.floor.toLong, pos.ceil.toLong)
-    }.distinct.sorted
-
-  /** Percentile.getPercentile replayed exactly: the p-th percentile of n
-    * values whose 0-based order statistics are `key(rank)` — position =
-    * (n−1)·p, keys at ⌊position⌋/⌈position⌉, result
-    * (higher−position)·lowerKey + (position−lower)·higherKey with the same
-    * equal-key short-circuits.
-    */
-  private def interpolate(n: Long, p: Double, key: Long => Double): Double = {
-    val position = (n - 1).toDouble * p
-    val lower = position.floor.toLong
-    val higher = position.ceil.toLong
-    val lowerKey = key(lower)
-    if (higher == lower) lowerKey
-    else {
-      val higherKey = key(higher)
-      if (java.lang.Double.valueOf(higherKey)
-          .equals(java.lang.Double.valueOf(lowerKey))) lowerKey
-      else (higher - position) * lowerKey + (position - lower) * higherKey
-    }
-  }
+    OrderStats.percentiles(df, None, specs, boundsIn)._1.values.head
 
   /** Exact PER-GROUP percentiles for several columns at once — the grouped
-    * analog of [[exactPercentilesHist]] (r12, VERDICT r11 #2): the builtin
-    * grouped `percentile` buffers every distinct (value, count) of every
-    * group into one TypedImperativeAggregate per group whose merge runs in
-    * one reduce task per group — the exact shape the r11 round removed for
-    * global percentiles, and corpus-sized per group at lake scale. Here
-    * the same three histogram-refinement passes run with the group key
-    * threaded through (per-group bounds broadcast-joined in, the q125
-    * weightedMedian wiring):
-    *   1. per-(group, column) count / min / max (collected — group
-    *      cardinality is driver-bounded by `maxGroups`);
-    *   2. one shared (group, column, bucket) histogram pass; the driver
-    *      walks cumulative counts to locate each order statistic's bucket;
-    *   3. exact resolve inside the located buckets only, bounded by
-    *      `maxResolveRows` (above it, the builtin grouped aggregate runs —
-    *      correctness never depends on the distribution).
-    *
-    * BIT-IDENTICAL to the builtin per group (same exact ranks over the
-    * same double ordering, same Percentile.getPercentile interpolation;
-    * NaN-free columns only — every oracle-backed caller is by
-    * construction). Returns group → column → one Option[Double] per
-    * requested prob (None when the group/column has no non-null values).
+    * [[exactPercentilesHist]] ([[OrderStats]] with the group key threaded
+    * through; a null key is a group of its own, at most
+    * [[OrderStats.MaxGroups]] groups). Returns group → column → one
+    * Option[Double] per requested prob (None when the group/column has no
+    * non-null values).
     */
   def exactGroupedPercentilesHist(
       df: DataFrame,
       groupCol: String,
-      specs: Seq[(String, Seq[Double])],
-      nBuckets: Int = 4096,
-      maxResolveRows: Long = 4000000L,
-      maxGroups: Int = 10000
-  ): Map[Any, Map[String, Seq[Option[Double]]]] = {
-    require(specs.nonEmpty)
-    val spark = df.sparkSession
-    val narrow = df
-      .select(col(groupCol).as("_grp") +:
-        specs.zipWithIndex.map { case ((c, _), i) =>
-          col(c).cast("double").as(s"_c$i") }: _*)
-    val gType = narrow.schema("_grp").dataType
-    val vcols = specs.indices.map(i => col(s"_c$i"))
-    // pass 1: per-(group, column) bounds
-    val bRows = narrow.groupBy("_grp")
-      .agg(vcols.flatMap(c => Seq(count(c), min(c), max(c))).head,
-        vcols.flatMap(c => Seq(count(c), min(c), max(c))).tail: _*)
-      .collect()
-    require(bRows.length <= maxGroups,
-      s"exactGroupedPercentilesHist: ${bRows.length} groups exceed " +
-        s"maxGroups=$maxGroups — use the builtin grouped percentile for " +
-        "high-cardinality keys (already parallel there)")
-    if (bRows.isEmpty) return Map.empty
-    final case class GC(n: Long, lo: Double, width: Double)
-    val gcs: Map[(Any, Int), GC] = bRows.flatMap { r =>
-      specs.indices.map { i =>
-        val n = r.getLong(1 + i * 3)
-        val lo = if (r.isNullAt(2 + i * 3)) 0.0 else r.getDouble(2 + i * 3)
-        val hi = if (r.isNullAt(3 + i * 3)) 0.0 else r.getDouble(3 + i * 3)
-        (r.get(0), i) -> GC(n, lo, if (hi > lo) (hi - lo) / nBuckets else 1.0)
-      }
-    }.toMap
-    // needed 0-based ranks per (group, column)
-    val ranksOf: Map[(Any, Int), Seq[Long]] = gcs.map { case (key, gc) =>
-      key -> neededRanks(gc.n, specs(key._2)._2)
+      specs: Seq[(String, Seq[Double])]
+  ): Map[Any, Map[String, Seq[Option[Double]]]] =
+    OrderStats.percentiles(df, Some(groupCol), specs)._1
+
+  /** pandas `fillna(median)` over `cols`: each column's nulls become its
+    * exact median (one [[exactPercentilesHist]] call for all of them); a
+    * column without values stays as it is.
+    */
+  def fillMedians(df: DataFrame, cols: Seq[String]): DataFrame =
+    if (cols.isEmpty) df
+    else {
+      val med = exactPercentilesHist(df, cols.map(_ -> Seq(0.5)))
+      cols.foldLeft(df)((d, c) => med(c).head.fold(d)(m => d.na.fill(Map(c -> m))))
     }
-    def emptyResult: Map[Any, Map[String, Seq[Option[Double]]]] =
-      bRows.map(r => r.get(0) -> specs.map { case (c, ps) =>
-        c -> ps.map(_ => Option.empty[Double]) }.toMap).toMap
-    if (ranksOf.values.forall(_.isEmpty)) return emptyResult
-    // pass 2: shared (group, column, bucket) histogram; per-(group, col)
-    // bounds ride in through a broadcast params join (the weightedMedian
-    // wiring — group keys are arbitrary-typed, so no literal map)
-    val paramSchema = StructType(Seq(
-      StructField("_grp", gType), StructField("_ci", IntegerType),
-      StructField("_lo", DoubleType), StructField("_w", DoubleType)))
-    val paramRows = gcs.toSeq.map { case ((g, i), gc) =>
-      Row(g, i, gc.lo, gc.width)
-    }
-    val params = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(paramRows, 1), paramSchema))
-    val ex = narrow
-      .select(col("_grp") +:
-        Seq(posexplode(array(vcols: _*)).as(Seq("_ci", "_v"))): _*)
-      .filter(col("_v").isNotNull)
-      .join(params, Seq("_grp", "_ci"))
-    val bucketOf = least(lit(nBuckets - 1), greatest(lit(0),
-      floor((col("_v") - col("_lo")) / col("_w")).cast("int")))
-    val hist = ex.groupBy(col("_grp"), col("_ci"), bucketOf.as("_b"))
-      .agg(count(lit(1)).as("_n"))
-      .collect()
-      .groupBy(r => (r.get(0), r.getInt(1)))
-      .map { case (key, rows) =>
-        key -> rows.map(r => (r.getInt(2), r.getLong(3))).sortBy(_._1)
-      }
-    // driver walk: (group, ci, rank) -> (bucket, rankInBucket)
-    val perRank =
-      scala.collection.mutable.Map.empty[(Any, Int, Long), (Int, Long)]
-    val neededBuckets = scala.collection.mutable
-      .Map.empty[(Any, Int), scala.collection.mutable.Set[Int]]
-    var resolveRows = 0L
-    for ((key, ranks) <- ranksOf if ranks.nonEmpty) {
-      val bs = hist.getOrElse(key, Array.empty[(Int, Long)])
-      var cum = 0L
-      var ri = 0
-      val counted = scala.collection.mutable.Set.empty[Int]
-      for ((b, c) <- bs if ri < ranks.length) {
-        while (ri < ranks.length && ranks(ri) < cum + c) {
-          perRank((key._1, key._2, ranks(ri))) = (b, ranks(ri) - cum)
-          neededBuckets.getOrElseUpdate(key,
-            scala.collection.mutable.Set.empty[Int]) += b
-          if (!counted.contains(b)) { counted += b; resolveRows += c }
-          ri += 1
-        }
-        cum += c
-      }
-    }
-    val keys: Map[(Any, Int, Long), Double] =
-      if (resolveRows <= maxResolveRows) {
-        // pass 3: exact resolve inside the located buckets only
-        val needSchema = StructType(Seq(
-          StructField("_grp", gType), StructField("_ci", IntegerType),
-          StructField("_b", IntegerType)))
-        val needRows = neededBuckets.toSeq.flatMap { case ((g, i), bs) =>
-          bs.toSeq.map(b => Row(g, i, b))
-        }
-        val need = broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(needRows, 1), needSchema))
-        val vals = ex
-          .withColumn("_b", bucketOf)
-          .join(need, Seq("_grp", "_ci", "_b"), "left_semi")
-          .groupBy(col("_grp"), col("_ci"), col("_b"), col("_v"))
-          .agg(count(lit(1)).as("_n"))
-          .collect()
-          .groupBy(r => (r.get(0), r.getInt(1), r.getInt(2)))
-          .map { case (key, rows) =>
-            key -> rows.map(r => (r.getDouble(3), r.getLong(4)))
-              .sortBy(_._1)(Ordering.fromLessThan(
-                (a, b) => java.lang.Double.compare(a, b) < 0))
-          }
-        perRank.toMap.map { case ((g, ci, rank), (b, rib)) =>
-          val vs = vals((g, ci, b))
-          var rem = rib
-          var vi = 0
-          while (rem >= vs(vi)._2) { rem -= vs(vi)._2; vi += 1 }
-          (g, ci, rank) -> vs(vi)._1
-        }
-      } else {
-        // distribution defeated the refinement — builtin grouped aggregate
-        val aggRow = narrow.groupBy("_grp").agg(
-          specs.indices.map(i =>
-            percentile(vcols(i), array(specs(i)._2.map(lit): _*))).head,
-          specs.indices.map(i =>
-            percentile(vcols(i), array(specs(i)._2.map(lit): _*))).tail: _*)
-          .collect()
-        return aggRow.map { r =>
-          r.get(0) -> specs.zipWithIndex.map { case ((c, ps), i) =>
-            c -> (if (r.isNullAt(1 + i)) ps.map(_ => Option.empty[Double])
-                  else r.getSeq[Double](1 + i).map(Option(_)))
-          }.toMap
-        }.toMap
-      }
-    bRows.map { r =>
-      val g = r.get(0)
-      g -> specs.zipWithIndex.map { case ((c, ps), ci) =>
-        val n = gcs((g, ci)).n
-        c -> ps.map(p =>
-          if (n == 0) None
-          else Some(interpolate(n, p, rank => keys((g, ci, rank)))))
-      }.toMap
-    }.toMap
-  }
 
   /** A11: `nunique()` per column — exact by default; at lake scale flip
     * `approximate=true` for one-pass HLL sketches.
@@ -648,107 +206,34 @@ object Summary {
   def topKByAbs(df: DataFrame, c: String, k: Int, tieBreak: String): DataFrame =
     df.orderBy(abs(col(c)).desc, col(tieBreak).asc).limit(k)
 
-  /** Distributed weighted median per group — the LOWER weighted median:
-    * the smallest value v with 2·W(≤v) ≥ W — WITHOUT a per-group global
-    * sort.
-    *
-    * A cumulative-weight window partitioned by the group column is the
-    * textbook formulation, but with a handful of groups it is a handful
-    * of tasks each sorting its whole group (the q110 lesson generalized:
-    * never put order-statistics machinery on the per-row table). Instead,
-    * histogram refinement:
-    *   1. one aggregate: per-group total weight + [min,max] bounds;
-    *   2. one aggregate: per-group `nBuckets` weighted histogram; the
-    *      driver walks ≤ groups×nBuckets cumulative rows to locate each
-    *      group's median bucket and the weight before it;
-    *   3. exact resolve INSIDE the located buckets only (≈1/nBuckets of
-    *      the rows): distinct-value weights + a per-group window over
-    *      that small remainder.
-    * The decision predicate is pure integer arithmetic on long weights
-    * (2·cum ≥ W), so the answer is independent of the float bucketing —
-    * which is why a DuckDB oracle can recompute it straight from the
-    * definition (q125).
-    *
-    * Group cardinality is driver-bounded (two collects of
-    * groups(×nBuckets) rows) — guarded by `maxGroups`; for
-    * high-cardinality keys use the plain window form, which is already
-    * parallel there.
+  /** Weighted median per group — the LOWER weighted median: the smallest
+    * value v with 2·W(≤v) ≥ W, i.e. the value at 0-based rank ⌊(W−1)/2⌋ of
+    * the weighted multiset — through [[OrderStats]], WITHOUT a per-group
+    * sort (with a handful of groups a cumulative-weight window is a handful
+    * of tasks each sorting its whole group). Null values and non-positive
+    * weights (cast to long) are dropped; a group left without rows has no
+    * output row. The answer is an exact rank over integer weights, so the
+    * float bucketing cannot leak into it — which is why a DuckDB oracle can
+    * recompute it straight from the definition (q125). At most
+    * [[OrderStats.MaxGroups]] groups: for high-cardinality keys use the
+    * plain window form, which is already parallel there.
     */
   def weightedMedian(
       df: DataFrame,
       groupCol: String,
       valueCol: String,
-      weightCol: String,
-      nBuckets: Int = 1024,
-      maxGroups: Int = 10000
+      weightCol: String
   ): DataFrame = {
     val spark = df.sparkSession
     val base = df.select(col(groupCol).as("g"),
         col(valueCol).cast("double").as("v"),
         col(weightCol).cast("long").as("wt"))
       .filter(col("v").isNotNull && col("wt") > 0)
-    val gType = base.schema("g").dataType
-
-    val bounds = base.groupBy("g")
-      .agg(sum("wt").as("W"), min("v").as("lo"), max("v").as("hi"))
-      .collect()
-    require(bounds.length <= maxGroups,
-      s"weightedMedian: ${bounds.length} groups exceed maxGroups=$maxGroups" +
-        " — use a cumulative-weight window for high-cardinality keys")
-    if (bounds.isEmpty)
-      return base.select(col("g").as(groupCol),
-        col("v").as("weighted_median")).limit(0)
-
-    val paramSchema = StructType(Seq(
-      StructField("g", gType), StructField("W", LongType),
-      StructField("lo", DoubleType), StructField("width", DoubleType)))
-    val paramRows = bounds.toSeq.map { r =>
-      val lo = r.getDouble(2); val hi = r.getDouble(3)
-      Row(r.get(0), r.getLong(1), lo,
-        if (hi > lo) (hi - lo) / nBuckets else 1.0)
-    }
-    val params = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(paramRows, 1), paramSchema))
-    val bucketOf = least(lit(nBuckets - 1), greatest(lit(0),
-      floor((col("v") - col("lo")) / col("width")).cast("int")))
-
-    val hist = base.join(params, "g")
-      .groupBy(col("g"), bucketOf.as("_b"))
-      .agg(sum("wt").as("bw"))
-      .collect()
-    // driver walk: first bucket where the cumulative weight crosses W/2
-    val byG = hist.groupBy(r => r.get(0))
-    val located = bounds.toSeq.map { r =>
-      val g = r.get(0); val w = r.getLong(1)
-      val bs = byG.getOrElse(g, Array.empty)
-        .map(h => (h.getInt(1), h.getLong(2))).sortBy(_._1)
-      var cum = 0L; var bStar = bs.last._1; var before = 0L
-      var found = false
-      for ((b, bw) <- bs if !found) {
-        if (2 * (cum + bw) >= w) { bStar = b; before = cum; found = true }
-        cum += bw
-      }
-      (g, w, bStar, before)
-    }
-    val targetSchema = StructType(Seq(
-      StructField("g", gType), StructField("W", LongType),
-      StructField("bstar", IntegerType), StructField("wbefore", LongType)))
-    val targets = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        located.map(t => Row(t._1, t._2, t._3, t._4)), 1), targetSchema))
-
-    val resolved = base.join(params.select("g", "lo", "width"), "g")
-      .join(targets, "g")
-      .filter(bucketOf === col("bstar"))
-      .groupBy(col("g"), col("W"), col("wbefore"), col("v"))
-      .agg(sum("wt").as("vw"))
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy("g").orderBy("v")
-    resolved
-      .withColumn("cw", sum("vw").over(wCum))
-      .filter(lit(2) * (col("wbefore") + col("cw")) >= col("W"))
-      .groupBy("g").agg(min("v").as("weighted_median"))
-      .select(col("g").as(groupCol), col("weighted_median"))
+    val (stats, _) = OrderStats(base, Some("g"), Seq("v"), col("wt"),
+      (_, w) => Seq((w - 1) / 2))
+    val rows = stats.toSeq.map { case (g, st) => Row(g, st.head.at((st.head.n - 1) / 2)) }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      base.schema("g").copy(name = groupCol), StructField("weighted_median", DoubleType))))
   }
 
   /** A/B experiment readout: Welch's t STATISTIC (and Welch–Satterthwaite

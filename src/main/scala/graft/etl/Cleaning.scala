@@ -188,10 +188,8 @@ object Cleaning {
   }
 
   private def cleanNumericsFused(df: DataFrame, cols: Seq[String]): DataFrame = {
-    // Q1 & Q3 via the shared histogram-refinement helper (r11) — values
-    // bit-identical to the single-buffer percentile aggregate, without its
-    // one-reduce-task merge of every distinct value of every column.
-    // Columns are NaN-free here by construction (coerceToDouble nulls NaN).
+    // exact Q1/Q3 of every column in one helper call; columns are NaN-free
+    // here by construction (coerceToDouble nulls NaN)
     val q13 = graft.analytics.Summary.exactPercentilesHist(
       df, cols.map(c => c -> Seq(0.25, 0.75)))
     val clipped = cols.foldLeft(df) { case (d, c) =>
@@ -204,35 +202,13 @@ object Cleaning {
       }
     }
     // median of every post-clip column
-    val med = graft.analytics.Summary.exactPercentilesHist(
-      clipped, cols.map(c => c -> Seq(0.5)))
-    cols.foldLeft(clipped) { case (d, c) =>
-      med(c).head match {
-        case None => d
-        case Some(m) => d.na.fill(Map(c -> m))
-      }
-    }
+    graft.analytics.Summary.fillMedians(clipped, cols)
   }
 
   private def cleanOneNumericSequential(df: DataFrame, c: String): DataFrame = {
     val fracRow = df.agg(avg(col(c).isNull.cast("double"))).head()
     val frac = if (fracRow.isNullAt(0)) 0.0 else fracRow.getDouble(0)
-    val dropped = if (frac > 0.5) df.na.drop(Seq(c)) else df
-    val q13 = graft.analytics.Summary.exactPercentilesHist(
-      dropped, Seq(c -> Seq(0.25, 0.75)))(c)
-    val clipped = q13.head match {
-      case None => dropped
-      case Some(q1) =>
-        val q3 = q13(1).get
-        val iqr = q3 - q1
-        dropped.withColumn(c, clip(col(c), q1 - 1.5 * iqr, q3 + 1.5 * iqr))
-    }
-    val med = graft.analytics.Summary.exactPercentilesHist(
-      clipped, Seq(c -> Seq(0.5)))(c).head
-    med match {
-      case None => clipped
-      case Some(m) => clipped.na.fill(Map(c -> m))
-    }
+    cleanNumericsFused(if (frac > 0.5) df.na.drop(Seq(c)) else df, Seq(c))
   }
 
   /** C3: `pd.to_numeric(errors='coerce')` analog. Plain `cast` almost

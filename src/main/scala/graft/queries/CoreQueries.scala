@@ -258,9 +258,6 @@ object CoreQueries {
     QueryDef(
       "q07_median_quantiles",
       (s, dir) => {
-        // exact quantiles via the shared histogram-refinement helper
-        // (r11): bit-identical to the percentile aggregate, without its
-        // single-reduce-task merge of every distinct value (guide §2.5)
         val r = graft.analytics.Summary.exactPercentilesHist(
           t(s, dir, "lineitem"), Seq(
             "l_quantity" -> Seq(0.5),
@@ -284,9 +281,7 @@ object CoreQueries {
       "q08_iqr_clip",
       (s, dir) => {
         val li = t(s, dir, "lineitem")
-        // Q1/Q3 via the histogram-refinement helper (r11), inlined as
-        // literals — same doubles, same bound arithmetic, and the second
-        // pass loses its crossJoin(broadcast) wiring
+        // exact Q1/Q3, inlined as literals
         val q13 = graft.analytics.Summary.exactPercentilesHist(
           li, Seq("l_extendedprice" -> Seq(0.25, 0.75)))("l_extendedprice")
         li.withColumn("q1", plit(q13.head))

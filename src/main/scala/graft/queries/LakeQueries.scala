@@ -458,11 +458,10 @@ object LakeQueries {
     QueryDef(
       "q98_approx_quantile_pin",
       (s, dir) => {
-        // r12: exact per-group percentiles via the grouped histogram-
-        // refinement helper (no per-group corpus-sized percentile buffer;
-        // VERDICT r11 #2) — bit-identical values, inlined through a
-        // broadcast 3-row table; the approx sketches stay in the
-        // distributed aggregate over the unchanged scan partitioning
+        // exact per-group percentiles (Summary.exactGroupedPercentilesHist,
+        // bit-identical to the builtin), inlined through a broadcast 3-row
+        // table; the approx sketches stay in the distributed aggregate over
+        // the unchanged scan partitioning
         val li = t(s, dir, "lineitem")
         val ex = graft.analytics.Summary.exactGroupedPercentilesHist(
           li, "l_returnflag",

@@ -18,10 +18,19 @@ class WeightedMedianSpec extends SparkSpec {
       }.get
     }
 
-  private def run(rows: Seq[(String, Double, Long)], nBuckets: Int = 1024) =
-    Summary.weightedMedian(rows.toDF("g", "v", "wt"), "g", "v", "wt",
-        nBuckets = nBuckets)
+  private def run(rows: Seq[(String, Double, Long)]) =
+    Summary.weightedMedian(rows.toDF("g", "v", "wt"), "g", "v", "wt")
       .as[(String, Double)].collect().toMap
+
+  /** The weighted median straight from the kernel (rank ⌊(W−1)/2⌋), and
+    * the path it took.
+    */
+  private def viaKernel(rows: Seq[(String, Double, Long)], nBuckets: Int,
+      driverBytes: Long = OrderStats.defaultDriverBytes): (Map[String, Double], String) = {
+    val (stats, path) = OrderStats(rows.toDF("g", "v", "wt"), Some("g"), Seq("v"),
+      col("wt"), (_, w) => Seq((w - 1) / 2), nBuckets = nBuckets, driverBytes = driverBytes)
+    (stats.map { case (g, st) => g.asInstanceOf[String] -> st.head.at((st.head.n - 1) / 2) }, path)
+  }
 
   test("matches the brute-force definition on mixed groups") {
     val rows = Seq(
@@ -35,6 +44,10 @@ class WeightedMedianSpec extends SparkSpec {
       ("d", -3.25, 5L)
     )
     assert(run(rows) == brute(rows))
+    // a null group key is a group of its own
+    val nullKey = Seq(("a", 1.0, 1L), ("a", 3.0, 2L), (null, 2.0, 1L), (null, 5.0, 3L))
+    assert(run(nullKey) == brute(nullKey))
+    assert(run(nullKey) == Map("a" -> 3.0, (null: String) -> 5.0))
     assert(run(rows)("a") == 2.0) // lower median of {1,2,3,4} unit weights
     assert(run(rows)("b") == 10.0)
     assert(run(rows)("c") == 7.5)
@@ -48,10 +61,17 @@ class WeightedMedianSpec extends SparkSpec {
         (rnd.nextInt(9) + 1).toLong)
     }
     val expect = brute(rows)
-    // small bucket counts force multi-value resolve buckets; 1024 is the
-    // production default
+    // unit weights keep the values: the driver path, and the histogram
+    // path when the budget is 0
+    val unit = rows.map { case (g, v, _) => (g, v, 1L) }
+    val unitExpect = brute(unit)
+    assert(run(rows) == expect && run(unit) == unitExpect)
+    // small bucket counts force multi-value resolve buckets
     for (nb <- Seq(4, 64, 1024)) {
-      assert(run(rows, nb) == expect, s"nBuckets=$nb")
+      assert(viaKernel(rows, nb) == (expect, "histogram"), s"nBuckets=$nb")
+      assert(viaKernel(unit, nb) == (unitExpect, "driver"), s"unit, nBuckets=$nb")
+      assert(viaKernel(unit, nb, driverBytes = 0) == (unitExpect, "histogram"),
+        s"unit, driverBytes=0, nBuckets=$nb")
     }
   }
 
@@ -62,10 +82,10 @@ class WeightedMedianSpec extends SparkSpec {
     val out = Summary.weightedMedian(rows, "g", "v", "wt")
       .as[(String, Double)].collect().toMap
     assert(out == Map("a" -> 1.0)) // weights {1.0→1, 3.0→1}: lower median 1.0
-    val many = spark.range(0, 200).select(col("id").cast("string").as("g"),
+    val many = spark.range(0, OrderStats.MaxGroups + 1).select(col("id").cast("string").as("g"),
       col("id").cast("double").as("v"), lit(1L).as("wt"))
     intercept[IllegalArgumentException] {
-      Summary.weightedMedian(many, "g", "v", "wt", maxGroups = 100)
+      Summary.weightedMedian(many, "g", "v", "wt")
     }
   }
 
