@@ -7,8 +7,8 @@ sorted-row values).
 Usage: python3 scripts/check_oracle.py [sf] [--skip-verify]
                                        [--only q99,q117,...] [--timeout S]
   sf defaults to 0.01 (the driver's correctness tier).
-  --only     compare only the queries whose names start with one of the
-             comma-separated prefixes (graft.Verify still dumps every query).
+  --only     run and compare only the queries whose names start with one of
+             the comma-separated prefixes (passed on to graft.Verify).
   --timeout  run each DuckDB oracle for at most S seconds; an oracle that
              runs out prints TIMEOUT <name>, is not counted as ok, and makes
              the exit status non-zero.
@@ -44,7 +44,7 @@ def selected(name: str) -> bool:
 
 if not args.skip_verify:
     r = subprocess.run(
-        ["sbt", "--client", f"runMain graft.Verify {SFDIR} {OUT}"],
+        ["sbt", "--client", f"runMain graft.Verify {SFDIR} {OUT} " + " ".join(ONLY)],
         capture_output=True, text=True, cwd="/root/repo")
     if "success" not in r.stdout:  # sbt colorizes "[success]"
         print(r.stdout[-3000:], r.stderr[-2000:])

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.etl.Cleaning
 
-import scala.util.Random
-
 /** Gold stage: bootstrap confidence-interval estimation.
   * Mirrors python-service/scripts/monte_carlo.py:237-285: first `maxColumns`
   * numeric columns in schema order, median-filled, ≥21 non-null values,
@@ -14,8 +12,8 @@ import scala.util.Random
   * 2.5th–97.5th percentile (linear interpolation) of the resample means.
   *
   * Two execution strategies behind one result schema:
-  *  - `driverSide` — exact multinomial resampling of a collected column.
-  *    Honest and fast at reference scale (≤ ~1M rows per column).
+  *  - driver side — exact multinomial resampling of the collected
+  *    columns. Honest and fast at reference scale (≤ ~1M rows per column).
   *  - `poisson` — distributed Poisson(1) bootstrap: every partition keeps a
   *    `nSim`-wide running (weightedSum, weight) pair per replicate and a
   *    single treeReduce combines them. One pass over the data for ALL
@@ -23,7 +21,14 @@ import scala.util.Random
   *    100-TB path. Poisson(1) weights approximate multinomial resampling
   *    (classic scale-out bootstrap trick); statistically equivalent CIs.
   *
-  * `apply` picks driver-side below `driverRowLimit` rows, Poisson above.
+  * `apply` sizes the driver path by reading it: one
+  * `limit(driverRowLimit + 1).collect()` of the target columns is both the
+  * gate and the read (the `DriverGraph` pattern). At most `driverRowLimit`
+  * rows come back → the driver fills each column's nulls with its exact
+  * median, sorts it and resamples; that one read replaces the null-count,
+  * median, count and per-column collect passes. One row more → the
+  * Poisson path: median fill, row count (for the `drawBudget` guard),
+  * one pass.
   * RNG differs from NumPy's by construction — parity is statistical
   * (CI-overlap tests, SURVEY.md §5.2), not bitwise.
   */
@@ -72,15 +77,19 @@ object Bootstrap {
     if (cols.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], resultSchema)
-    // cast once up front: driverSide reads with getDouble (a BIGINT column
-    // would ClassCastException) and na.fill would silently truncate a
-    // double median into an integer column
-    val filled = medianFill(
-      df.select(cols.map(c => col(c).cast("double")): _*), cols)
     val target = cols.take(maxColumns)
-    val n = filled.count()
-    if (n <= driverRowLimit) driverSide(spark, filled, target, nSim, seed)
+    // cast once up front: the driver path reads with getDouble (a BIGINT
+    // column would ClassCastException) and na.fill would silently truncate
+    // a double median into an integer column
+    val data = df.select(target.map(c => col(c).cast("double")): _*)
+    // the gate and the read are one collect of at most driverRowLimit + 1 rows
+    val rows = data.limit(
+      math.min(math.max(driverRowLimit, 0L), Int.MaxValue - 2L).toInt + 1).collect()
+    if (rows.length <= driverRowLimit)
+      driverSide(spark, target, target.indices.map(filledSorted(rows, _)), nSim, seed)
     else {
+      val filled = medianFill(data, target)
+      val n = filled.count()
       // LOUD fan-out guard (VERDICT r8 #8): a silently-multiplied input
       // (the ~20× traffic⋈weather merge) must not walk into an
       // hours-long replicate loop — fail naming the knobs instead
@@ -112,33 +121,44 @@ object Bootstrap {
     Summary.fillMedians(df, withNulls)
   }
 
-  /** Exact multinomial bootstrap on collected columns (reference-scale
-    * path). Columns resample in parallel driver threads with a per-column
-    * SplitMix64 stream over the sorted values (deterministic regardless of
-    * scheduling and of the input's row order); the inner
-    * loop is branch-free — ~1ns/draw, so 5000×100k×8 finishes in seconds.
+  /** Column `i` of the driver path's rows, sorted, with its nulls filled by
+    * the column's exact median — the value [[Summary.fillMedians]] would
+    * fill (its kernel reads -0.0 as 0.0, hence the + 0.0). A column with
+    * no values stays empty.
     */
-  def driverSide(
+  private def filledSorted(rows: Array[Row], i: Int): Array[Double] = {
+    val values = rows.iterator.filter(!_.isNullAt(i)).map(_.getDouble(i)).toArray
+    java.util.Arrays.sort(values)
+    val nulls = rows.length - values.length
+    if (nulls == 0 || values.isEmpty) values
+    else {
+      val median = OrderStats.interpolate(values.length, 0.5, r => values(r.toInt) + 0.0)
+      val all = values ++ Array.fill(nulls)(median)
+      java.util.Arrays.sort(all)
+      all
+    }
+  }
+
+  /** Exact multinomial bootstrap of driver-resident columns (the
+    * reference-scale path): `columns(ci)` holds `cols(ci)`'s filled values,
+    * sorted, so the result depends on the column's values only, not on the
+    * row order the upstream shuffle join happened to write. Columns
+    * resample in parallel driver threads with a per-column SplitMix64
+    * stream (deterministic regardless of scheduling); the inner loop is
+    * branch-free — ~1ns/draw, so 5000×100k×8 finishes in seconds.
+    */
+  private def driverSide(
       spark: SparkSession,
-      filled: DataFrame,
       cols: Seq[String],
+      columns: Seq[Array[Double]],
       nSim: Int,
       seed: Long
   ): DataFrame = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val futures = cols.zipWithIndex.map { case (c, ci) =>
+    val futures = cols.zip(columns).zipWithIndex.map { case ((c, values), ci) =>
       Future {
-        val values = filled
-          .select(col(c))
-          .filter(col(c).isNotNull)
-          .collect()
-          .map(_.getDouble(0))
-        // resampling draws by index: sorting first makes the result depend
-        // on the column's values only, not on the row order the upstream
-        // shuffle join happened to write
-        java.util.Arrays.sort(values)
         if (values.length <= 20) None // monte_carlo.py:271
         else {
           var state = seed + 0x9E3779B97F4A7C15L * (ci + 1)
@@ -258,7 +278,7 @@ object Bootstrap {
     * Statistically this is the classic Poisson(1) bootstrap (weights
     * approximate multinomial resampling); BootstrapSpec pins CI overlap
     * against the exact multinomial path. The seeded-RNG [[poisson]]/
-    * [[driverSide]] paths stay the production forms (x41 channel).
+    * driver-side paths stay the production forms (x41 channel).
     *
     * Scale shape: ONE scan computes row hashes + quantized values; the
     * row×replicate expansion is a broadcast cross-join consumed map-side
@@ -535,14 +555,6 @@ object Bootstrap {
       if (wts(ci).forall(_ <= 20)) None else Some(statsRow(c, means, nSim))
     }
     toDF(spark, rows)
-  }
-
-  private def poissonDraw(rng: Random): Int = {
-    // Knuth, λ=1: L = e^-1
-    val L = 0.36787944117144233
-    var k = 0; var p = 1.0
-    while ({ p *= rng.nextDouble(); p > L }) k += 1
-    k
   }
 
   private def statsRow(name: String, means: Array[Double], nSim: Int): Row = {

@@ -14,8 +14,9 @@ import graft.etl.Cleaning
   * same update depends on the data ONLY through the d×d MLE covariance S:
   * the singular values/vectors of X·diag(1/(√ψ·√n)) are exactly the
   * eigenpairs of Ψ^{-1/2} S Ψ^{-1/2}. So we compute (n, μ, S) in ONE
-  * distributed pass (treeAggregate of outer products — d ≤ tens, so the d×d
-  * state is tiny) and run the EM/eigen iteration on the driver with Breeze.
+  * distributed aggregate (sums of outer products — d ≤ tens, so the d×d
+  * state is tiny; `prepare` shares it with the low-variance filter) and
+  * run the EM/eigen iteration on the driver with Breeze.
   * Data never leaves the cluster; the driver handles an 11×11 matrix.
   *
   * Scores are the posterior means E[z|x] = (x−μ)ᵀ Ψ⁻¹W̃ᵀ(I + W̃Ψ⁻¹W̃ᵀ)⁻¹ —
@@ -40,65 +41,55 @@ object FactorAnalysisEM {
 
   private val Small = 1e-12 // sklearn SMALL
 
+  /** The EM's input: the kept columns (in schema order), their medians
+    * and the sufficient statistics n, mean and MLE covariance (÷n) of the
+    * median-filled kept columns.
+    */
+  final case class Prepared(
+      cols: Seq[String],
+      medians: Seq[Double],
+      n: Long,
+      mean: DenseVector[Double],
+      cov: DenseMatrix[Double])
+
   /** Numeric subset → median-impute → drop near-constant (std ≤ 0.01,
     * sample std like pandas .std()): factor_analysis.py:178-185.
-    * Also returns the per-kept-column median so `transform` imputes the
-    * same way fit did (sklearn scores the median-filled matrix).
-    */
-  def prepare(df: DataFrame): (DataFrame, Seq[String], Seq[Double]) = {
-    val numeric = Cleaning.numericCols(df)
-    if (numeric.isEmpty) return (df.select(), Seq.empty, Seq.empty)
-    val sub = df.select(numeric.map(col): _*)
-    val medExprs = numeric.map(c => percentile(col(c).cast("double"), lit(0.5)))
-    val medRow = sub.agg(medExprs.head, medExprs.tail: _*).head()
-    val medians = numeric.indices.map(i =>
-      if (medRow.isNullAt(i)) 0.0 else medRow.getDouble(i))
-    val filled = numeric.zipWithIndex.foldLeft(sub) { case (d, (c, i)) =>
-      if (medRow.isNullAt(i)) d else d.na.fill(Map(c -> medians(i)))
-    }
-    val stdExprs = numeric.map(c => stddev_samp(col(c)))
-    val stds = filled.agg(stdExprs.head, stdExprs.tail: _*).head()
-    val keptIdx = numeric.indices.filter(i =>
-      !stds.isNullAt(i) && stds.getDouble(i) > 0.01)
-    val kept = keptIdx.map(numeric)
-    (filled.select(kept.map(col): _*), kept, keptIdx.map(medians))
-  }
-
-  /** Distributed sufficient statistics: n, mean, MLE covariance (÷n).
+    * The medians are the per-kept-column impute values, so `transform`
+    * imputes the same way fit did (sklearn scores the median-filled matrix).
     *
-    * One declarative aggregate pass: count + d column sums + d(d+1)/2
-    * product sums, all inside whole-stage codegen over the columnar scan
-    * with map-side partial aggregation. (The earlier formulation dropped to
-    * an RDD mapPartitions/treeReduce — correct, but it forces
-    * InternalRow→Row conversion and abandons codegen and vectorized
-    * reading. Same values, same null→0.0 coercion.)
+    * Two passes over the data: one [[OrderStats]] scan gives every
+    * numeric column's median (the builtin `percentile`'s value on NaN-free
+    * columns, -0.0 read as 0.0), and one declarative aggregate over the filled
+    * columns gives each column's sample std together with the moments —
+    * count, d column sums and d(d+1)/2 product sums, inside whole-stage
+    * codegen with map-side partial aggregation. The kept columns' moments
+    * are read out of it; the sums of a column do not depend on which
+    * other columns share the aggregate.
     */
-  def momentStats(df: DataFrame, cols: Seq[String])
-      : (Long, DenseVector[Double], DenseMatrix[Double]) = {
-    val d = cols.length
-    val x = cols.map(c => coalesce(col(c).cast("double"), lit(0.0)))
-    val sumExprs = (0 until d).map(i => sum(x(i)))
-    val prodExprs = for { i <- 0 until d; j <- 0 to i } yield sum(x(i) * x(j))
-    val aggs = count(lit(1)) +: (sumExprs ++ prodExprs)
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val n = row.getLong(0)
-    require(n > 0, "momentStats on empty input")
-    def at(k: Int): Double = if (row.isNullAt(k)) 0.0 else row.getDouble(k)
-    val mean = DenseVector(Array.tabulate(d)(i => at(1 + i) / n))
-    val cov = DenseMatrix.zeros[Double](d, d)
-    var idx = 1 + d
-    var i = 0
-    while (i < d) {
-      var j = 0
-      while (j <= i) {
-        val v = at(idx) / n - mean(i) * mean(j)
-        cov(i, j) = v; cov(j, i) = v
-        idx += 1
-        j += 1
-      }
-      i += 1
+  def prepare(df: DataFrame): Prepared = {
+    val numeric = Cleaning.numericCols(df)
+    if (numeric.isEmpty)
+      return Prepared(Nil, Nil, 0L, DenseVector.zeros[Double](0), DenseMatrix.zeros[Double](0, 0))
+    val sub = df.select(numeric.map(col): _*)
+    val med = Summary.exactPercentilesHist(sub, numeric.map(_ -> Seq(0.5)))
+    val medians = numeric.map(c => med(c).head)
+    val filled = numeric.zip(medians).foldLeft(sub) { case (d, (c, m)) =>
+      m.fold(d)(v => d.na.fill(Map(c -> v)))
     }
-    (n, mean, cov)
+    val d = numeric.length
+    val x = numeric.map(c => coalesce(col(c).cast("double"), lit(0.0)))
+    val aggs = count(lit(1)) +: (numeric.map(c => stddev_samp(col(c))) ++
+      x.map(sum) ++ (for { i <- 0 until d; j <- 0 to i } yield sum(x(i) * x(j))))
+    val row = filled.agg(aggs.head, aggs.tail: _*).head()
+    val n = row.getLong(0)
+    def at(k: Int): Double = if (row.isNullAt(k)) 0.0 else row.getDouble(k)
+    val kept = (0 until d).filter(i => !row.isNullAt(1 + i) && row.getDouble(1 + i) > 0.01)
+    val mean = DenseVector(kept.map(i => at(1 + d + i) / n).toArray)
+    val cov = DenseMatrix.tabulate(kept.length, kept.length) { (a, b) =>
+      val (i, j) = (math.max(kept(a), kept(b)), math.min(kept(a), kept(b)))
+      at(1 + 2 * d + i * (i + 1) / 2 + j) / n - mean(math.max(a, b)) * mean(math.min(a, b))
+    }
+    Prepared(kept.map(numeric), kept.map(i => medians(i).getOrElse(0.0)), n, mean, cov)
   }
 
   /** Covariance-based EM, faithful to sklearn's update & stopping rule
@@ -111,10 +102,9 @@ object FactorAnalysisEM {
       tol: Double = 1e-2,
       maxIter: Int = 1000
   ): FAModel = {
-    val (prepared, cols, medians) = prepare(df)
+    val Prepared(cols, medians, n, mean, cov) = prepare(df)
     require(cols.nonEmpty, "no usable numeric columns for factor analysis")
     val k = math.min(nComponents, cols.length - 1).max(1)
-    val (n, mean, cov) = momentStats(prepared, cols)
     val d = cols.length
     val varDiag = diag(cov).copy // np.var(X, axis=0), ddof=0
     val llconst = d * math.log(2 * math.Pi) + k

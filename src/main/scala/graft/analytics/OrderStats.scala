@@ -17,9 +17,11 @@ import scala.jdk.CollectionConverters._
   * Input: a frame, an optional group column, value columns (cast to
   * double, nulls ignored), a positive long weight column (percentiles
   * pass `lit(1L)`) and a rank function `(column, n) → 0-based ranks`.
-  * Output, per group and column: n = Σw over the non-null values and the
-  * value at each requested rank of the weighted multiset (each value
-  * repeated w times). Spark's builtin `percentile` buffers every distinct
+  * Output, per group and column: n = Σw over the non-null values, the
+  * group's row weight Σw over every row (null values included, so a
+  * caller reads null fractions from the same scan) and the value at each
+  * requested rank of the weighted multiset (each value repeated w times).
+  * Spark's builtin `percentile` buffers every distinct
   * value of a group into one aggregate merged in a single reduce task;
   * here:
   *   1. one fused, shuffle-free scan collects per (group, column) Σw, min
@@ -72,13 +74,17 @@ private[graft] object OrderStats {
     if (maxResult > 0) math.min(heap, maxResult / 2) else heap
   }
 
-  /** One (group, column) answer: n = Σw and the value at each asked rank. */
-  final case class Stat(n: Long, at: Map[Long, Double])
+  /** One (group, column) answer: n = Σw over the non-null values, `rows` =
+    * Σw over all of the group's rows (-1 when `boundsIn` skipped pass 1)
+    * and the value at each asked rank.
+    */
+  final case class Stat(n: Long, rows: Long, at: Map[Long, Double])
 
   /** One group's pass-1 state, a slot per column; `vals` is null once
     * dropped.
     */
   private final class Acc(k: Int) extends Serializable {
+    var rows = 0L
     val n = new Array[Long](k)
     val lo: Array[Double] = Array.fill(k)(Double.PositiveInfinity)
     val hi: Array[Double] = Array.fill(k)(Double.NegativeInfinity)
@@ -112,8 +118,9 @@ private[graft] object OrderStats {
     require(boundsIn.isEmpty || group.isEmpty, "boundsIn is for the ungrouped call")
     val k = values.length
     // the passes run straight over the caller's frame: callers with an
-    // expensive derived lineage cache/checkpoint it themselves (the
-    // cleaning stage checkpoints its coerced frame), and for the common
+    // expensive derived lineage materialize it themselves (Cleaning.clean
+    // checkpoints its deduped, dated, coerced frame once for the modes
+    // pass, this scan and the write), and for the common
     // raw-scan callers a narrow checkpoint here was measured as a pure
     // LOSS at 100× (writing rows×k doubles to executor storage cost more
     // than three parquet re-scans)
@@ -129,6 +136,7 @@ private[graft] object OrderStats {
           boundsPass(rows, narrow.schema("_g").dataType, grouped = false, k, driverBytes)
         else {
           val a = new Acc(k)
+          a.rows = -1
           b.zipWithIndex.foreach { case ((n, lo, hi), i) =>
             a.n(i) = n; a.lo(i) = lo.getOrElse(0.0); a.hi(i) = hi.getOrElse(0.0)
           }
@@ -154,7 +162,7 @@ private[graft] object OrderStats {
     }
     (groups.map { case (g, a) =>
       g -> IndexedSeq.tabulate(k) { i =>
-        Stat(a.n(i), ranks(i, a.n(i)).map(r => r -> read(g, i, r)).toMap)
+        Stat(a.n(i), a.rows, ranks(i, a.n(i)).map(r => r -> read(g, i, r)).toMap)
       }
     }, path)
   }
@@ -206,6 +214,7 @@ private[graft] object OrderStats {
           }
         val w = row.getLong(1)
         if (kept && w != 1L) drop()
+        a.rows += w
         var i = 0
         while (i < k) {
           if (!row.isNullAt(2 + i)) {
@@ -246,6 +255,7 @@ private[graft] object OrderStats {
     for (p <- parts; (key, a) <- p.keys.zip(p.accs)) {
       val g = toScala(key)
       val m = groups.getOrElseUpdate(g, new Acc(k))
+      m.rows += a.rows
       for (i <- 0 until k) {
         m.n(i) += a.n(i)
         m.lo(i) = math.min(m.lo(i), a.lo(i))

@@ -4,14 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType, TimestampType}
+import graft.analytics.OrderStats
 
 /** Reusable cleaning operators.
   *
   * Semantics mirror the reference's pandas cleaning stages
   * (python-service/scripts/clean_traffic.py:41-148, clean_weather.py:25-109)
-  * but each stat pass is fused into a single multi-aggregate scan instead of
-  * pandas' one-scan-per-statistic loop — at 100 TB the difference is ~4 scans
-  * vs ~20.
+  * but the numeric statistics of every column come from one scan instead of
+  * pandas' one-scan-per-statistic loop — at 100 TB the difference is ~3
+  * scans (modes, statistics, write) vs ~20.
   *
   * Order is part of the semantics (SURVEY.md §3 E2): dedup happens before the
   * timestamp drop; IQR bounds are computed on the post-drop pre-clip column;
@@ -152,64 +153,73 @@ object Cleaning {
     * definition as pandas); median-fill the post-clip column.
     *
     * The common case (no column exceeds the 50% null threshold, which never
-    * fires on the reference's ~5%-null generators) runs in exactly THREE
-    * scans regardless of column count: null-fractions, all Q1/Q3s, all
-    * post-clip medians. If a drop does fire we fall back to strictly
-    * sequential per-column processing, because a row drop changes every
-    * later column's quantiles (pandas processes columns in order).
+    * fires on the reference's ~5%-null generators) runs ONE statistics scan
+    * regardless of column count: one [[OrderStats]] call returns every
+    * column's non-null count, the row count (so the null fractions), and
+    * the order statistics at the Q1, median and Q3 ranks. The post-clip
+    * median needs no second pass: clip is monotone, so the k-th smallest
+    * clipped value is clip(k-th smallest value), and the post-clip median
+    * is `interpolate(clip(v_lo), clip(v_hi))` over the pre-clip ranks —
+    * the same bits as a percentile over the clipped column, on both kernel
+    * paths. If a drop does fire we fall back to strictly sequential
+    * per-column processing (one scan per column, two where it drops),
+    * because a row drop changes every later column's quantiles (pandas
+    * processes columns in order).
     * (reference: clean_traffic.py:101-131, clean_weather.py:66-91)
+    *
+    * The input is not materialized here: the statistics scan and the
+    * consumer each read the caller's lineage ([[clean]] checkpoints it).
+    * `driverBytes` is the kernel's driver byte budget; 0 forces its
+    * histogram path.
     */
-  def cleanNumerics(df: DataFrame, cols: Seq[String]): DataFrame = {
+  def cleanNumerics(
+      df: DataFrame,
+      cols: Seq[String],
+      driverBytes: Long = OrderStats.defaultDriverBytes
+  ): DataFrame = {
     val present = cols.filter(df.columns.contains)
-    if (present.isEmpty) return df
-    // LAZY checkpoint (r11): the numeric stage is inherently multi-pass
-    // (null fractions, Q1/Q3, post-clip medians, then the consumer), and
-    // the upstream clean lineage (keep-first window, multi-format
-    // timestamp parse) re-executed on every pass. The first aggregate
-    // materializes the frame into spillable executor storage; every later
-    // pass reads the cache. At true lake scale the medallion pipeline
-    // persists this stage as parquet anyway (Pipeline.scala), so the
-    // in-memory cache only ever holds interactive-sized tables.
-    val coerced = present.foldLeft(df)((d, c) =>
-      d.withColumn(c, coerceToDouble(col(c)))
-    ).localCheckpoint(false)
-    val fracRow = coerced
-      .agg(
-        avg(col(present.head).isNull.cast("double")).as("f0"),
-        present.tail.map(c => avg(col(c).isNull.cast("double"))): _*
-      )
-      .head()
-    val nullFrac = present.indices.map(i =>
-      present(i) -> (if (fracRow.isNullAt(i)) 0.0 else fracRow.getDouble(i))
-    ).toMap // avg over an empty frame is null → treat as no nulls
-    if (present.exists(c => nullFrac(c) > 0.5))
-      present.foldLeft(coerced)(cleanOneNumericSequential)
-    else cleanNumericsFused(coerced, present)
+    if (present.isEmpty) df
+    else cleanCoerced(coerceNumerics(df, present), present, driverBytes)
   }
 
-  private def cleanNumericsFused(df: DataFrame, cols: Seq[String]): DataFrame = {
-    // exact Q1/Q3 of every column in one helper call; columns are NaN-free
-    // here by construction (coerceToDouble nulls NaN)
-    val q13 = graft.analytics.Summary.exactPercentilesHist(
-      df, cols.map(c => c -> Seq(0.25, 0.75)))
-    val clipped = cols.foldLeft(df) { case (d, c) =>
-      q13(c).head match {
-        case None => d // all-null column: pandas clip(NaN, NaN) is a no-op
-        case Some(q1) =>
-          val q3 = q13(c)(1).get
-          val iqr = q3 - q1
-          d.withColumn(c, clip(col(c), q1 - 1.5 * iqr, q3 + 1.5 * iqr))
+  private def coerceNumerics(df: DataFrame, cols: Seq[String]): DataFrame =
+    cols.foldLeft(df)((d, c) => d.withColumn(c, coerceToDouble(col(c))))
+
+  private def cleanCoerced(df: DataFrame, cols: Seq[String], driverBytes: Long): DataFrame = {
+    def stats(d: DataFrame, cs: Seq[String]): Seq[OrderStats.Stat] =
+      OrderStats(d, None, cs, lit(1L),
+        (_, n) => OrderStats.neededRanks(n, Seq(0.25, 0.5, 0.75)),
+        driverBytes = driverBytes)._1(0)
+    def sparse(s: OrderStats.Stat): Boolean = 2 * (s.rows - s.n) > s.rows // >50% null
+    val all = stats(df, cols)
+    if (!all.exists(sparse)) cols.zip(all).foldLeft(df) { case (d, (c, s)) => clipAndFill(d, c, s) }
+    else cols.foldLeft(df) { (d, c) =>
+      val s = stats(d, Seq(c)).head
+      if (!sparse(s)) clipAndFill(d, c, s)
+      else {
+        val kept = d.na.drop(Seq(c))
+        clipAndFill(kept, c, stats(kept, Seq(c)).head)
       }
     }
-    // median of every post-clip column
-    graft.analytics.Summary.fillMedians(clipped, cols)
   }
 
-  private def cleanOneNumericSequential(df: DataFrame, c: String): DataFrame = {
-    val fracRow = df.agg(avg(col(c).isNull.cast("double"))).head()
-    val frac = if (fracRow.isNullAt(0)) 0.0 else fracRow.getDouble(0)
-    cleanNumericsFused(if (frac > 0.5) df.na.drop(Seq(c)) else df, Seq(c))
-  }
+  /** Clip `c` to its IQR fences and fill its nulls with the post-clip
+    * median, both from `s` (a column without values is left as it is:
+    * pandas' clip(NaN, NaN) is a no-op and its median is NaN).
+    */
+  private def clipAndFill(df: DataFrame, c: String, s: OrderStats.Stat): DataFrame =
+    if (s.n == 0) df
+    else {
+      val q1 = OrderStats.interpolate(s.n, 0.25, s.at)
+      val q3 = OrderStats.interpolate(s.n, 0.75, s.at)
+      val iqr = q3 - q1
+      val (lo, hi) = (q1 - 1.5 * iqr, q3 + 1.5 * iqr)
+      // + 0.0: the kernel reads -0.0 as 0.0, and so would a scan of the
+      // clipped column
+      val median = OrderStats.interpolate(s.n, 0.5,
+        r => math.min(math.max(s.at(r), lo), hi) + 0.0)
+      df.withColumn(c, clip(col(c), lo, hi)).na.fill(Map(c -> median))
+    }
 
   /** C3: `pd.to_numeric(errors='coerce')` analog. Plain `cast` almost
     * matches (garbage → null under non-ANSI), EXCEPT the string "NaN", which
@@ -238,10 +248,18 @@ object Cleaning {
 
   /** Full clean stage (E2 trace, SURVEY.md §3): dedup-keep-first → parse
     * timestamps & drop unparseable → mode-fill categoricals → numeric
-    * coerce/clip/fill. The intermediate (post-drop) frame is cached because
-    * the stat passes scan it repeatedly.
+    * coerce/clip/fill. The deduped, dated frame, numerics already coerced,
+    * is materialized once (a lazy local checkpoint) and then read three
+    * times: by the modes pass, by the one statistics scan of
+    * [[cleanNumerics]] and by the consumer. Coercing before the mode fill
+    * is safe because the categorical and numeric column sets are disjoint.
+    * The checkpoint keeps AQE's coalesced partitions of the dedup shuffle,
+    * so the consumer writes files of AQE's advisory size (one file per
+    * table at reference scale) rather than one per shuffle partition.
     */
   def clean(raw: DataFrame, cfg: CleanConfig): DataFrame = {
+    require(cfg.categoricalCols.intersect(cfg.numericCols).isEmpty,
+      "a column cannot be both categorical and numeric")
     val deduped = dedupKeepFirst(withSrcOrder(raw), cfg.keyCol)
     val parsed =
       if (
@@ -253,14 +271,14 @@ object Cleaning {
           cfg.timestampCol,
           parseMessyTimestamp(col(cfg.timestampCol))
         )
-    val dated = parsed.filter(col(cfg.timestampCol).isNotNull).cache()
-    try {
-      val catFilled = fillCategoricalsWithMode(dated, cfg.categoricalCols)
-      cleanNumerics(catFilled, cfg.numericCols).drop(SrcOrder)
-    } finally {
-      // lazily unpersisted; blocking=false keeps the returned plan usable
-      dated.unpersist(false)
-      ()
-    }
+    val numeric = cfg.numericCols.filter(parsed.columns.contains)
+    val coerced = coerceNumerics(
+      parsed.filter(col(cfg.timestampCol).isNotNull), numeric
+    ).localCheckpoint(false)
+    val catFilled = fillCategoricalsWithMode(coerced, cfg.categoricalCols)
+    val cleaned =
+      if (numeric.isEmpty) catFilled
+      else cleanCoerced(catFilled, numeric, OrderStats.defaultDriverBytes)
+    cleaned.drop(SrcOrder)
   }
 }

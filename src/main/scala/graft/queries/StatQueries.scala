@@ -123,8 +123,7 @@ object StatQueries {
       (s, dir) => {
         val cols = Seq("l_quantity", "l_discount", "l_tax")
         val df = t(s, dir, "lineitem").select(cols.map(col): _*)
-        val (prepared, kept, _) = FactorAnalysisEM.prepare(df)
-        val (n, mean, cov) = FactorAnalysisEM.momentStats(prepared, kept)
+        val FactorAnalysisEM.Prepared(kept, _, n, mean, cov) = FactorAnalysisEM.prepare(df)
         def r6(x: Double): Double =
           BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         import s.implicits._

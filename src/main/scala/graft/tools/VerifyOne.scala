@@ -1,43 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{GraftSession, SparkEntry}
-import java.nio.file.{Files, Paths}
-
-/** Verify a NAMED SUBSET of queries (same dump format as graft.Verify) —
-  * the per-query iteration loop behind scripts/spot_check.py; the full
-  * graft.Verify pass stays the official gate.
+/** Verify a NAMED SUBSET of queries — `graft.Verify` with query-name
+  * prefixes (same dump format); the loop behind scripts/spot_check.py.
   * Usage: runMain graft.tools.VerifyOne <sfDir> <outDir> <query> [...]
   */
 object VerifyOne {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    val names = args.drop(2)
-    val spark = GraftSession
-      .configure(SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", 8))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      println(s"[verify-one] dumped $name")
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.view.filterKeys(names.contains)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = graft.Verify.main(args)
 }

@@ -88,7 +88,8 @@ class AnalyticsGoldenSpec extends SparkSpec {
     val cols = Seq("vehicle_count", "humidity")
     val sub = merged.select(cols.map(col): _*)
     val filled = Bootstrap.medianFill(sub, cols)
-    val a = Bootstrap.driverSide(spark, filled, cols, nSim = 800, seed = 1)
+    // under driverRowLimit: the driver-side path
+    val a = Bootstrap(spark, sub, nSim = 800, seed = 1)
       .collect().map(r => r.getString(0) -> r).toMap
     val b = Bootstrap.poisson(spark, filled, cols, nSim = 800, seed = 2)
       .collect().map(r => r.getString(0) -> r).toMap
@@ -107,12 +108,9 @@ class AnalyticsGoldenSpec extends SparkSpec {
         col("l_quantity"), col("l_extendedprice")),
       "rk", nSim = 500)
       .collect().map(r => r.getString(0) -> r).toMap
-    val filled = Bootstrap.medianFill(
-      li.select(col("l_quantity").cast("double"),
-        col("l_extendedprice").cast("double")),
-      Seq("l_quantity", "l_extendedprice"))
-    val b = Bootstrap.driverSide(spark, filled,
-      Seq("l_quantity", "l_extendedprice"), nSim = 500, seed = 7)
+    // under driverRowLimit: the driver-side path
+    val b = Bootstrap(spark, li.select("l_quantity", "l_extendedprice"),
+      nSim = 500, seed = 7)
       .collect().map(r => r.getString(0) -> r).toMap
     Seq("l_quantity", "l_extendedprice").foreach { c =>
       val (ra, rb) = (a(c), b(c))
