@@ -38,10 +38,9 @@ object Pipeline {
     *   bootstrap (VERDICT r8 #8): the MERGED row count is measured first
     *   and nSim derated (with a warning) so the ~20× merge fan-out can
     *   never silently walk the replicate loop into hours of work. Which
-    *   bootstrap path runs is not decided here: `Bootstrap` reads at most
-    *   `driverRowLimit + 1` merged rows in one job, resamples them on the
-    *   driver when they are all there is, and runs the Poisson pass
-    *   otherwise.
+    *   bootstrap path runs is not decided here: `Bootstrap` counts the
+    *   merged rows, reads and resamples them on the driver when there are
+    *   at most `driverRowLimit`, and runs the Poisson pass otherwise.
     */
   def run(spark: SparkSession, lake: LakePaths,
       generate: Boolean = true, nRows: Long = 5000,

@@ -161,46 +161,44 @@ object Cleaning {
     * clipped value is clip(k-th smallest value), and the post-clip median
     * is `interpolate(clip(v_lo), clip(v_hi))` over the pre-clip ranks —
     * the same bits as a percentile over the clipped column, on both kernel
-    * paths. If a drop does fire we fall back to strictly sequential
-    * per-column processing (one scan per column, two where it drops),
-    * because a row drop changes every later column's quantiles (pandas
-    * processes columns in order).
+    * paths. If a drop does fire, that column is scanned again over the
+    * kept rows and every later column gets a scan of its own, because a
+    * row drop changes every later column's quantiles (pandas processes
+    * columns in order).
     * (reference: clean_traffic.py:101-131, clean_weather.py:66-91)
     *
     * The input is not materialized here: the statistics scan and the
     * consumer each read the caller's lineage ([[clean]] checkpoints it).
-    * `driverBytes` is the kernel's driver byte budget; 0 forces its
-    * histogram path.
     */
-  def cleanNumerics(
-      df: DataFrame,
-      cols: Seq[String],
-      driverBytes: Long = OrderStats.defaultDriverBytes
-  ): DataFrame = {
+  def cleanNumerics(df: DataFrame, cols: Seq[String]): DataFrame = {
     val present = cols.filter(df.columns.contains)
     if (present.isEmpty) df
-    else cleanCoerced(coerceNumerics(df, present), present, driverBytes)
+    else cleanCoerced(coerceNumerics(df, present), present, OrderStats.defaultDriverBytes)
   }
 
   private def coerceNumerics(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df)((d, c) => d.withColumn(c, coerceToDouble(col(c))))
 
-  private def cleanCoerced(df: DataFrame, cols: Seq[String], driverBytes: Long): DataFrame = {
+  /** [[cleanNumerics]] over already coerced columns. `driverBytes` is the
+    * kernel's driver byte budget; 0 forces its histogram path. Until a
+    * column drops rows, each column's statistics are those of the one scan
+    * (clipping and filling other columns changes neither its values nor
+    * the row count).
+    */
+  private[graft] def cleanCoerced(df: DataFrame, cols: Seq[String], driverBytes: Long): DataFrame = {
     def stats(d: DataFrame, cs: Seq[String]): Seq[OrderStats.Stat] =
       OrderStats(d, None, cs, lit(1L),
         (_, n) => OrderStats.neededRanks(n, Seq(0.25, 0.5, 0.75)),
         driverBytes = driverBytes)._1(0)
     def sparse(s: OrderStats.Stat): Boolean = 2 * (s.rows - s.n) > s.rows // >50% null
-    val all = stats(df, cols)
-    if (!all.exists(sparse)) cols.zip(all).foldLeft(df) { case (d, (c, s)) => clipAndFill(d, c, s) }
-    else cols.foldLeft(df) { (d, c) =>
-      val s = stats(d, Seq(c)).head
-      if (!sparse(s)) clipAndFill(d, c, s)
+    cols.zip(stats(df, cols)).foldLeft((df, false)) { case ((d, dropped), (c, first)) =>
+      val s = if (dropped) stats(d, Seq(c)).head else first
+      if (!sparse(s)) (clipAndFill(d, c, s), dropped)
       else {
         val kept = d.na.drop(Seq(c))
-        clipAndFill(kept, c, stats(kept, Seq(c)).head)
+        (clipAndFill(kept, c, stats(kept, Seq(c)).head), true)
       }
-    }
+    }._1
   }
 
   /** Clip `c` to its IQR fences and fill its nulls with the post-clip

@@ -13,8 +13,8 @@ import org.scalacheck.rng.Seed
   * fractions, builtin `percentile` Q1/Q3, `clip`, then a builtin median of
   * the clipped column as the fill; columns in order, one at a time, when
   * one is over half null. The clean runs on both kernel paths (the default
-  * driver budget, and `driverBytes = 0` for the histogram path), and all
-  * three outputs must agree bit for bit. The builtin keeps -0.0 apart from
+  * driver budget, and [[Cleaning.cleanCoerced]] with `driverBytes = 0` for
+  * the histogram path), and all three outputs must agree bit for bit. The builtin keeps -0.0 apart from
   * 0.0 where the kernel reads it as 0.0, so the reference adds 0.0 to each
   * builtin answer.
   */
@@ -49,9 +49,10 @@ class CleanStatsSpec extends SparkSpec {
       clipped.na.fill(Map(c -> builtin(clipped, c, 0.5).get))
   }
 
-  /** The reference and whether it took the sequential path. */
-  private def reference(df: DataFrame, cols: Seq[String]): (DataFrame, Boolean) = {
-    val coerced = cols.foldLeft(df)((d, c) => d.withColumn(c, Cleaning.coerceToDouble(col(c))))
+  /** The reference over coerced columns, and whether it took the
+    * sequential path.
+    */
+  private def reference(coerced: DataFrame, cols: Seq[String]): (DataFrame, Boolean) = {
     if (cols.forall(c => nullFrac(coerced, c) <= 0.5)) (cols.foldLeft(coerced)(clipFill), false)
     else (cols.foldLeft(coerced) { (d, c) =>
       clipFill(if (nullFrac(d, c) > 0.5) d.na.drop(Seq(c)) else d, c)
@@ -67,10 +68,11 @@ class CleanStatsSpec extends SparkSpec {
   /** Checks one frame; returns whether the reference ran sequentially. */
   private def check(df: DataFrame, label: String): Boolean = {
     val cols = df.columns.toSeq.filter(_ != "id")
-    val (ref, sequential) = reference(df, cols)
+    val coerced = cols.foldLeft(df)((d, c) => d.withColumn(c, Cleaning.coerceToDouble(col(c))))
+    val (ref, sequential) = reference(coerced, cols)
     val want = bits(ref)
     assert(bits(Cleaning.cleanNumerics(df, cols)) == want, s"$label: driver path")
-    assert(bits(Cleaning.cleanNumerics(df, cols, driverBytes = 0L)) == want,
+    assert(bits(Cleaning.cleanCoerced(coerced, cols, driverBytes = 0L)) == want,
       s"$label: histogram path")
     sequential
   }
