@@ -37,10 +37,9 @@ object Pipeline {
     * @param bootstrapDrawBudget slot-update ceiling for the gold
     *   bootstrap (VERDICT r8 #8): the MERGED row count is measured first
     *   and nSim derated (with a warning) so the ~20× merge fan-out can
-    *   never silently walk the replicate loop into hours of work. Which
-    *   bootstrap path runs is not decided here: `Bootstrap` counts the
-    *   merged rows, reads and resamples them on the driver when there are
-    *   at most `driverRowLimit`, and runs the Poisson pass otherwise.
+    *   never silently walk the replicate loop into hours of work. The
+    *   same count is `Bootstrap`'s gate: merged rows within the one
+    *   `DriverBudget` are resampled on the driver, more by a Poisson pass.
     */
   def run(spark: SparkSession, lake: LakePaths,
       generate: Boolean = true, nRows: Long = 5000,
@@ -109,7 +108,8 @@ object Pipeline {
         s"budget=$bootstrapDrawBudget (the ~20x merge fan-out; raise " +
         s"bootstrapDrawBudget to keep nSim=5000 deliberately)")
     Layers.writeParquet(
-      Bootstrap(spark, merged, nSim = nSim, drawBudget = bootstrapDrawBudget),
+      Bootstrap.counted(spark, merged, mergedRows, nSim = nSim, maxColumns = 8,
+        seed = 42L, drawBudget = bootstrapDrawBudget),
       lake.gold("monte_carlo_results.parquet"))
     merged.unpersist()
     ()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.etl.Cleaning
+import graft.util.DriverBudget
 
 /** Gold stage: bootstrap confidence-interval estimation.
   * Mirrors python-service/scripts/monte_carlo.py:237-285: first `maxColumns`
@@ -22,12 +23,11 @@ import graft.etl.Cleaning
   *    (classic scale-out bootstrap trick); statistically equivalent CIs.
   *
   * `apply` sizes the driver path with one `count()` of the input, which
-  * is also the Poisson path's row count for the `drawBudget` guard. At
-  * most `driverRowLimit` rows → one `collect()` of the target columns;
-  * the driver fills each column's nulls with its exact median, sorts it
-  * and resamples. One row more → the Poisson path: median fill, one pass.
-  * The input is counted rather than read up to the limit, so a frame past
-  * the gate ships no rows to the driver.
+  * is also the Poisson path's row count for the `drawBudget` guard. Rows
+  * within the one [[graft.util.DriverBudget]] → one `collect()` of the
+  * target columns; the driver fills each column's nulls with its exact
+  * median, sorts it and resamples. One row more → the Poisson path: median
+  * fill, one pass. A frame past the gate ships no rows to the driver.
   * RNG differs from NumPy's by construction — parity is statistical
   * (CI-overlap tests, SURVEY.md §5.2), not bitwise.
   */
@@ -69,9 +69,12 @@ object Bootstrap {
       nSim: Int = 5000,
       maxColumns: Int = 8,
       seed: Long = 42L,
-      driverRowLimit: Long = 200000L,
       drawBudget: Long = DefaultDrawBudget
-  ): DataFrame = {
+  ): DataFrame = counted(spark, df, df.count(), nSim, maxColumns, seed, drawBudget)
+
+  /** [[apply]] over `df` of `rows` rows (Pipeline's own count). */
+  private[graft] def counted(spark: SparkSession, df: DataFrame, rows: => Long,
+      nSim: Int, maxColumns: Int, seed: Long, drawBudget: Long): DataFrame = {
     val cols = Cleaning.numericCols(df)
     if (cols.isEmpty)
       return spark.createDataFrame(
@@ -83,8 +86,8 @@ object Bootstrap {
     val data = df.select(target.map(c => col(c).cast("double")): _*)
     // one count is the gate and the Poisson path's row count; the rows are
     // read only when they fit the driver
-    val n = data.count()
-    if (n <= driverRowLimit)
+    val n = rows
+    if (n <= DriverBudget.bytes / DriverBudget.rowBytes(target.length))
       driverSide(spark, target, filledSorted(data), nSim, seed)
     else {
       val filled = medianFill(data, target)

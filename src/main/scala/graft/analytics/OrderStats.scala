@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import graft.util.DriverBudget
 
 /** Exact weighted order statistics per (group, column) — the one kernel
   * behind [[Summary.exactPercentilesHist]] (the one-group case),
@@ -26,9 +27,10 @@ import scala.jdk.CollectionConverters._
   * here:
   *   1. one fused, shuffle-free scan collects per (group, column) Σw, min
   *      and max, and keeps the values themselves while the partition holds
-  *      at most its share (`driverBytes / numPartitions`) of the driver
-  *      byte budget and every weight seen so far is 1 — the first non-unit
-  *      weight drops the partition's values, so the input decides the gate.
+  *      at most its share (`budget / numPartitions`) of the one
+  *      [[graft.util.DriverBudget]] and every weight seen so far is 1 —
+  *      the first non-unit weight drops the partition's values, so the
+  *      input decides the gate.
   *      When every partition kept its values (the DRIVER path) the driver
   *      sorts them and reads the ranks: one Spark job in all. Otherwise
   *      (the HISTOGRAM path):
@@ -62,18 +64,6 @@ private[graft] object OrderStats {
 
   val DefaultBuckets = 4096
 
-  /** The driver byte budget of pass 1: a thirty-second of the driver's max
-    * heap, capped at half of `spark.driver.maxResultSize` so the collected
-    * task results never trip that limit (0 there means unlimited). Values
-    * take 8 bytes each (twice that while the partitions' arrays are joined).
-    */
-  def defaultDriverBytes: Long = {
-    val heap = Runtime.getRuntime.maxMemory / 32
-    val maxResult = SparkSession.active.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (maxResult > 0) math.min(heap, maxResult / 2) else heap
-  }
-
   /** One (group, column) answer: n = Σw over the non-null values, `rows` =
     * Σw over all of the group's rows (-1 when `boundsIn` skipped pass 1)
     * and the value at each asked rank.
@@ -101,8 +91,8 @@ private[graft] object OrderStats {
     * `boundsIn` (ungrouped only) is each column's (non-null count, min,
     * max) when the caller already has them: the gate is then decided from
     * the counts before any pass — the driver path's scan gets the whole
-    * budget, the histogram path skips pass 1. `driverBytes = 0` forces the
-    * histogram path.
+    * budget, the histogram path skips pass 1. Values take 8 bytes each
+    * (twice that while the partitions' arrays are joined).
     */
   def apply(
       df: DataFrame,
@@ -111,10 +101,10 @@ private[graft] object OrderStats {
       weight: Column,
       ranks: (Int, Long) => Seq[Long],
       boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]] = None,
-      nBuckets: Int = DefaultBuckets,
-      driverBytes: Long = defaultDriverBytes
+      nBuckets: Int = DefaultBuckets
   ): (Map[Any, IndexedSeq[Stat]], String) = {
     require(values.nonEmpty)
+    val budget = DriverBudget.bytes
     require(boundsIn.isEmpty || group.isEmpty, "boundsIn is for the ungrouped call")
     val k = values.length
     // the passes run straight over the caller's frame: callers with an
@@ -132,8 +122,8 @@ private[graft] object OrderStats {
       case Some(b) =>
         require(b.length == k, "boundsIn must cover every value column")
         val ns = b.map(_._1)
-        if (ns.exists(_ > 0) && ns.sum <= driverBytes / 8)
-          boundsPass(rows, narrow.schema("_g").dataType, grouped = false, k, driverBytes)
+        if (ns.exists(_ > 0) && ns.sum <= budget / 8)
+          boundsPass(rows, narrow.schema("_g").dataType, grouped = false, k, budget)
         else {
           val a = new Acc(k)
           a.rows = -1
@@ -144,7 +134,7 @@ private[graft] object OrderStats {
         }
       case None =>
         boundsPass(rows, narrow.schema("_g").dataType, group.isDefined, k,
-          driverBytes / math.max(1, rows.getNumPartitions))
+          budget / math.max(1, rows.getNumPartitions))
     }
     val asked = for ((g, a) <- groups.toSeq; i <- 0 until k) yield (g, i, ranks(i, a.n(i)))
     val (read, path): ((Any, Int, Long) => Double, String) = pieces match {
@@ -362,11 +352,10 @@ private[graft] object OrderStats {
       group: Option[String],
       specs: Seq[(String, Seq[Double])],
       boundsIn: Option[Seq[(Long, Option[Double], Option[Double])]] = None,
-      nBuckets: Int = DefaultBuckets,
-      driverBytes: Long = defaultDriverBytes
+      nBuckets: Int = DefaultBuckets
   ): (Map[Any, Map[String, Seq[Option[Double]]]], String) = {
     val (stats, path) = apply(df, group, specs.map(_._1), lit(1L),
-      (i, n) => neededRanks(n, specs(i)._2), boundsIn, nBuckets, driverBytes)
+      (i, n) => neededRanks(n, specs(i)._2), boundsIn, nBuckets)
     (stats.map { case (g, st) =>
       g -> specs.zip(st).map { case ((c, ps), s) =>
         c -> ps.map(p => if (s.n == 0) None else Some(interpolate(s.n, p, s.at)))

@@ -173,23 +173,21 @@ object Cleaning {
   def cleanNumerics(df: DataFrame, cols: Seq[String]): DataFrame = {
     val present = cols.filter(df.columns.contains)
     if (present.isEmpty) df
-    else cleanCoerced(coerceNumerics(df, present), present, OrderStats.defaultDriverBytes)
+    else cleanCoerced(coerceNumerics(df, present), present)
   }
 
   private def coerceNumerics(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df)((d, c) => d.withColumn(c, coerceToDouble(col(c))))
 
-  /** [[cleanNumerics]] over already coerced columns. `driverBytes` is the
-    * kernel's driver byte budget; 0 forces its histogram path. Until a
-    * column drops rows, each column's statistics are those of the one scan
+  /** [[cleanNumerics]] over already coerced columns. Until a column drops
+    * rows, each column's statistics are those of the one scan
     * (clipping and filling other columns changes neither its values nor
     * the row count).
     */
-  private[graft] def cleanCoerced(df: DataFrame, cols: Seq[String], driverBytes: Long): DataFrame = {
+  private[graft] def cleanCoerced(df: DataFrame, cols: Seq[String]): DataFrame = {
     def stats(d: DataFrame, cs: Seq[String]): Seq[OrderStats.Stat] =
       OrderStats(d, None, cs, lit(1L),
-        (_, n) => OrderStats.neededRanks(n, Seq(0.25, 0.5, 0.75)),
-        driverBytes = driverBytes)._1(0)
+        (_, n) => OrderStats.neededRanks(n, Seq(0.25, 0.5, 0.75)))._1(0)
     def sparse(s: OrderStats.Stat): Boolean = 2 * (s.rows - s.n) > s.rows // >50% null
     cols.zip(stats(df, cols)).foldLeft((df, false)) { case ((d, dropped), (c, first)) =>
       val s = if (dropped) stats(d, Seq(c)).head else first
@@ -276,7 +274,7 @@ object Cleaning {
     val catFilled = fillCategoricalsWithMode(coerced, cfg.categoricalCols)
     val cleaned =
       if (numeric.isEmpty) catFilled
-      else cleanCoerced(catFilled, numeric, OrderStats.defaultDriverBytes)
+      else cleanCoerced(catFilled, numeric)
     cleaned.drop(SrcOrder)
   }
 }

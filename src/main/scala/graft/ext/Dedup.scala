@@ -556,8 +556,7 @@ object Dedup {
     */
   def clusterIds(
       pairs: DataFrame,
-      maxIterations: Int = 25,
-      driverEdgeLimit: Long = DriverGraph.MaxEdges
+      maxIterations: Int = 25
   ): DataFrame = {
     val edges0 = pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
@@ -604,8 +603,7 @@ object Dedup {
     val onDriver =
       if (!idsIntegral) None
       else DriverGraph.collect(
-        edges.select(col("id_a").cast("long"), col("id_b").cast("long")),
-        driverEdgeLimit)
+        edges.select(col("id_a").cast("long"), col("id_b").cast("long")))
     onDriver match {
       case Some(g) =>
         edges.unpersist(false)

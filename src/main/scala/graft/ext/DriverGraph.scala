@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import graft.util.DriverBudget
 import scala.jdk.CollectionConverters._
 
 /** An edge list read onto the driver: node ids mapped once to dense ints
@@ -24,12 +25,11 @@ private[graft] final class DriverGraph(
   * `labelPropagation`, `kCore`, `triangleCensus`, `commonNeighborTopK`,
   * `Dedup.clusterIds`, `Similarity.beamRecallCurve`).
   *
-  * Gate. [[collect]] runs one `limit(maxEdges + 1).collect()`: the gate and
-  * the read are the same job, with no separate count. An edge list with
-  * more than `maxEdges` rows, or with a null endpoint, gives None, and the
-  * caller runs its distributed plan unchanged. `maxEdges <= 0` gives None
-  * without running a job; the specs use it to force the distributed
-  * reference path. Every caller's default limit is [[MaxEdges]].
+  * Gate. [[collect]] reads the edge list through [[DriverBudget.collect]]
+  * at [[DriverBudget.EdgeBytes]] per edge: the gate and the read are one
+  * job. An edge list past the budget, or with a null endpoint, gives None,
+  * and the caller runs its distributed plan unchanged; specs force that
+  * path with `DriverBudget.withBytes(0L)`, which runs no job.
   *
   * Identity. On the driver each operator replays its distributed plan
   * exactly, so both paths return the same rows:
@@ -46,15 +46,10 @@ private[graft] final class DriverGraph(
   */
 private[graft] object DriverGraph {
 
-  /** Default edge gate of every driver fast path. */
-  val MaxEdges = 2000000L
-
-  def collect(edges: DataFrame, maxEdges: Long): Option[DriverGraph] = {
-    if (maxEdges <= 0) return None
-    val rows = edges.limit(math.min(maxEdges, Int.MaxValue - 2L).toInt + 1)
-      .collect()
-    if (rows.length > maxEdges ||
-        rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+  def collect(edges: DataFrame): Option[DriverGraph] = {
+    val rows = DriverBudget.collect(edges, DriverBudget.EdgeBytes)
+      .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      .getOrElse(return None)
     val m = rows.length
     val idx = new java.util.HashMap[java.lang.Long, Integer](m * 2)
     val ids = Array.newBuilder[Long]

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * pattern as clusterIds) so the plan does not grow with the
   * iteration count. Degrees are computed once and reused.
   *
-  * Every operator with a `driverEdgeLimit` first tries [[DriverGraph]]:
-  * an edge list within the limit runs the same fixpoint on the driver.
+  * Every fixpoint operator (all but `degreeAssortativity`) first tries
+  * [[DriverGraph]]: an edge list within the one driver byte budget
+  * ([[graft.util.DriverBudget]]) runs the same fixpoint on the driver.
   */
 object Graph {
 
@@ -40,8 +41,7 @@ object Graph {
       iterations: Int = 3,
       damping: Double = 0.85,
       assumeDistinct: Boolean = false,
-      broadcastRanksBelow: Long = 4000000L,
-      driverEdgeLimit: Long = DriverGraph.MaxEdges
+      broadcastRanksBelow: Long = 4000000L
   ): DataFrame = {
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"),
@@ -52,7 +52,7 @@ object Graph {
     // the fixpoint state is |nodes| doubles + |edges| ints: within the
     // driver gate the same arithmetic runs there instead of ~4 jobs, one
     // broadcast build and one checkpoint per iteration
-    DriverGraph.collect(e, driverEdgeLimit) match {
+    DriverGraph.collect(e) match {
       case Some(g) =>
         val k = g.n
         val deg = new Array[Long](k)
@@ -162,8 +162,7 @@ object Graph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      rounds: Int = 3,
-      driverEdgeLimit: Long = DriverGraph.MaxEdges
+      rounds: Int = 3
   ): DataFrame = {
     val s = col(srcCol).cast("long")
     val d = col(dstCol).cast("long")
@@ -174,7 +173,7 @@ object Graph {
     // the sweep state is one label per node: within the driver gate the
     // synchronous sweep runs there over CSR arrays instead of a join, two
     // aggregations and an eager checkpoint per round
-    DriverGraph.collect(canon, driverEdgeLimit) match {
+    DriverGraph.collect(canon) match {
       case Some(g) =>
         val n = g.n
         val (start, adj) = g.undirected
@@ -261,8 +260,7 @@ object Graph {
   def triangleCensus(
       edges: DataFrame,
       srcCol: String,
-      dstCol: String,
-      driverEdgeLimit: Long = DriverGraph.MaxEdges
+      dstCol: String
   ): DataFrame = {
     val s = col(srcCol).cast("long")
     val d = col(dstCol).cast("long")
@@ -270,7 +268,7 @@ object Graph {
       .select(least(s, d).as("a"), greatest(s, d).as("b"))
       .filter(col("a") < col("b"))
       .distinct()
-    DriverGraph.collect(und0, driverEdgeLimit) match {
+    DriverGraph.collect(und0) match {
       case Some(g) =>
         val (w, t) = wedgesAndTriangles(g)
         // Spark's round(x, 6): HALF_UP on the BigDecimal.valueOf rendering
@@ -433,8 +431,7 @@ object Graph {
       srcCol: String,
       dstCol: String,
       k: Int,
-      maxRounds: Int = 12,
-      driverEdgeLimit: Long = DriverGraph.MaxEdges
+      maxRounds: Int = 12
   ): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
     val s = col(srcCol).cast("long")
@@ -447,7 +444,7 @@ object Graph {
     // peeling is CONFLUENT (removal order cannot change the maximal k-core
     // or its induced degrees), so within the driver gate a queue-based
     // peel there replaces ~4 jobs per round of the distributed fixpoint
-    DriverGraph.collect(e, driverEdgeLimit) match {
+    DriverGraph.collect(e) match {
       case Some(g) =>
         val n = g.n
         val (start, adj) = g.undirected
@@ -524,15 +521,14 @@ object Graph {
       dstCol: String,
       topK: Int,
       maxDegree: Long = 0L,
-      assumeDistinct: Boolean = false,
-      driverEdgeLimit: Long = DriverGraph.MaxEdges
+      assumeDistinct: Boolean = false
   ): DataFrame = {
     val e0 = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
     // a repeated (a,b) input edge would double-count every wedge through
     // it — dedup unless the caller already did (pageRank's flag pattern)
     val e = if (assumeDistinct) e0 else e0.distinct().localCheckpoint(true)
-    DriverGraph.collect(e, driverEdgeLimit)
+    DriverGraph.collect(e)
       .flatMap(commonNeighborsOnDriver(edges.sparkSession, _, topK, maxDegree)) match {
       case Some(df) => return df
       case None =>

@@ -2,8 +2,9 @@ package graft.ext
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.DriverBudget
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -1844,22 +1845,22 @@ object Similarity {
   /** The q258 readout: recall@k of the beam search against exact brute
     * force, one row per beam width — the operating curve that prices
     * `ef` (the q248 pattern). recall = |beam top-k ∩ exact top-k| /
-    * (n_queries·k), exact rational division.
+    * (n_queries·k), exact rational division. On the driver while the
+    * vectors and graph fit the one [[graft.util.DriverBudget]].
     */
   def beamRecallCurve(df: DataFrame, idCol: String, vecCol: String,
       graph: DataFrame, queryPred: Column, k: Int, efs: Seq[Int],
-      hops: Int, entryId: Long, driverRowLimit: Int = 100000,
-      driverEdgeLimit: Long = DriverGraph.MaxEdges): DataFrame = {
+      hops: Int, entryId: Long): DataFrame = {
     // the whole search state is |vectors|·dim quantized longs plus the
     // edge list, and the synchronized-round join form pays scheduling
-    // latency, not compute. When the QUANTIZED vector table (within
-    // driverRowLimit) and the graph (within the DriverGraph gate) fit the
-    // driver, the same integer search runs there: quantization still
-    // happens in Spark (quantVec is collected), distances are the same
-    // wrapping long arithmetic, and every cut is the (qd, id) signed order
-    // of BOTH the packed and the windowed distributed forms — so results
-    // are bit-identical. Past the limits (or with non-integral ids or
-    // ragged vectors) the distributed machinery below runs.
+    // latency, not compute. When the QUANTIZED vector table and the graph
+    // fit the driver budget, the same integer search runs there:
+    // quantization still happens in Spark (quantVec is collected),
+    // distances are the same wrapping long arithmetic, and every cut is
+    // the (qd, id) signed order of BOTH the packed and the windowed
+    // distributed forms — so results are bit-identical. Past the budget
+    // (or with non-integral ids or ragged vectors) the distributed
+    // machinery below runs.
     locally {
       val idIntegral = df.schema(df.schema.fieldIndex(idCol)).dataType match {
         case org.apache.spark.sql.types.ByteType |
@@ -1868,11 +1869,18 @@ object Similarity {
             org.apache.spark.sql.types.LongType => true
         case _ => false
       }
-      if (idIntegral) {
-        val vrows = df.select(col(idCol).cast("long").as("v"),
-            quantVec(col(vecCol)).as("_vv"), queryPred.as("_isq"))
-          .limit(driverRowLimit + 1).collect()
-        val uniform = vrows.length <= driverRowLimit &&
+      if (idIntegral && DriverBudget.bytes > 0) {
+        val table = df.select(col(idCol).cast("long").as("v"),
+          quantVec(col(vecCol)).as("_vv"), queryPred.as("_isq"))
+        // a row holds the id, the vector and its elements, and the flag;
+        // the first row's width prices every row (a ragged or null vector
+        // takes the distributed path anyway)
+        val width = table.select(size(col("_vv"))).head(1).headOption
+          .fold(0)(_.getInt(0))
+        val read = if (width < 0) None
+          else DriverBudget.collect(table, DriverBudget.rowBytes(3 + width))
+        val vrows = read.getOrElse(Array.empty[Row])
+        val uniform = read.nonEmpty &&
           vrows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
             !r.getSeq[Any](1).contains(null)) &&
           vrows.map(_.getSeq[Long](1).length).distinct.length <= 1 &&
@@ -1880,7 +1888,7 @@ object Similarity {
         if (uniform) {
           val gcols = graph.columns
           DriverGraph.collect(graph.select(col(gcols(0)).cast("long"),
-              col(gcols(1)).cast("long")), driverEdgeLimit) match {
+              col(gcols(1)).cast("long"))) match {
             case Some(g) =>
               val n = vrows.length
               val ids = new Array[Long](n)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.io.{LakePaths, Layers}
+import graft.util.DriverBudget
 import org.apache.spark.sql.functions._
 
 /** End-to-end orchestrator test: generate → bronze → silver → gold on a
@@ -45,12 +46,14 @@ class PipelineSpec extends SparkSpec {
     "driver limit derates nSim to the budget instead of walking the trap; " +
     "Bootstrap itself throws loudly when handed an over-budget shape") {
     val root = java.nio.file.Files.createTempDirectory("pipelake_gold").toString
-    // 15k traffic rows fan out ~20× in the merge → ~300k merged rows —
-    // PAST driverRowLimit (200k), i.e. the distributed path the r8 trap
-    // hit. A 10⁹-slot-update budget forces the derate to fire visibly.
+    // 15k traffic rows fan out ~20× in the merge → ~300k merged rows; a
+    // zero driver budget forces the distributed path the r8 trap hit. A
+    // 10⁹-slot-update budget forces the derate to fire visibly.
     val budget = 1000000000L
-    Pipeline.run(spark, LakePaths(root), generate = true, nRows = 15000,
-      goldStages = true, bootstrapDrawBudget = budget)
+    DriverBudget.withBytes(0L) {
+      Pipeline.run(spark, LakePaths(root), generate = true, nRows = 15000,
+        goldStages = true, bootstrapDrawBudget = budget)
+    }
 
     val merged = Layers.readParquet(spark, s"$root/silver/merged_data.parquet")
     val mergedRows = merged.count()
@@ -70,8 +73,9 @@ class PipelineSpec extends SparkSpec {
     // the engine-level guard: an over-budget call fails NAMING the knobs
     // rather than silently starting an hours-long replicate loop
     val e = intercept[IllegalArgumentException] {
-      analytics.Bootstrap(spark, merged, nSim = 5000,
-        driverRowLimit = 1000L, drawBudget = budget)
+      DriverBudget.withBytes(0L) {
+        analytics.Bootstrap(spark, merged, nSim = 5000, drawBudget = budget)
+      }
     }
     assert(e.getMessage.contains("drawBudget") &&
       e.getMessage.contains("nSim"), e.getMessage)

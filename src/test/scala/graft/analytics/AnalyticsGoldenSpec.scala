@@ -88,7 +88,7 @@ class AnalyticsGoldenSpec extends SparkSpec {
     val cols = Seq("vehicle_count", "humidity")
     val sub = merged.select(cols.map(col): _*)
     val filled = Bootstrap.medianFill(sub, cols)
-    // under driverRowLimit: the driver-side path
+    // within the driver budget: the driver-side path
     val a = Bootstrap(spark, sub, nSim = 800, seed = 1)
       .collect().map(r => r.getString(0) -> r).toMap
     val b = Bootstrap.poisson(spark, filled, cols, nSim = 800, seed = 2)
@@ -108,7 +108,7 @@ class AnalyticsGoldenSpec extends SparkSpec {
         col("l_quantity"), col("l_extendedprice")),
       "rk", nSim = 500)
       .collect().map(r => r.getString(0) -> r).toMap
-    // under driverRowLimit: the driver-side path
+    // within the driver budget: the driver-side path
     val b = Bootstrap(spark, li.select("l_quantity", "l_extendedprice"),
       nSim = 500, seed = 7)
       .collect().map(r => r.getString(0) -> r).toMap

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.SparkSpec
+import graft.util.DriverBudget
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -54,8 +55,12 @@ class BootstrapGateSpec extends SparkSpec {
       if (i % 5 == 0) null else rnd.nextInt(9).toDouble)))
     val driver = rows(Bootstrap(spark, in, nSim = 200, seed = 3L))
     assert(driver.map(_.getString(0)) == Seq("a", "b"))
-    assert(rows(Bootstrap(spark, in, nSim = 200, seed = 3L, driverRowLimit = 50L)) == driver)
-    val distributed = rows(Bootstrap(spark, in, nSim = 200, seed = 3L, driverRowLimit = 49L))
+    // the budget holds 50 rows of the two target columns exactly, then 49
+    val rowBytes = DriverBudget.rowBytes(2)
+    assert(DriverBudget.withBytes(50 * rowBytes)(
+      rows(Bootstrap(spark, in, nSim = 200, seed = 3L))) == driver)
+    val distributed = DriverBudget.withBytes(49 * rowBytes)(
+      rows(Bootstrap(spark, in, nSim = 200, seed = 3L)))
     assert(distributed == poisson(in, 200, 3L))
     assert(distributed != driver)
   }
@@ -80,7 +85,7 @@ class BootstrapGateSpec extends SparkSpec {
     assert(Bootstrap(spark, twenty, nSim = 50).isEmpty)
     val more = frame((1 to 21).map(i => Row(i.toDouble, null)))
     assert(rows(Bootstrap(spark, more, nSim = 50)).map(_.getString(0)) == Seq("a"))
-    assert(rows(Bootstrap(spark, more, nSim = 50, driverRowLimit = 0L))
+    assert(DriverBudget.withBytes(0L)(rows(Bootstrap(spark, more, nSim = 50)))
       .map(_.getString(0)) == Seq("a"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.SparkSpec
+import graft.util.DriverBudget
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,7 +11,8 @@ import org.scalacheck.rng.Seed
 /** The percentile paths of [[OrderStats]] against each other and against
   * Spark's builtin `percentile`, on generated and degenerate double
   * columns, ungrouped and grouped by a key column `g`: the driver path
-  * (default budget), the histogram path (forced with `driverBytes = 0`)
+  * (default budget), the histogram path (forced with a zero
+  * `DriverBudget`)
   * and the builtin must agree — the two kernel paths bit for bit
   * (`java.lang.Double.compare == 0`), the builtin with `==` (it may keep
   * -0.0 apart from 0.0). ScalaCheck Gen supplies the columns (sampled
@@ -49,8 +51,9 @@ class PercentileSpec extends SparkSpec {
 
   private def runGrouped(df: DataFrame, group: Option[String], ps: Seq[Double],
       driverBytes: Long, nBuckets: Int): (Map[Any, Answers], String) =
-    OrderStats.percentiles(df, group, valueCols(df).map(_ -> ps),
-      nBuckets = nBuckets, driverBytes = driverBytes)
+    DriverBudget.withBytes(driverBytes) {
+      OrderStats.percentiles(df, group, valueCols(df).map(_ -> ps), nBuckets = nBuckets)
+    }
 
   private def run(df: DataFrame, ps: Seq[Double], driverBytes: Long): (Answers, String) = {
     val (out, path) = runGrouped(df, None, ps, driverBytes, OrderStats.DefaultBuckets)
@@ -89,7 +92,7 @@ class PercentileSpec extends SparkSpec {
     val anyValue = valueCols(df).exists(c => !df.filter(col(c).isNotNull).isEmpty)
     val groups = if (df.columns.contains("g")) Seq(None, Some("g")) else Seq(None)
     groups.foreach { group =>
-      val (drv, drvPath) = runGrouped(df, group, ps, OrderStats.defaultDriverBytes, nBuckets)
+      val (drv, drvPath) = runGrouped(df, group, ps, DriverBudget.bytes, nBuckets)
       val (hist, histPath) = runGrouped(df, group, ps, 0L, nBuckets)
       val ref = if (group.isEmpty) Map[Any, Answers](0 -> builtin(df, ps))
         else builtinGrouped(df, ps)
@@ -223,14 +226,15 @@ class PercentileSpec extends SparkSpec {
     assert(atBudget == overBudget)
     // with caller-supplied bounds the gate is decided from the counts alone
     val b = Seq((100L, Some(1.5), Some(150.0)), (75L, Some(-99.0), Some(-1.0)))
-    def withBounds(driverBytes: Long) = OrderStats.percentiles(
-      df, None, df.columns.toSeq.map(_ -> probs), Some(b), driverBytes = driverBytes)
+    def withBounds(driverBytes: Long) = DriverBudget.withBytes(driverBytes) {
+      OrderStats.percentiles(df, None, df.columns.toSeq.map(_ -> probs), Some(b))
+    }
     assert(withBounds(bytes)._2 == "driver")
     assert(withBounds(bytes - 1)._2 == "histogram")
     assert(withBounds(bytes)._1.values.head == atBudget &&
       withBounds(bytes - 1)._1.values.head == atBudget)
     // the derived default: max heap / 32, at most half the result-size cap
-    val budget = OrderStats.defaultDriverBytes
+    val budget = DriverBudget.bytes
     assert(budget > 0 && budget <= Runtime.getRuntime.maxMemory / 32)
   }
 }

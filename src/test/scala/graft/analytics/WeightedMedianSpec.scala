@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.util.DriverBudget
 
 class WeightedMedianSpec extends SparkSpec {
   import spark.implicits._
@@ -26,9 +27,11 @@ class WeightedMedianSpec extends SparkSpec {
     * the path it took.
     */
   private def viaKernel(rows: Seq[(String, Double, Long)], nBuckets: Int,
-      driverBytes: Long = OrderStats.defaultDriverBytes): (Map[String, Double], String) = {
-    val (stats, path) = OrderStats(rows.toDF("g", "v", "wt"), Some("g"), Seq("v"),
-      col("wt"), (_, w) => Seq((w - 1) / 2), nBuckets = nBuckets, driverBytes = driverBytes)
+      driverBytes: Long = DriverBudget.bytes): (Map[String, Double], String) = {
+    val (stats, path) = DriverBudget.withBytes(driverBytes) {
+      OrderStats(rows.toDF("g", "v", "wt"), Some("g"), Seq("v"),
+        col("wt"), (_, w) => Seq((w - 1) / 2), nBuckets = nBuckets)
+    }
     (stats.map { case (g, st) => g.asInstanceOf[String] -> st.head.at((st.head.n - 1) / 2) }, path)
   }
 

@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import graft.util.DriverBudget
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,8 +14,9 @@ import org.scalacheck.rng.Seed
   * fractions, builtin `percentile` Q1/Q3, `clip`, then a builtin median of
   * the clipped column as the fill; columns in order, one at a time, when
   * one is over half null. The clean runs on both kernel paths (the default
-  * driver budget, and [[Cleaning.cleanCoerced]] with `driverBytes = 0` for
-  * the histogram path), and all three outputs must agree bit for bit. The builtin keeps -0.0 apart from
+  * driver budget, and [[Cleaning.cleanCoerced]] under a zero
+  * `DriverBudget` for the histogram path), and all three outputs must
+  * agree bit for bit. The builtin keeps -0.0 apart from
   * 0.0 where the kernel reads it as 0.0, so the reference adds 0.0 to each
   * builtin answer.
   */
@@ -72,7 +74,7 @@ class CleanStatsSpec extends SparkSpec {
     val (ref, sequential) = reference(coerced, cols)
     val want = bits(ref)
     assert(bits(Cleaning.cleanNumerics(df, cols)) == want, s"$label: driver path")
-    assert(bits(Cleaning.cleanCoerced(coerced, cols, driverBytes = 0L)) == want,
+    assert(DriverBudget.withBytes(0L)(bits(Cleaning.cleanCoerced(coerced, cols))) == want,
       s"$label: histogram path")
     sequential
   }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.util.DriverBudget
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
@@ -181,27 +182,24 @@ class GraphSpec extends SparkSpec {
   }
 
   /** Sorted row renders of every driver fast path's operator on one edge
-    * list, run with the given edge gate (0 = the distributed plans).
+    * list, run with the given driver byte budget (0 = the distributed
+    * plans).
     */
-  private def graphOps(es: Seq[(Long, Long)], limit: Long): Seq[(String, Seq[String])] = {
-    val edges = es.toDF("src", "dst")
-    def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    Seq(
-      "pageRank" -> Graph.pageRank(edges, "src", "dst", iterations = 3,
-        driverEdgeLimit = limit),
-      "kCore" -> Graph.kCore(edges, "src", "dst", k = 2,
-        driverEdgeLimit = limit),
-      "labelPropagation" -> Graph.labelPropagation(edges, "src", "dst", 3,
-        driverEdgeLimit = limit),
-      "triangleCensus" -> Graph.triangleCensus(edges, "src", "dst",
-        driverEdgeLimit = limit),
-      "commonNeighborTopK" -> Graph.commonNeighborTopK(edges, "src", "dst",
-        topK = 25, driverEdgeLimit = limit),
-      "clusterIds" -> Dedup.clusterIds(
-        es.toDF("id_a", "id_b"), driverEdgeLimit = limit)
-    ).map { case (op, df) => op -> sortedRows(df) }
-  }
+  private def graphOps(es: Seq[(Long, Long)], budget: Long): Seq[(String, Seq[String])] =
+    DriverBudget.withBytes(budget) {
+      val edges = es.toDF("src", "dst")
+      def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toString).sorted.toSeq
+      Seq(
+        "pageRank" -> Graph.pageRank(edges, "src", "dst", iterations = 3),
+        "kCore" -> Graph.kCore(edges, "src", "dst", k = 2),
+        "labelPropagation" -> Graph.labelPropagation(edges, "src", "dst", 3),
+        "triangleCensus" -> Graph.triangleCensus(edges, "src", "dst"),
+        "commonNeighborTopK" -> Graph.commonNeighborTopK(edges, "src", "dst",
+          topK = 25),
+        "clusterIds" -> Dedup.clusterIds(es.toDF("id_a", "id_b"))
+      ).map { case (op, df) => op -> sortedRows(df) }
+    }
 
   private val degenerateGraphs: Seq[(String, Seq[(Long, Long)])] = Seq(
     "empty" -> Nil,
@@ -221,10 +219,10 @@ class GraphSpec extends SparkSpec {
   } yield es
 
   test("driver fast paths equal the distributed plans on generated graphs") {
-    // the default gate takes the driver paths, driverEdgeLimit = 0 the
+    // the default budget takes the driver paths, a zero budget the
     // distributed plans — every operator must give the same sorted rows
     def differ(es: Seq[(Long, Long)]): Seq[String] =
-      graphOps(es, DriverGraph.MaxEdges).zip(graphOps(es, 0L)).collect {
+      graphOps(es, DriverBudget.bytes).zip(graphOps(es, 0L)).collect {
         case ((op, onDriver), (_, distributed)) if onDriver != distributed =>
           s"$op: driver $onDriver vs distributed $distributed"
       }

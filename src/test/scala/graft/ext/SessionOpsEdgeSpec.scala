@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.util.DriverBudget
 
 /** Degenerate-input behavior of the round-3 continuation operators:
   * empty inputs, null payloads, and k-larger-than-data must neither throw
@@ -11,18 +12,19 @@ class SessionOpsEdgeSpec extends SparkSpec {
   import spark.implicits._
 
   test("triangleStats: empty and single-edge graphs") {
-    // both paths (driver gate and driverEdgeLimit = 0): the empty graph
+    // both paths (default and zero driver budget): the empty graph
     // counts 0 everywhere, and a graph without wedges (one edge, a
     // matching) has a null ratio, as Spark's x/0 is null
     val graphs = Seq(
       Seq.empty[(Long, Long)] -> (0L, 0L),
       Seq((1L, 2L)) -> (2L, 1L),
       Seq((1L, 2L), (3L, 4L)) -> (4L, 2L))
-    for (((es, (nodes, nEdges)), limit) <-
-        graphs.flatMap(g => Seq(g -> DriverGraph.MaxEdges, g -> 0L))) {
-      val r = Graph.triangleCensus(es.toDF("src", "dst"), "src", "dst",
-        driverEdgeLimit = limit).head()
-      val at = s"$es, limit $limit: $r"
+    for (((es, (nodes, nEdges)), budget) <-
+        graphs.flatMap(g => Seq(g -> DriverBudget.bytes, g -> 0L))) {
+      val r = DriverBudget.withBytes(budget) {
+        Graph.triangleCensus(es.toDF("src", "dst"), "src", "dst").head()
+      }
+      val at = s"$es, budget $budget: $r"
       // getAs[Any]: a null count must not unbox to 0
       assert(Seq("n_nodes", "n_edges", "n_wedges", "n_triangles")
         .map(r.getAs[Any](_)) == Seq(nodes, nEdges, 0L, 0L), at)
