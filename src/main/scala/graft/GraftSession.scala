@@ -52,6 +52,11 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", (8 * 1024 * 1024).toString))
       .config("spark.ui.enabled", "false")
+      // Spark's compiled-class cache (JVM-wide, sized at the first codegen).
+      // One pass of the 13 notebook queries compiles ~140 classes, past
+      // the default 100 entries, so every warm pass recompiled 120 of them;
+      // at 1000 a warm pass compiles none
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // managed tables (the bucketed-layout path) land in tmp, not the
       // project dir; on a cluster point this at the lake root instead
       .config("spark.sql.warehouse.dir",

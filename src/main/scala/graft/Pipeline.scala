@@ -1,17 +1,24 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.SparkSession
 import graft.analytics.{Bootstrap, FactorAnalysisEM, MonteCarlo}
 import graft.etl.{CleanTraffic, CleanWeather, MergeTrafficWeather}
 import graft.gen.Generators
 import graft.io.{LakePaths, Layers}
 import graft.schema.Schemas
+import graft.util.DriverBudget
 
 /** E1: the full medallion pipeline (main.py:36-114), as one lazy Spark job
   * chain with parquet layer boundaries kept for restartability:
   *
   *   generate → bronze CSV → clean ×2 → silver parquet → merge → silver
   *   → factor analysis + monte carlo + bootstrap → gold parquet
+  *
+  * Stages that share only their inputs run as concurrent legs
+  * ([[concurrently]]): the two cleans, then the three gold stages. At
+  * lake sizes a stage's fixed driver costs (statistics collects, planning,
+  * small writes) set its latency, so legs fill cores one stage leaves idle.
   *
   * Each stage is a pure DataFrame→DataFrame function; this object only wires
   * paths. Layer roots are plain Hadoop FS URIs, so `root` may be
@@ -60,26 +67,29 @@ object Pipeline {
         import org.apache.spark.sql.functions.{col, to_date}
         def day(df: org.apache.spark.sql.DataFrame) =
           df.withColumn("date_only", to_date(col("date_time")))
-        Layers.writeBucketed(day(CleanTraffic(trafficRaw)),
-          s"${b.tablePrefix}_traffic_clean", Seq("city", "date_only"), b.nBuckets)
-        Layers.writeBucketed(day(CleanWeather(weatherRaw)),
-          s"${b.tablePrefix}_weather_clean", Seq("city", "date_only"), b.nBuckets)
+        concurrently(
+          () => Layers.writeBucketed(day(CleanTraffic(trafficRaw)),
+            s"${b.tablePrefix}_traffic_clean", Seq("city", "date_only"), b.nBuckets),
+          () => Layers.writeBucketed(day(CleanWeather(weatherRaw)),
+            s"${b.tablePrefix}_weather_clean", Seq("city", "date_only"), b.nBuckets))
         (spark.table(s"${b.tablePrefix}_traffic_clean"),
           spark.table(s"${b.tablePrefix}_weather_clean"))
       case None if partitionedByDay =>
         // day-partitioned silver: day-grain predicates prune directories
         // at the source and DPP engages on joins against a date dimension
-        Layers.writePartitionedByDay(CleanTraffic(trafficRaw), "date_time",
-          lake.silver("traffic_clean.parquet"))
-        Layers.writePartitionedByDay(CleanWeather(weatherRaw), "date_time",
-          lake.silver("weather_clean.parquet"))
+        concurrently(
+          () => Layers.writePartitionedByDay(CleanTraffic(trafficRaw), "date_time",
+            lake.silver("traffic_clean.parquet")),
+          () => Layers.writePartitionedByDay(CleanWeather(weatherRaw), "date_time",
+            lake.silver("weather_clean.parquet")))
         (Layers.readParquet(spark, lake.silver("traffic_clean.parquet"))
           .drop("_p_date"),
           Layers.readParquet(spark, lake.silver("weather_clean.parquet"))
             .drop("_p_date"))
       case None =>
-        Layers.writeParquet(CleanTraffic(trafficRaw), lake.silver("traffic_clean.parquet"))
-        Layers.writeParquet(CleanWeather(weatherRaw), lake.silver("weather_clean.parquet"))
+        concurrently(
+          () => Layers.writeParquet(CleanTraffic(trafficRaw), lake.silver("traffic_clean.parquet")),
+          () => Layers.writeParquet(CleanWeather(weatherRaw), lake.silver("weather_clean.parquet")))
         (Layers.readParquet(spark, lake.silver("traffic_clean.parquet")),
           Layers.readParquet(spark, lake.silver("weather_clean.parquet")))
     }
@@ -87,32 +97,76 @@ object Pipeline {
     if (!goldStages) return
 
     val merged = Layers.readParquet(spark, lake.silver("merged_data.parquet")).cache()
-
-    val (scored, loadings) = FactorAnalysisEM(spark, merged)
-    Layers.writeParquet(scored, lake.gold("traffic_weather_factors.parquet"))
-    Layers.writeParquet(loadings, lake.gold("factor_loadings.parquet"))
-
-    Layers.writeParquet(MonteCarlo.simulate(spark, merged), lake.gold("monte_carlo_scenarios.parquet"))
     // estimate-first bootstrap sizing: the merge fans traffic out ~20×,
     // so the replicate-loop cost is set by MERGED rows, not nRows — fit
     // nSim to the budget BEFORE the loop instead of discovering the
-    // fan-out eight minutes in (the r8 trap)
-    val mergedRows = merged.count()
-    val kCols = math.min(8, graft.etl.Cleaning.numericCols(merged).length)
-    val nSim = math.min(5000,
-      Bootstrap.maxSimForBudget(mergedRows, math.max(1, kCols),
-        bootstrapDrawBudget))
-    if (nSim < 5000)
-      println(s"[pipeline] gold bootstrap derated to nSim=$nSim: " +
-        s"$mergedRows merged rows x $kCols cols at " +
-        s"budget=$bootstrapDrawBudget (the ~20x merge fan-out; raise " +
-        s"bootstrapDrawBudget to keep nSim=5000 deliberately)")
-    Layers.writeParquet(
-      Bootstrap.counted(spark, merged, mergedRows, nSim = nSim, maxColumns = 8,
-        seed = 42L, drawBudget = bootstrapDrawBudget),
-      lake.gold("monte_carlo_results.parquet"))
+    // fan-out eight minutes in (the r8 trap). The count also loads the
+    // cache before the legs share it: legs that each found it unloaded
+    // would each run a job to load it. Counted over the physical plan's
+    // rows, it is one job that loads the cache as it counts (an adaptive
+    // `count()` of an unloaded cache runs a load job of its own).
+    val mergedRows = merged.queryExecution.toRdd.count()
+
+    concurrently(
+      () => {
+        val (scored, loadings) = FactorAnalysisEM(spark, merged)
+        Layers.writeParquet(scored, lake.gold("traffic_weather_factors.parquet"))
+        Layers.writeParquet(loadings, lake.gold("factor_loadings.parquet"))
+      },
+      () => Layers.writeParquet(MonteCarlo.simulate(spark, merged),
+        lake.gold("monte_carlo_scenarios.parquet")),
+      () => {
+        val kCols = math.min(8, graft.etl.Cleaning.numericCols(merged).length)
+        val nSim = math.min(5000,
+          Bootstrap.maxSimForBudget(mergedRows, math.max(1, kCols),
+            bootstrapDrawBudget))
+        if (nSim < 5000)
+          println(s"[pipeline] gold bootstrap derated to nSim=$nSim: " +
+            s"$mergedRows merged rows x $kCols cols at " +
+            s"budget=$bootstrapDrawBudget (the ~20x merge fan-out; raise " +
+            s"bootstrapDrawBudget to keep nSim=5000 deliberately)")
+        Layers.writeParquet(
+          Bootstrap.counted(spark, merged, mergedRows, nSim = nSim, maxColumns = 8,
+            seed = 42L, drawBudget = bootstrapDrawBudget),
+          lake.gold("monte_carlo_results.parquet"))
+      })
     merged.unpersist()
     ()
+  }
+
+  /** Daemon threads for [[concurrently]]'s legs; idle ones expire. */
+  private lazy val legPool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-pipeline-leg")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Runs independent stage legs at once and returns when every leg has
+    * ended. A failure is rethrown only then — the first leg's in argument
+    * order, later ones attached as suppressed — so no leg's job is left
+    * running. Each leg runs under the caller's `DriverBudget` scope and
+    * active session: a pooled thread created earlier inherits neither.
+    */
+  private[graft] def concurrently(legs: (() => Unit)*): Unit = {
+    val budget = DriverBudget.scope
+    val session = SparkSession.getActiveSession
+    val running = legs.map { leg =>
+      legPool.submit(new Callable[Unit] {
+        def call(): Unit = {
+          session.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+          try DriverBudget.within(budget)(leg())
+          finally SparkSession.clearActiveSession()
+        }
+      })
+    }
+    val failures = running.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** CLI: runMain graft.Pipeline [root] [nRows] [--bucketed[=N]]

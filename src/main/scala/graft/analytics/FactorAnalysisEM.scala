@@ -1,6 +1,5 @@
 package graft.analytics
 
-import breeze.linalg.{diag, eigSym, inv, DenseMatrix, DenseVector}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,8 +15,10 @@ import graft.etl.Cleaning
   * eigenpairs of Ψ^{-1/2} S Ψ^{-1/2}. So we compute (n, μ, S) in ONE
   * distributed aggregate (sums of outer products — d ≤ tens, so the d×d
   * state is tiny; `prepare` shares it with the low-variance filter) and
-  * run the EM/eigen iteration on the driver with Breeze.
-  * Data never leaves the cluster; the driver handles an 11×11 matrix.
+  * run the EM on the driver with a cyclic Jacobi eigensolver on plain
+  * arrays ([[eigSym]]). Data never leaves the cluster; the driver handles
+  * an 11×11 matrix, and a linear-algebra library would cost more to load
+  * (about 2 s of class initialisation per cold JVM) than the EM takes.
   *
   * Scores are the posterior means E[z|x] = (x−μ)ᵀ Ψ⁻¹W̃ᵀ(I + W̃Ψ⁻¹W̃ᵀ)⁻¹ —
   * computed per-row as plain Column linear combinations (codegen'd, no UDF),
@@ -26,31 +27,34 @@ import graft.etl.Cleaning
   */
 object FactorAnalysisEM {
 
+  /** Matrices are row arrays: `components(i)(j)` is factor i's loading on
+    * column j, each factor's sign fixed by [[signFixed]].
+    */
   final case class FAModel(
       cols: Seq[String],
-      mean: DenseVector[Double],
-      components: DenseMatrix[Double], // k×d, sklearn components_
-      noiseVariance: DenseVector[Double], // Ψ, length d
+      mean: Array[Double],
+      components: Array[Array[Double]], // k×d, sklearn components_
+      noiseVariance: Array[Double], // Ψ, length d
       logLikelihood: Seq[Double],
       nIter: Int,
       medianFill: Seq[Double] // per-column impute value (median, like fit)
   ) {
-    def k: Int = components.rows
-    def d: Int = components.cols
+    def k: Int = components.length
+    def d: Int = noiseVariance.length
   }
 
   private val Small = 1e-12 // sklearn SMALL
 
   /** The EM's input: the kept columns (in schema order), their medians
-    * and the sufficient statistics n, mean and MLE covariance (÷n) of the
-    * median-filled kept columns.
+    * and the sufficient statistics n, mean and MLE covariance (÷n, d×d
+    * rows) of the median-filled kept columns.
     */
   final case class Prepared(
       cols: Seq[String],
       medians: Seq[Double],
       n: Long,
-      mean: DenseVector[Double],
-      cov: DenseMatrix[Double])
+      mean: Array[Double],
+      cov: Array[Array[Double]])
 
   /** Numeric subset → median-impute → drop near-constant (std ≤ 0.01,
     * sample std like pandas .std()): factor_analysis.py:178-185.
@@ -68,8 +72,7 @@ object FactorAnalysisEM {
     */
   def prepare(df: DataFrame): Prepared = {
     val numeric = Cleaning.numericCols(df)
-    if (numeric.isEmpty)
-      return Prepared(Nil, Nil, 0L, DenseVector.zeros[Double](0), DenseMatrix.zeros[Double](0, 0))
+    if (numeric.isEmpty) return Prepared(Nil, Nil, 0L, Array.empty, Array.empty)
     val sub = df.select(numeric.map(col): _*)
     val med = Summary.exactPercentilesHist(sub, numeric.map(_ -> Seq(0.5)))
     val medians = numeric.map(c => med(c).head)
@@ -84,8 +87,8 @@ object FactorAnalysisEM {
     val n = row.getLong(0)
     def at(k: Int): Double = if (row.isNullAt(k)) 0.0 else row.getDouble(k)
     val kept = (0 until d).filter(i => !row.isNullAt(1 + i) && row.getDouble(1 + i) > 0.01)
-    val mean = DenseVector(kept.map(i => at(1 + d + i) / n).toArray)
-    val cov = DenseMatrix.tabulate(kept.length, kept.length) { (a, b) =>
+    val mean = kept.map(i => at(1 + d + i) / n).toArray
+    val cov = Array.tabulate(kept.length, kept.length) { (a, b) =>
       val (i, j) = (math.max(kept(a), kept(b)), math.min(kept(a), kept(b)))
       at(1 + 2 * d + i * (i + 1) / 2 + j) / n - mean(math.max(a, b)) * mean(math.min(a, b))
     }
@@ -101,16 +104,24 @@ object FactorAnalysisEM {
       nComponents: Int,
       tol: Double = 1e-2,
       maxIter: Int = 1000
+  ): FAModel = em(prepare(df), nComponents, tol, maxIter)
+
+  /** [[fit]]'s driver half: the EM on prepared statistics. */
+  private[graft] def em(
+      prepared: Prepared,
+      nComponents: Int,
+      tol: Double = 1e-2,
+      maxIter: Int = 1000
   ): FAModel = {
-    val Prepared(cols, medians, n, mean, cov) = prepare(df)
+    val Prepared(cols, medians, n, mean, cov) = prepared
     require(cols.nonEmpty, "no usable numeric columns for factor analysis")
     val k = math.min(nComponents, cols.length - 1).max(1)
     val d = cols.length
-    val varDiag = diag(cov).copy // np.var(X, axis=0), ddof=0
+    val varDiag = Array.tabulate(d)(i => cov(i)(i)) // np.var(X, axis=0), ddof=0
     val llconst = d * math.log(2 * math.Pi) + k
 
-    var psi = DenseVector.ones[Double](d)
-    var w = DenseMatrix.zeros[Double](k, d)
+    var psi = Array.fill(d)(1.0)
+    var w = Array.ofDim[Double](k, d)
     var oldLl = Double.NegativeInfinity
     val lls = scala.collection.mutable.ArrayBuffer.empty[Double]
     var iter = 0
@@ -119,37 +130,109 @@ object FactorAnalysisEM {
       val sqrtPsi = psi.map(math.sqrt(_) + Small)
       // M = Ψ^{-1/2} S Ψ^{-1/2}; eigenpairs of M == squared singular values
       // of the scaled data matrix sklearn decomposes each iteration.
-      val m = DenseMatrix.tabulate(d, d)((i, j) =>
-        cov(i, j) / (sqrtPsi(i) * sqrtPsi(j)))
-      val es = eigSym(m)
-      // top-k eigenvalues descending
-      val order = (0 until d).sortBy(i => -es.eigenvalues(i))
-      val topIdx = order.take(k)
-      val s = topIdx.map(es.eigenvalues(_)).toArray
-      val unexpVar = order.drop(k).map(es.eigenvalues(_)).sum
+      val m = Array.tabulate(d, d)((i, j) => cov(i)(j) / (sqrtPsi(i) * sqrtPsi(j)))
+      val (values, vectors) = eigSym(m) // descending
+      val s = values.take(k)
+      val unexpVar = values.drop(k).sum
       // W = sqrt(max(s-1,0)) * Vt * sqrt_psi  (k×d)
-      w = DenseMatrix.tabulate(k, d) { (i, j) =>
-        math.sqrt(math.max(s(i) - 1.0, 0.0)) *
-          es.eigenvectors(j, topIdx(i)) * sqrtPsi(j)
+      w = Array.tabulate(k, d) { (i, j) =>
+        math.sqrt(math.max(s(i) - 1.0, 0.0)) * vectors(j)(i) * sqrtPsi(j)
       }
-      var ll = llconst + s.map(math.log).sum + unexpVar +
-        psi.toArray.map(math.log).sum
+      var ll = llconst + s.map(math.log).sum + unexpVar + psi.map(math.log).sum
       ll *= -n / 2.0
       lls += ll
       if (ll - oldLl < tol && iter > 0) converged = true
       else {
         oldLl = ll
         // Ψ = max(var - colSums(W∘W), SMALL)
-        val wsq = DenseVector.tabulate(d)(j =>
-          (0 until k).map(i => w(i, j) * w(i, j)).sum)
-        psi = DenseVector.tabulate(d)(j =>
-          math.max(varDiag(j) - wsq(j), Small))
+        psi = Array.tabulate(d)(j =>
+          math.max(varDiag(j) - (0 until k).map(i => w(i)(j) * w(i)(j)).sum, Small))
       }
       iter += 1
     }
-    FAModel(cols, mean, w, psi, lls.toSeq, iter, medians)
+    FAModel(cols, mean, signFixed(w), psi, lls.toSeq, iter, medians)
   }
 
+  /** Each factor's one fixed sign. An eigenvector's sign is arbitrary (it
+    * differs between eigensolvers and LAPACK builds), so a factor is
+    * negated when its largest-|loading| variable — the lowest index on a
+    * tie — loads negatively. The log-likelihood and Ψ do not depend on it.
+    */
+  private[graft] def signFixed(w: Array[Array[Double]]): Array[Array[Double]] =
+    w.map { row =>
+      val top = row.indices.foldLeft(0)((b, j) => if (math.abs(row(j)) > math.abs(row(b))) j else b)
+      if (row.nonEmpty && row(top) < 0) row.map(-_) else row
+    }
+
+  /** Eigenpairs of the symmetric matrix `a` by cyclic Jacobi rotations:
+    * the eigenvalues in descending order, and the unit eigenvectors as the
+    * matching columns of the second array (`vectors(j)(i)` is entry j of
+    * eigenvector i). Each rotation zeroes one off-diagonal entry; sweeps
+    * repeat until one finds every off-diagonal entry zero or below the
+    * rounding of both diagonal entries it couples (convergence is
+    * quadratic: a handful of sweeps at d ≤ 20).
+    */
+  private[graft] def eigSym(a: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
+    val d = a.length
+    val m = a.map(_.clone)
+    val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
+    def negligible(x: Double, diag: Double): Boolean =
+      math.abs(diag) + 100 * math.abs(x) == math.abs(diag)
+    var rotated = true
+    var sweep = 0
+    while (rotated && sweep < 100) {
+      rotated = false
+      for (p <- 0 until d; q <- p + 1 until d if m(p)(q) != 0.0) {
+        val apq = m(p)(q)
+        if (!(negligible(apq, m(p)(p)) && negligible(apq, m(q)(q)))) {
+          rotated = true
+          // t = tan θ, the smaller root of t² + 2τt − 1 = 0 (Golub & Van Loan 8.5)
+          val tau = (m(q)(q) - m(p)(p)) / (2 * apq)
+          val t =
+            if (math.abs(tau) > 1e150) 0.5 / tau
+            else (if (tau >= 0) 1.0 else -1.0) / (math.abs(tau) + math.sqrt(1 + tau * tau))
+          val c = 1 / math.sqrt(1 + t * t)
+          val s = t * c
+          var r = 0
+          while (r < d) {
+            if (r != p && r != q) {
+              val (arp, arq) = (m(r)(p), m(r)(q))
+              m(r)(p) = c * arp - s * arq; m(p)(r) = m(r)(p)
+              m(r)(q) = s * arp + c * arq; m(q)(r) = m(r)(q)
+            }
+            val (vrp, vrq) = (v(r)(p), v(r)(q))
+            v(r)(p) = c * vrp - s * vrq
+            v(r)(q) = s * vrp + c * vrq
+            r += 1
+          }
+          m(p)(p) -= t * apq
+          m(q)(q) += t * apq
+        }
+        m(p)(q) = 0.0; m(q)(p) = 0.0
+      }
+      sweep += 1
+    }
+    val order = (0 until d).sortBy(i => -m(i)(i))
+    (order.map(i => m(i)(i)).toArray, Array.tabulate(d, d)((j, i) => v(j)(order(i))))
+  }
+
+  /** X = G⁻¹B for a symmetric positive definite G (Cholesky, lower
+    * triangle read), B given as rows.
+    */
+  private def solveSpd(g: Array[Array[Double]], b: Array[Array[Double]]): Array[Array[Double]] = {
+    val k = g.length
+    val l = Array.ofDim[Double](k, k)
+    for (i <- 0 until k; j <- 0 to i) {
+      val s = g(i)(j) - (0 until j).map(x => l(i)(x) * l(j)(x)).sum
+      l(i)(j) = if (i == j) math.sqrt(s) else s / l(j)(j)
+    }
+    b.head.indices.map { c =>
+      val y = new Array[Double](k) // L y = b(·)(c), then Lᵀ x = y
+      for (i <- 0 until k) y(i) = (b(i)(c) - (0 until i).map(x => l(i)(x) * y(x)).sum) / l(i)(i)
+      for (i <- k - 1 to 0 by -1) y(i) = (y(i) - (i + 1 until k).map(x => l(x)(i) * y(x)).sum) / l(i)(i)
+      y
+    }.toArray.transpose
+  }
   /** ENGINE-PORTABLE fixed-iteration factor analysis — q42's registered
     * form since r6 (VERDICT r5 #1): Rubin–Thayer covariance-space EM with
     * k = 2 factors and `iters` FIXED iterations from a fixed init, run on
@@ -272,21 +355,22 @@ object FactorAnalysisEM {
     val rows = model.cols.zipWithIndex.map { case (c, j) =>
       Row.fromSeq(
         c +: (0 until model.k).map(i =>
-          BigDecimal(model.components(i, j))
+          BigDecimal(model.components(i)(j))
             .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Score projection matrix P (d×k): scores = (x−μ)ᵀ P, the sklearn
-    * `transform` posterior mean.
+  /** Score projection matrix P (d×k, rows): scores = (x−μ)ᵀ P, the
+    * sklearn `transform` posterior mean Ψ⁻¹Wᵀ(I + WΨ⁻¹Wᵀ)⁻¹, from one
+    * k×k solve (Pᵀ = G⁻¹ WΨ⁻¹ with G = I + WΨ⁻¹Wᵀ symmetric).
     */
-  def projection(model: FAModel): DenseMatrix[Double] = {
-    val wpsi = DenseMatrix.tabulate(model.k, model.d)((i, j) =>
-      model.components(i, j) / model.noiseVariance(j)) // k×d
-    val covZ = inv(
-      DenseMatrix.eye[Double](model.k) + wpsi * model.components.t) // k×k
-    wpsi.t * covZ // d×k
+  def projection(model: FAModel): Array[Array[Double]] = {
+    val w = model.components
+    val wpsi = w.map(_.zip(model.noiseVariance).map { case (x, psi) => x / psi }) // k×d
+    val g = Array.tabulate(model.k, model.k)((a, b) =>
+      (if (a == b) 1.0 else 0.0) + wpsi(a).zip(w(b)).map { case (x, y) => x * y }.sum)
+    solveSpd(g, wpsi).transpose
   }
 
   /** Append Factor_i_score columns — per-row linear combinations, pure
@@ -300,7 +384,7 @@ object FactorAnalysisEM {
       val expr = model.cols.zipWithIndex
         .map { case (c, j) =>
           (coalesce(col(c).cast("double"), lit(model.medianFill(j))) -
-            lit(model.mean(j))) * lit(p(j, i - 1))
+            lit(model.mean(j))) * lit(p(j)(i - 1))
         }
         .reduce(_ + _)
       d.withColumn(s"Factor_${i}_score", expr)

@@ -128,7 +128,7 @@ object StatQueries {
           BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         import s.implicits._
         kept.zipWithIndex.map { case (c, i) =>
-          (c, n, r6(mean(i)), r6(cov(i, 0)), r6(cov(i, 1)), r6(cov(i, 2)))
+          (c, n, r6(mean(i)), r6(cov(i)(0)), r6(cov(i)(1)), r6(cov(i)(2)))
         }.toDF("index", "n", "mean_val", kept(0), kept(1), kept(2))
           .orderBy("index")
       },

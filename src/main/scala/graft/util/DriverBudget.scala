@@ -49,6 +49,12 @@ private[graft] object DriverBudget {
   }
 
   /** `body` under a budget of `budget` bytes; 0 forces distributed paths. */
-  def withBytes[T](budget: Long)(body: => T): T =
-    scoped.withValue(Some(budget))(body)
+  def withBytes[T](budget: Long)(body: => T): T = within(Some(budget))(body)
+
+  /** The caller's scope, for [[within]] on another thread: a pooled
+    * thread keeps the scope it was created in, not the submitter's.
+    */
+  def scope: Option[Long] = scoped.value
+
+  def within[T](scope: Option[Long])(body: => T): T = scoped.withValue(scope)(body)
 }
