@@ -16,6 +16,7 @@ Usage: python3 scripts/check_oracle.py [sf] [--skip-verify]
 import argparse
 import json
 import math
+import re
 import subprocess
 import sys
 import threading
@@ -42,13 +43,19 @@ def selected(name: str) -> bool:
     return not ONLY or name.startswith(ONLY)
 
 
+# graft.Verify's "[verify] <name> failed: <exception class>: <message>"
+# lines, first line of each, printed next to that query's FAIL
+verify_failed = {}
 if not args.skip_verify:
     r = subprocess.run(
         ["sbt", "--client", f"runMain graft.Verify {SFDIR} {OUT} " + " ".join(ONLY)],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=Path(__file__).resolve().parent.parent)
     if "success" not in r.stdout:  # sbt colorizes "[success]"
         print(r.stdout[-3000:], r.stderr[-2000:])
         sys.exit("verify run failed")
+    plain = re.sub(r"\x1b\[[0-9;]*[A-Za-z]", "", r.stdout + r.stderr)
+    for m in re.finditer(r"\[verify\] (\S+) failed: ([^\n]*)", plain):
+        verify_failed.setdefault(m.group(1), m.group(0).rstrip())
 
 con = duckdb.connect()
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
@@ -120,7 +127,8 @@ ok = fail = timeout = 0
 for name in sorted(n for n in oracles if selected(n)):
     pdir = OUT / name
     if not pdir.exists():
-        print(f"FAIL {name}: spark result missing")
+        why = verify_failed.get(name)
+        print(f"FAIL {name}: spark result missing" + (f" -- {why}" if why else ""))
         fail += 1
         continue
     spark_df = canon(con.execute(

@@ -400,11 +400,4 @@ object FactorAnalysisEM {
     val model = fit(merged, nComponents)
     (transform(merged, model), loadingsDF(spark, model))
   }
-
-  /** W1: top-k variables by |loading| for a factor (factor_analysis.py:214-216). */
-  def topLoadings(loadings: DataFrame, factorCol: String, k: Int = 2): DataFrame =
-    loadings
-      .select(col("index"), col(factorCol))
-      .orderBy(abs(col(factorCol)).desc, col("index").asc)
-      .limit(k)
 }

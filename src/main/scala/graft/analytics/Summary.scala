@@ -1,7 +1,5 @@
 package graft.analytics
 
-import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.stat.Correlation
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -169,42 +167,6 @@ object Summary {
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
-
-  /** Listwise-deletion variant via Spark ML's one-pass vector correlation —
-    * faster for very wide d, but drops any row with a null in ANY column
-    * (not the pandas semantics).
-    */
-  def corrMatrixListwise(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cols = Cleaning.numericCols(df)
-    require(cols.nonEmpty, "no numeric columns")
-    val assembled = new VectorAssembler()
-      .setInputCols(cols.toArray)
-      .setOutputCol("_graft_features")
-      .setHandleInvalid("skip")
-      .transform(df.select(cols.map(col): _*))
-    val m = Correlation
-      .corr(assembled, "_graft_features")
-      .head()
-      .getAs[org.apache.spark.ml.linalg.Matrix](0)
-    val schema = StructType(
-      StructField("index", StringType) +:
-        cols.map(c => StructField(c, DoubleType)))
-    val rows = cols.zipWithIndex.map { case (c, i) =>
-      Row.fromSeq(c +: cols.indices.map(j => m(i, j)))
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  /** A13 analog: the engine's size estimate for a plan's output (pandas
-    * `memory_usage(deep=True)` has no distributed equivalent; Catalyst
-    * statistics are the planning-time counterpart — report-only).
-    */
-  def estimatedSizeInBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-
-  /** W1: top-k rows by absolute value of a column, deterministic tie-break. */
-  def topKByAbs(df: DataFrame, c: String, k: Int, tieBreak: String): DataFrame =
-    df.orderBy(abs(col(c)).desc, col(tieBreak).asc).limit(k)
 
   /** Weighted median per group — the LOWER weighted median: the smallest
     * value v with 2·W(≤v) ≥ W, i.e. the value at 0-based rank ⌊(W−1)/2⌋ of

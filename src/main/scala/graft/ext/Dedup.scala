@@ -61,14 +61,6 @@ object Dedup {
 
   // ------------------------------------------------------------- shingles
 
-  /** Character k-shingles of the normalized text (distinct). */
-  def charShingles(c: Column, k: Int = 5): Column = {
-    val n = TextAnalysis.normalized(c)
-    array_distinct(
-      transform(sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
-        i => n.substr(i, lit(k))))
-  }
-
   /** Word n-grams of the text (distinct). Empty text → empty set (so
     * jaccard(empty, empty) = 0, matching set semantics in any engine);
     * shorter-than-n text → one whole-text gram.
@@ -802,16 +794,6 @@ object Dedup {
       .filter(col("hamming") <= maxDist)
       .orderBy("id_a", "id_b")
   }
-
-  /** Embedding near-dup pairs (cosine ≥ threshold) — see Similarity. */
-  def embeddingNearDups(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95
-  ): DataFrame =
-    Similarity.nearDupPairs(df, idCol, vecCol, dim, threshold)
 
   /** Fuzzy record linkage (entity resolution): pairs (left, right) whose
     * strings are within `maxDist` edits, found WITHOUT a cartesian

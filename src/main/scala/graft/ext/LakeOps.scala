@@ -134,16 +134,6 @@ object LakeOps {
   def hvalue2(a: Column, b: Column): Column =
     call_function("hilbert_index", a.cast("long"), b.cast("long"))
 
-  /** [[zorderRepartition]] with the Hilbert value as the clustering key. */
-  def hilbertRepartition(
-      df: DataFrame, a: Column, b: Column, nFiles: Int): DataFrame = {
-    val withH = df.withColumn("_graft_h", hvalue2(a, b))
-    withH
-      .repartitionByRange(nFiles, col("_graft_h"))
-      .sortWithinPartitions(col("_graft_h"))
-      .drop("_graft_h")
-  }
-
   /** Per-file min/max skipping stats for a two-dimension box predicate:
     * given a file-id column and the two dimension columns, returns one row
     * per file with its ranges and row count — the footer-stats view a
@@ -377,7 +367,8 @@ object LakeOps {
     *
     * Why targeted: the r1-r7 blanket form salted EVERY big row and
     * replicated the ENTIRE other side ×salts — at 100 TB that ×salts
-    * probe-side shuffle is the scale-killer (r7's dominant sweep line).
+    * probe-side shuffle is the scale-killer (r7's dominant sweep line;
+    * SALTEDJOIN_r08.json has both forms' shuffle-write bytes at 100×).
     * Here the replication cost is `salts × |other ∩ hot|` rows — bounded
     * by `maxHotKeys`, not by the table. The profile pass costs one narrow
     * partial-aggregated scan of the key column; pass `hotKeys` explicitly
@@ -419,28 +410,6 @@ object LakeOps {
     val coldJoined =
       big.filter(!isHot).join(other.filter(!isHot), Seq(key), joinType)
     hotJoined.unionByName(coldJoined)
-  }
-
-  /** The r1-r7 BLANKET form — every big row salted, the whole other side
-    * replicated ×salts. Kept private as the measurement twin for
-    * [[saltedJoin]]'s targeted rewrite (SaltedJoinProbe records both
-    * forms' shuffle-write bytes side by side) and for specs that pin the
-    * targeted form's ~×salts shuffle saving.
-    */
-  private[graft] def saltedJoinAll(
-      big: DataFrame,
-      other: DataFrame,
-      key: String,
-      rowIdCols: Seq[String],
-      salts: Int = 8,
-      joinType: String = "inner"
-  ): DataFrame = {
-    require(salts >= 1)
-    val saltExpr = pmod(xxhash64(rowIdCols.map(col): _*), lit(salts.toLong))
-    val b = big.withColumn("_salt", saltExpr)
-    val o = other.withColumn("_salt",
-      explode(sequence(lit(0L), lit(salts - 1L))))
-    b.join(o, Seq(key, "_salt"), joinType).drop("_salt")
   }
 
   // ------------------------------------------------- skew diagnostics

@@ -34,7 +34,6 @@ object TextAnalysis {
   /** Character-class ratios for quality scoring. */
   def alphaRatio(c: Column): Column = classRatio(c, "[^a-zA-Z]")
   def digitRatio(c: Column): Column = classRatio(c, "[^0-9]")
-  def whitespaceRatio(c: Column): Column = classRatio(c, "[^\\s]")
 
   private def classRatio(c: Column, negClass: String): Column =
     when(length(c) === 0, lit(0.0))
@@ -107,17 +106,6 @@ object TextAnalysis {
   /** Content fingerprint: md5 of the normalized text (stable across engines). */
   def fingerprintMd5(c: Column): Column =
     md5(normalized(c).cast("binary"))
-
-  /** 64-bit rolling/polynomial fingerprint over tokens: xxhash64 per token
-    * folded with a prime multiplier. Overflow wraps (non-ANSI) — a cheap
-    * order-sensitive document signature.
-    */
-  def fingerprint64(c: Column): Column =
-    aggregate(
-      tokens(normalized(c)),
-      lit(0L),
-      (acc, tok) => acc * lit(1000003L) + xxhash64(tok)
-    )
 
   /** TF-IDF top terms per document: term frequency × smoothed inverse
     * document frequency (ln((N+1)/(df+1))+1), top `k` terms ranked by

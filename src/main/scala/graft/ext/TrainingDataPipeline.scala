@@ -30,28 +30,13 @@ object TrainingDataPipeline {
       portableHashes: Boolean = false
   )
 
-  /** `release()` drops the pipeline's internal caches once the caller has
-    * consumed `curated`/`stats`. Callers MUST release — the caches otherwise
-    * live for the session (round-2 advice: q46 leaked one per invocation).
-    */
-  final case class Result(
-      curated: DataFrame,
-      stats: DataFrame,
-      private val caches: Seq[DataFrame] = Nil
-  ) {
-    def release(): Unit = caches.foreach(_.unpersist(false))
-  }
+  final case class Result(curated: DataFrame, stats: DataFrame)
 
-  /** @param cacheCurated also cache the post-minhash corpus — set this when
-    *   consuming BOTH `curated` and `stats`, otherwise minHashDedup (the
-    *   most expensive stage) runs once per consumer.
-    */
   def apply(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      config: Config = Config(),
-      cacheCurated: Boolean = false
+      config: Config = Config()
   ): Result = {
     // scan-side scoring: all pure column expressions, no shuffle
     val scored = docs
@@ -62,30 +47,30 @@ object TrainingDataPipeline {
     val filtered = scored
       .filter(col("quality_score") >= config.minQuality)
       .filter(col("n_tokens").between(config.minTokens, config.maxTokens))
-    // regex scoring feeds every later stage; evaluate it once. (At lake
-    // scale swap for persist(DISK_ONLY) or drop the cache — every consumer
-    // is a single linear pass.)
+    // regex scoring feeds every later stage; evaluate it once. A lazy
+    // local checkpoint (as in Cleaning.clean) materializes on the first
+    // job that reads it and, unlike a cache, registers nothing that
+    // outlives the plans built on it.
     val langFiltered = (config.keepLangs match {
       case Some(ls) => filtered.filter(col("pred_lang").isin(ls: _*))
       case None => filtered
-    }).cache()
+    }).localCheckpoint(false)
 
     val exactDeduped = Dedup.exact(langFiltered, idCol, Seq(textCol))
-    val curated0 =
+    val curated =
       if (config.portableHashes)
         Dedup.minHashDedupPortable(exactDeduped, idCol, textCol,
           config.nearDupThreshold)
       else
         Dedup.minHashDedup(exactDeduped, idCol, textCol, config.nearDupThreshold)
-    val curated = if (cacheCurated) curated0.cache() else curated0
 
     // Funnel accounting as ONE lazy plan: each stage contributes a 1-row
     // aggregate, composed with broadcast-of-one-row joins — materializing
     // `stats` is a single job (round 1 ran four eager count() actions plus
     // a head(), a full extra input scan and 5 job launches). The n_input
-    // scan reads no columns (parquet row-group counts); the cached filter
-    // stage materializes once inside the same job. coalesce() keeps the
-    // empty-corpus stats row well-defined instead of null/NPE.
+    // scan reads no columns (parquet row-group counts); the checkpointed
+    // filter stage materializes once inside the same job. coalesce()
+    // keeps the empty-corpus stats row well-defined instead of null/NPE.
     val stats = docs.agg(count(lit(1)).as("n_input"))
       .crossJoin(langFiltered.agg(count(lit(1)).as("n_after_filters")))
       .crossJoin(exactDeduped.agg(count(lit(1)).as("n_after_exact_dedup")))
@@ -95,7 +80,6 @@ object TrainingDataPipeline {
           .as("total_tokens"),
         coalesce(round(avg(col("n_tokens")), 2), lit(0.0))
           .as("mean_tokens")))
-    Result(curated, stats,
-      if (cacheCurated) Seq(langFiltered, curated) else Seq(langFiltered))
+    Result(curated, stats)
   }
 }

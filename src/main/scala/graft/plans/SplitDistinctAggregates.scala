@@ -25,9 +25,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *  - global aggregates split to a scalar Cross join; GROUPED aggregates
   *    (r6) split to per-group branches reassembled by a null-safe
   *    equi-join on fresh grouping-key aliases — branch outputs are
-  *    group-cardinality-sized (gated by
-  *    spark.graft.splitDistinctAggregates.grouped — default OFF: the
-  *    r6 measurement favors Spark's Expand on grouped shapes, see below);
+  *    group-cardinality-sized (gated on fixed-width inputs, see below);
   *  - batch only, fully deterministic child + grouping, no FILTER clauses;
   *  - every output column is an Alias over a deterministic scalar shell
   *    of EXACTLY ONE AggregateExpression (cross-aggregate arithmetic like
@@ -48,23 +46,6 @@ object SplitDistinctAggregates extends Rule[LogicalPlan] {
 
   private def aggsIn(e: Expression): Seq[AggregateExpression] =
     e.collect { case a: AggregateExpression => a }
-
-  /** Grouped multi-distinct splitting: AUTO by default since r7. The r7
-    * group-key-cardinality sweep (tools/SplitDistinctCardinalitySweep,
-    * SPLITDISTINCT_r07.json — 100× lineitem, 3 numeric distinct sets,
-    * C = 1…1,048,576) found NO cardinality crossover: the split beats
-    * Spark's Expand at every C (ratio 0.67 at C=1, 0.21–0.54 elsewhere;
-    * 20 vs 85 s at C=4096). The one measured LOSS (r6: a string-derived
-    * docs profile, 1.10 vs 0.65 s) was never about cardinality — each
-    * extra branch re-reads and re-decompresses the WIDE text column the
-    * distinct sets derive from. So the auto gate is the branch-INPUT
-    * type, not group count: grouped splitting fires only when every
-    * distinct set resolves (through the scan-shaped child's aliases) to
-    * FIXED-WIDTH leaf columns; variable-width inputs (string/binary/
-    * nested) fall back to Expand. Modes: auto (default) | true (force,
-    * any types) | false (Expand always).
-    */
-  private val GroupedFlag = "spark.graft.splitDistinctAggregates.grouped"
 
   /** Leaf-attribute resolution through the scan-shaped child: substitute
     * Project aliases until only leaf attributes remain (the child is
@@ -99,30 +80,30 @@ object SplitDistinctAggregates extends Rule[LogicalPlan] {
 
   private def eligible(agg: Aggregate): Boolean = {
     if (agg.groupingExpressions.nonEmpty) {
-      conf.getConfString(GroupedFlag, "auto") match {
-        case "false" => return false
-        case "true" => // forced on regardless of input types
-        case _ =>
-          // auto: every distinct set AND every grouping expression must
-          // read only fixed-width leaf columns. A wide (string/binary)
-          // DISTINCT INPUT is the r6 measured loss (Expand reads it once
-          // and ships a narrow derivative; each split branch re-reads and
-          // re-decodes it), and the r8 100× wide-GROUP-KEY profile
-          // (SPLITDISTINCT_r08.json: groupBy(text) with numeric distincts,
-          // split 1.52 s vs Expand 1.00 s) showed the same mechanism
-          // through the key column — every branch re-reads, re-ships, and
-          // re-joins ON the wide key, where Expand pays only the ×(n+1)
-          // shuffle replication of a column it read once (ADVICE r7 #1).
-          // Non-distinct aggregate inputs are read by exactly one branch —
-          // same total reads as the Expand form — so they stay ungated.
-          val distinctInputs = agg.aggregateExpressions
-            .flatMap(e => e.collect {
-              case ae: AggregateExpression if ae.isDistinct =>
-                ae.aggregateFunction.children
-            }).flatten
-          if (!leafRefs(agg.child, distinctInputs ++ agg.groupingExpressions)
-            .forall(a => fixedWidth(a.dataType))) return false
-      }
+      // grouped splitting is gated on input types, not group count: the
+      // r7 sweep (SPLITDISTINCT_r07.json — 100× lineitem, 3 numeric
+      // distinct sets grouped by `l_orderkey % C`, C = 1…1,048,576) found
+      // no cardinality crossover (split/Expand 0.67 at C=1, 0.21–0.54
+      // elsewhere; 20 vs 85 s at C=4096). So every distinct set AND every
+      // grouping expression must resolve (through the scan-shaped child's
+      // aliases) to fixed-width leaf columns. A wide (string/binary)
+      // DISTINCT INPUT is the r6 measured loss (Expand reads it once and
+      // ships a narrow derivative; each split branch re-reads and
+      // re-decodes it), and the r8 100× wide-GROUP-KEY profile
+      // (SPLITDISTINCT_r08.json: groupBy(text) with numeric distincts,
+      // split 1.52 s vs Expand 1.00 s) showed the same mechanism through
+      // the key column — every branch re-reads, re-ships, and re-joins ON
+      // the wide key, where Expand pays only the ×(n+1) shuffle
+      // replication of a column it read once (ADVICE r7 #1). Non-distinct
+      // aggregate inputs are read by exactly one branch — same total
+      // reads as the Expand form — so they stay ungated.
+      val distinctInputs = agg.aggregateExpressions
+        .flatMap(e => e.collect {
+          case ae: AggregateExpression if ae.isDistinct =>
+            ae.aggregateFunction.children
+        }).flatten
+      if (!leafRefs(agg.child, distinctInputs ++ agg.groupingExpressions)
+        .forall(a => fixedWidth(a.dataType))) return false
     }
     // join keys come back through EqualNullSafe on re-computed grouping
     // expressions — they must be deterministic to land in the same group

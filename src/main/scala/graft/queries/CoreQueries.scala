@@ -23,6 +23,13 @@ object CoreQueries {
   private def plit(o: Option[Double]): org.apache.spark.sql.Column =
     o.map(lit).getOrElse(lit(null).cast("double"))
 
+  /** Row count of `df` as a scalar-subquery column, so that several
+    * counts compose into one lazy plan:
+    * `spark.range(1).select(nRows(a), nRows(b))`.
+    */
+  private def nRows(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Column =
+    df.agg(count(lit(1))).scalar()
+
   val defs: Seq[QueryDef] = Seq(
     // ---- A5/A8 + arithmetic: the classic pricing-summary aggregation (S2 scan → agg)
     QueryDef(
@@ -519,11 +526,10 @@ object CoreQueries {
       (s, dir) => {
         val o = t(s, dir, "orders").select(col("o_custkey").as("k"))
         val c = t(s, dir, "customer").select(col("c_custkey").as("k"))
-        val u = o.union(c).distinct().count()
-        val i = o.intersect(c).count()
-        val e = c.except(o).count()
-        import s.implicits._
-        Seq((u, i, e)).toDF("n_union", "n_intersect", "n_except")
+        s.range(1).select(
+          nRows(o.union(c).distinct()).as("n_union"),
+          nRows(o.intersect(c)).as("n_intersect"),
+          nRows(c.except(o)).as("n_except"))
       },
       Some("""SELECT
              |(SELECT count(*) FROM (SELECT o_custkey FROM orders UNION SELECT c_custkey FROM customer)) AS n_union,
@@ -758,11 +764,11 @@ object CoreQueries {
       (s, dir) => {
         val c = t(s, dir, "customer")
         val o = t(s, dir, "orders")
-        val withOrders = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        val without = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        import s.implicits._
-        Seq((withOrders.count(), without.count(), c.count()))
-          .toDF("n_active", "n_inactive", "n_customers")
+        val on = c("c_custkey") === o("o_custkey")
+        s.range(1).select(
+          nRows(c.join(o, on, "left_semi")).as("n_active"),
+          nRows(c.join(o, on, "left_anti")).as("n_inactive"),
+          nRows(c).as("n_customers"))
       },
       Some("""SELECT
              |(SELECT count(*) FROM customer WHERE EXISTS
@@ -922,14 +928,13 @@ object CoreQueries {
       (s, dir) => {
         val li = t(s, dir, "lineitem")
         val metrics = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        val exprs = metrics.map(c => round(stddev_samp(col(c)), 4))
-        val r = li.agg(exprs.head, exprs.tail: _*).head()
-        import s.implicits._
-        metrics.zipWithIndex
-          .map { case (c, i) => (c, r.getDouble(i)) }
-          .filter(_._2 > 0.01)
-          .sortBy(_._1)
-          .toDF("col_name", "std")
+        val exprs = metrics.map(c => round(stddev_samp(col(c)), 4).as(c))
+        // one scan for the four deviations; the unpivot, the cut and the
+        // order run on its one row
+        li.agg(exprs.head, exprs.tail: _*)
+          .unpivot(Array.empty[org.apache.spark.sql.Column], "col_name", "std")
+          .filter(col("std") > 0.01)
+          .orderBy("col_name")
       },
       Some("""SELECT * FROM (
              |  SELECT 'l_quantity' AS col_name, round(stddev_samp(l_quantity), 4) AS std FROM lineitem

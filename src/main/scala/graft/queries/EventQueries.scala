@@ -13,10 +13,11 @@ object EventQueries {
   /** Adjacent-pair (by `event_id` order) out-of-order census over `ev`,
     * without ever sorting the whole table in one task.
     *
-    * Decomposition: ordered range buckets on event_id (one column-pruned
-    * min/max scan fixes the range), lag() partition-local within each
-    * bucket, and the cross-bucket adjacent pairs (last row of the previous
-    * non-empty bucket vs first row of the next) reconstructed by folding a
+    * Decomposition: ordered range buckets on event_id (a broadcast
+    * one-row min/max aggregate fixes the range; empty input buckets from
+    * (0, 0)), lag() partition-local within each bucket, and the
+    * cross-bucket adjacent pairs (last row of the previous non-empty
+    * bucket vs first row of the next) reconstructed by folding a
     * per-bucket aggregate — ≤ `nBuckets` tiny structs in a single-group
     * array expression, so NO partition-less window appears anywhere
     * (PlanSpec asserts this).
@@ -28,17 +29,17 @@ object EventQueries {
     val ev = ev0.select(col("event_id"), col("ts"))
     val us = (c: org.apache.spark.sql.Column) =>
       unix_micros(c.cast("timestamp"))
-    val bounds = ev.agg(min("event_id"), max("event_id")).head()
-    val (lo, hi) =
-      if (bounds.isNullAt(0)) (0L, 0L)
-      else (bounds.getLong(0), bounds.getLong(1))
     val nBuckets = nBucketsOverride.getOrElse(
       ev0.sparkSession.sessionState.conf.numShufflePartitions.toLong).max(1L)
-    val width = ((hi - lo) / nBuckets + 1L).max(1L)
+    val bounds = ev
+      .agg(coalesce(min("event_id"), lit(0L)).as("_lo"),
+        coalesce(max("event_id"), lit(0L)).as("_hi"))
+      .select(col("_lo"),
+        (expr(s"(_hi - _lo) DIV $nBuckets") + 1L).as("_width"))
     val wLocal = org.apache.spark.sql.expressions.Window
       .partitionBy("_bucket").orderBy("event_id")
-    val perBucket = ev
-      .withColumn("_bucket", expr(s"(event_id - $lo) DIV $width"))
+    val perBucket = ev.crossJoin(broadcast(bounds))
+      .withColumn("_bucket", expr("(event_id - _lo) DIV _width"))
       .withColumn("prev_ts", lag(col("ts"), 1).over(wLocal))
       .groupBy("_bucket")
       .agg(

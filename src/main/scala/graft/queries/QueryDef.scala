@@ -43,11 +43,4 @@ object Q {
   /** DuckDB rendering of sumExact. */
   def sqlSumExact(expr: String, scale: Int = 2): String =
     s"CAST(sum(CAST($expr AS DECIMAL(30,$scale))) AS DOUBLE)"
-
-  /** Exact cross-engine mean built on sumExact (single double division). */
-  def avgExact(c: Column, scale: Int = 4): Column =
-    sumExact(c, scale) / count(c)
-
-  def sqlAvgExact(expr: String, scale: Int = 4): String =
-    s"${sqlSumExact(expr, scale)} / count($expr)"
 }

@@ -72,6 +72,35 @@ object SimilarityQueries {
   /** q183: eval holdout = vec_id % DeconMod == 0. */
   private val DeconMod = 97
 
+  /** The data-dependent literals of the IVF queries (q72, q75, q81, q82,
+    * q146, q212, q214, q248), mirrored 1:1 by their oracle SQL: the fixed
+    * q72 quantizer (`centroids`: the 8 lowest-id embeddings, quantized),
+    * the quantized query vector (`query`: embedding 0) and the 3 cells
+    * nearest it (`nearestCells`: exact integer L2², ties to the lowest
+    * cell id).
+    */
+  private final case class IvfLiterals(rows: Seq[(Long, IndexedSeq[Long])]) {
+    val centroids: IndexedSeq[IndexedSeq[Long]] = rows.map(_._2).toIndexedSeq
+    lazy val query: IndexedSeq[Long] = rows.collectFirst { case (0L, v) => v }
+      .getOrElse(throw new NoSuchElementException("no embedding 0"))
+    lazy val nearestCells: Seq[Long] = centroids.indices
+      .sortBy(i => (centroids(i).zip(query)
+        .map { case (a, b) => (a - b) * (a - b) }.sum, i))
+      .take(3).map(_.toLong)
+  }
+
+  /** Reads [[IvfLiterals]] with one driver collect of the 8 source rows.
+    * A planning input, not an answer: the literals are inlined into the
+    * plan, so they are read while the plan is built. This is the only
+    * action in `graft.queries` (QueryBodySpec pins that); moving it to
+    * execution time is the "gates decided at execution time" ROADMAP item.
+    */
+  private def ivfLiterals(e: org.apache.spark.sql.DataFrame): IvfLiterals =
+    IvfLiterals(e.filter(col("vec_id") < 8).orderBy("vec_id")
+      .select(col("vec_id"), Similarity.quantVec(col("embedding")))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toIndexedSeq))
+      .toSeq)
+
   val defs: Seq[QueryDef] = Seq(
     // ---- brute-force cosine top-k for a fixed query vector (vec_id 0)
     QueryDef(
@@ -189,10 +218,7 @@ object SimilarityQueries {
       "q72_ivf_assign_portable",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val centroids = emb.filter(col("vec_id") < 8).orderBy("vec_id")
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("cq"))
-          .collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
+        val centroids = ivfLiterals(emb).centroids
         emb.select(col("vec_id"),
             Similarity.ivfAssignQuantized(col("embedding"), centroids)
               .as("cell"))
@@ -242,28 +268,16 @@ object SimilarityQueries {
         val brute = Similarity.bruteForceTopK(e, "vec_id", "embedding", 0L, k)
         val lsh = Similarity.lshTopK(e, "vec_id", "embedding", 0L, k,
           dim = 64, nBits = RecallBits, probeHamming = RecallProbe)
-        // IVF probe against the FIXED quantizer of q72 (8 lowest-id
-        // vectors, quantized): cell selection is exact integer math on the
-        // driver, mirrored 1:1 in the oracle SQL
-        val centroids = e.filter(col("vec_id") < 8).orderBy("vec_id")
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("cq"))
-          .collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
-        val qq = e.filter(col("vec_id") === 0)
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")))
-          .head().getSeq[Long](0)
-        val cells = centroids.zipWithIndex
-          .map { case (c, i) =>
-            (i, c.zip(qq).map { case (a, b) => (a - b) * (a - b) }.sum)
-          }
-          .sortBy { case (i, d) => (d, i) }.take(3).map(_._1.toLong)
+        // IVF probe against the FIXED quantizer of q72 and its 3 cells
+        // nearest the query (IvfLiterals)
+        val ivf = ivfLiterals(e)
         val qv = broadcast(e.filter(col("vec_id") === 0)
           .select(col("embedding").as("_q_vec")))
         val ivfTop = e
           .withColumn("_cell",
-            Similarity.ivfAssignQuantized(col("embedding"), centroids))
-          .filter(col("_cell").isin(cells: _*) && col("vec_id") =!= 0)
+            Similarity.ivfAssignQuantized(col("embedding"), ivf.centroids))
+          .filter(col("_cell").isin(ivf.nearestCells: _*) &&
+            col("vec_id") =!= 0)
           .crossJoin(qv)
           .select(col("vec_id"),
             round(Similarity.cosine(col("embedding"), col("_q_vec")), 4)
@@ -350,11 +364,7 @@ object SimilarityQueries {
         val e = t(s, dir, "embeddings")
         val cbs = Similarity.pqCodebooksFixed(e, "vec_id", "embedding",
           dim = 64, m = PqM, kCodes = PqK)
-        val qq = e.filter(col("vec_id") === 0)
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")))
-          .head().getSeq[Long](0).toIndexedSeq
-        val tables = Similarity.pqAdcTables(qq, cbs)
+        val tables = Similarity.pqAdcTables(ivfLiterals(e).query, cbs)
         e.filter(col("vec_id") =!= 0)
           // r11: _vq/_codes as materialized attributes (the q84 rule)
           .select(col("vec_id"),
@@ -378,28 +388,17 @@ object SimilarityQueries {
       "q82_ivfpq_topk",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val centroids = e.filter(col("vec_id") < 8).orderBy("vec_id")
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("cq"))
-          .collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
+        val ivf = ivfLiterals(e)
         val cbs = Similarity.pqCodebooksFixed(e, "vec_id", "embedding",
           dim = 64, m = PqM, kCodes = PqK)
-        val qq = e.filter(col("vec_id") === 0)
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")))
-          .head().getSeq[Long](0).toIndexedSeq
-        val cells = centroids.zipWithIndex
-          .map { case (c, i) =>
-            (i, c.zip(qq).map { case (a, b) => (a - b) * (a - b) }.sum)
-          }
-          .sortBy { case (i, d) => (d, i) }.take(3).map(_._1.toLong)
-        val tables = Similarity.pqAdcTables(qq, cbs)
+        val tables = Similarity.pqAdcTables(ivf.query, cbs)
         // r11: one materialized quantization feeds cell routing and codes
         e.select(col("vec_id"),
             Similarity.quantVec(col("embedding")).as("_vq"))
           .withColumn("_cell",
-            Similarity.ivfAssignQuantizedLongs(col("_vq"), centroids))
-          .filter(col("_cell").isin(cells: _*) && col("vec_id") =!= 0)
+            Similarity.ivfAssignQuantizedLongs(col("_vq"), ivf.centroids))
+          .filter(col("_cell").isin(ivf.nearestCells: _*) &&
+            col("vec_id") =!= 0)
           .select(col("vec_id"),
             Similarity.pqEncodeQuantized(col("_vq"), cbs).as("_codes"))
           .select(col("vec_id"),
@@ -534,10 +533,7 @@ object SimilarityQueries {
       "q146_silhouette",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val centroids = emb.filter(col("vec_id") < 8).orderBy("vec_id")
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("cq"))
-          .collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
+        val centroids = ivfLiterals(emb).centroids
         Similarity.silhouetteQuantized(emb, "vec_id", "embedding", centroids)
       },
       Some("""WITH q AS (SELECT vec_id,
@@ -731,10 +727,7 @@ object SimilarityQueries {
       "q212_ivf_incremental_add",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val centroids = e.filter(col("vec_id") < 8).orderBy("vec_id")
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("cq"))
-          .collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
+        val centroids = ivfLiterals(e).centroids
         def assign(df: org.apache.spark.sql.DataFrame) =
           df.select(col("vec_id"),
             Similarity.ivfAssignQuantized(col("embedding"), centroids)
@@ -836,10 +829,7 @@ object SimilarityQueries {
       "q248_ivfpq_operating_curve",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val centroids = e.filter(col("vec_id") < 8).orderBy("vec_id")
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("cq"))
-          .collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
+        val centroids = ivfLiterals(e).centroids
         // ground truth: exact integer-L2 top-k per query over the
         // quantized vectors (materialized _vq attributes — HOF-input rule)
         val vq = e.select(col("vec_id"),
@@ -862,55 +852,50 @@ object SimilarityQueries {
         val corpusCells = vq.select(col("vec_id").as("c_id"),
           Similarity.ivfAssignQuantizedLongs(col("_vq"), centroids)
             .as("_ccell"))
-        // r11: the six grid points are independent serial chains of small
-        // stages — drive them from concurrent driver threads (guide-§2.6
-        // back-fill; the q258 recall-curve pattern) and collect only the
-        // two counts each; the readout arithmetic stays the identical
-        // Spark expressions over a local relation.
+        // one lazy union of per-point count aggregates: the six grid
+        // points are independent chains of small stages that run in the
+        // one write job. Their plans are built from concurrent driver
+        // threads: each point's codebooks and pqKnnJoin's id bounds are
+        // read while its plan is built (the q258 recall-curve pattern).
         val grid = for {
           kCodes <- CurveCodes
           nProbe <- CurveProbes
         } yield (kCodes, nProbe)
+        val denom = lit((CurveK * DcgQueries).toDouble)
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val measured = Await.result(
+        val points = Await.result(
           Future.traverse(grid) { case (kCodes, nProbe) => Future {
             val cbs = Similarity.pqCodebooksFixed(e, "vec_id", "embedding",
               dim = 64, m = PqM, kCodes = kCodes)
             val nn = Similarity.pqKnnJoin(
               e.filter(col("vec_id") < DcgQueries), e, "vec_id", "embedding",
               k = CurveK, centroids, cbs, nProbe = nProbe)
-            val nHits = nn.join(brute, Seq("q_id", "c_id"))
+            val hits = nn.join(brute, Seq("q_id", "c_id"))
               .agg(count(lit(1)).cast("long").as("n_hits"))
-              .head().getLong(0)
             // routing ceiling: true pairs whose corpus cell IS probed —
             // recall ≤ ceiling by construction; the gap is quantization
             val qp = vq.filter(col("vec_id") < DcgQueries)
               .select(col("vec_id").as("q_id"),
                 explode(Similarity.ivfProbeCells(col("_vq"), centroids,
                   nProbe)).as("_pcell"))
-            val nReach = brute.join(qp, Seq("q_id"))
+            val reach = brute.join(qp, Seq("q_id"))
               .join(corpusCells, Seq("c_id"))
               .filter(col("_ccell") === col("_pcell"))
               .agg(count(lit(1)).cast("long").as("n_reachable"))
-              .head().getLong(0)
-            (nProbe.toLong,
-              java.lang.Long.numberOfTrailingZeros(kCodes.toLong).toLong,
-              nHits, nReach)
+            hits.crossJoin(reach)
+              .select(lit(nProbe.toLong).as("n_probe"),
+                lit(java.lang.Long.numberOfTrailingZeros(kCodes.toLong)
+                  .toLong).as("pq_bits"),
+                lit(CurveK.toLong).as("k"),
+                lit(DcgQueries.toLong).as("n_queries"),
+                col("n_hits"), col("n_reachable"),
+                (col("n_hits").cast("double") / denom).as("recall"),
+                (col("n_reachable").cast("double") / denom)
+                  .as("reach_ceiling"))
           }}, Duration.Inf)
-        import s.implicits._
-        measured.toDF("_np", "_bits", "_nh", "_nr")
-          .select(col("_np").as("n_probe"),
-            col("_bits").as("pq_bits"),
-            lit(CurveK.toLong).as("k"),
-            lit(DcgQueries.toLong).as("n_queries"),
-            col("_nh").as("n_hits"), col("_nr").as("n_reachable"),
-            (col("_nh").cast("double") /
-              lit((CurveK * DcgQueries).toDouble)).as("recall"),
-            (col("_nr").cast("double") /
-              lit((CurveK * DcgQueries).toDouble)).as("reach_ceiling"))
-          .orderBy("pq_bits", "n_probe")
+        points.reduce(_ unionByName _).orderBy("pq_bits", "n_probe")
       },
       Some(ivfPqCurveOracleSql)
     ),
@@ -948,10 +933,7 @@ object SimilarityQueries {
       "q214_pq_knn_kappa",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val centroids = e.filter(col("vec_id") < 8).orderBy("vec_id")
-          .select(transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long")).as("cq"))
-          .collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
+        val centroids = ivfLiterals(e).centroids
         val cbs = Similarity.pqCodebooksFixed(e, "vec_id", "embedding",
           dim = 64, m = PqM, kCodes = PqK)
         val nn = Similarity.pqKnnJoin(e, e, "vec_id", "embedding",

@@ -404,17 +404,10 @@ object TextQueries {
     //      funnel is the x46 channel; q67 still pins the exact prefix.
     QueryDef(
       "q46_curation_pipeline",
-      (s, dir) => {
-        // materialize the 1-row funnel eagerly so the pipeline's internal
-        // cache can be released here — returning the lazy frame leaked one
-        // cached DataFrame per invocation (session lifetime)
-        val r = graft.ext.TrainingDataPipeline(t(s, dir, "documents"),
+      (s, dir) =>
+        graft.ext.TrainingDataPipeline(t(s, dir, "documents"),
           config = graft.ext.TrainingDataPipeline.Config(portableHashes = true))
-        val rows = r.stats.collect().toSeq
-        val schema = r.stats.schema
-        r.release()
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
-      },
+          .stats,
       Some(curationPipelineOracleSql)
     ),
 

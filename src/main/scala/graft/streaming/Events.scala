@@ -35,16 +35,6 @@ object Events {
         col("window.end").as("window_end"),
         col("event_type"), col("n_events"), col("total_value"))
 
-  /** Sliding-window average value (window, slide). */
-  def slidingAvg(events: DataFrame,
-      window_ : String = "15 minutes", slide: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), window_, slide))
-      .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("avg_value"),
-        col("n_events"))
-
   /** Session windows per user (built-in session_window, 30min gap). */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
@@ -239,14 +229,4 @@ object Events {
       .format("parquet")
       .option("path", outDir)
       .start()
-
-  // ---- batch twins (oracle-checkable, same aggregation semantics) ----
-
-  def tumblingCountsBatch(events: DataFrame, minutes: Int = 10): DataFrame = {
-    val bucket = timestamp_seconds(
-      (unix_timestamp(col("ts")) / (minutes * 60)).cast("long") * (minutes * 60))
-    events
-      .groupBy(bucket.as("window_start"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-  }
 }

@@ -68,33 +68,14 @@ object SketchStream {
       .write.mode("overwrite").parquet(sketchPath)
   }
 
-  /** Streaming Count-Min ingest. The instructive CONTRAST with the KMV
+  /** One Count-Min micro-batch: delta grid + stored grid → cell-wise sum →
+    * new version + pointer swap. The instructive CONTRAST with the KMV
     * stream above: KMV merges by set union (idempotent — replay-safe with
     * no guard), but CMS merges by ADDITION, so a replayed batch would
     * DOUBLE-COUNT. The grid therefore lives in the versioned-snapshot
     * layout (CdcIngest's `v<epoch>` directories + atomic `_latest`
     * pointer) with the scd2-style epoch replay guard: a batch whose epoch
     * is already versioned is skipped.
-    */
-  def startCountMin(
-      rows: DataFrame,
-      textCol: String,
-      gridDir: String,
-      checkpointPath: String,
-      width: Int = 16,
-      depth: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery =
-    rows.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        processCountMinBatch(batch, epochId, textCol, gridDir, width, depth)
-      }
-      .start()
-
-  /** One CMS micro-batch: delta grid + stored grid → cell-wise sum →
-    * new version + pointer swap. Skips already-committed epochs.
     */
   def processCountMinBatch(
       batch: DataFrame,

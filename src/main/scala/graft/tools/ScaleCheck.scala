@@ -94,14 +94,9 @@ object ScaleCheck {
           round(avg(col("byte_entropy")), 4).as("mean_entropy"),
           sum(col("frames_sampled")).cast("long").as("total_frames"))
     }),
-    "x46_curation_pipeline_prod" -> ((s, dir) => {
-      val r = graft.ext.TrainingDataPipeline(
-        graft.queries.Q.t(s, dir, "documents"))
-      val rows = r.stats.collect().toSeq
-      val schema = r.stats.schema
-      r.release()
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
-    }),
+    "x46_curation_pipeline_prod" -> ((s, dir) =>
+      graft.ext.TrainingDataPipeline(
+        graft.queries.Q.t(s, dir, "documents")).stats),
     "x42_factor_loadings_sklearn" -> ((s, dir) => {
       val df = graft.queries.Q.t(s, dir, "lineitem")
         .select("l_quantity", "l_extendedprice", "l_discount", "l_tax")

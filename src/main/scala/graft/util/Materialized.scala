@@ -2,23 +2,21 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped registry of materialized intermediate artifacts — the
-  * in-process analog of the table a production pipeline PERSISTS between
-  * stages (the q74 incremental signature index pattern: derive the
-  * verified-duplicate pair set once, let every downstream policy stage
-  * consume the same artifact instead of re-deriving it).
+/** Materialized intermediate artifacts — the table a production pipeline
+  * PERSISTS between stages (the q74 incremental signature index pattern:
+  * derive the verified-duplicate pair set once, let every downstream
+  * policy stage consume the same artifact instead of re-deriving it).
   *
-  * Contract:
-  *  - [[put]] ALWAYS rebuilds and replaces — the producing stage's cost is
-  *    never hidden by a stale cache (bench integrity: a re-run of the
-  *    producer re-measures the full derivation);
-  *  - [[getOrBuild]] consumes the latest materialization, deriving it only
-  *    when no producer has run in this session (standalone correctness:
-  *    every consumer is self-sufficient, just slower);
-  *  - keys embed the session identity, so a new SparkSession never reads
-  *    another session's (dead) checkpointed blocks.
-  * Deterministic inputs ⇒ consuming the artifact and re-deriving it are
-  * bit-identical; only the wall-clock differs.
+  * A production curation pipeline persists its derived tables (the q140
+  * pair index) to the lake so a cold-start consumer (q143/q200 standalone)
+  * reads the artifact instead of re-deriving it. Paths are
+  * content-addressed by the logical key (sf dir + operator + operating
+  * point + a version token — bump the token when the producing operator's
+  * semantics change, or delete the artifacts dir). A session registry in
+  * front of the lake keeps each session's read-back; its keys embed the
+  * session identity, so a new SparkSession never reads another session's
+  * frames. Deterministic inputs ⇒ read-back and re-derivation are
+  * value-identical, so every oracle hash is path-independent.
   */
 object Materialized {
   private val cache =
@@ -26,34 +24,6 @@ object Materialized {
 
   def key(spark: SparkSession, parts: String*): String =
     (System.identityHashCode(spark).toString +: parts).mkString("|")
-
-  /** Rebuild, materialize (eager local checkpoint), and register. The
-    * replaced entry's blocks are released — a producer re-run (each bench
-    * pass) must not accumulate dead checkpoints.
-    */
-  def put(k: String, df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
-    val old = cache.put(k, c)
-    if (old != null && (old ne c))
-      try old.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    c
-  }
-
-  /** Latest materialization, or build-and-register when absent. */
-  def getOrBuild(k: String)(build: => DataFrame): DataFrame =
-    cache.computeIfAbsent(k, _ => build.localCheckpoint())
-
-  // ---- lake-persisted artifacts (cross-SESSION reuse) --------------------
-  //
-  // The session registry above dies with the JVM; a production curation
-  // pipeline persists its derived tables (the q140 pair index) to the lake
-  // so a cold-start consumer (q143/q200 standalone) reads the artifact
-  // instead of re-deriving it. Paths are content-addressed by the logical
-  // key (sf dir + operator + operating point + a version token — bump the
-  // token when the producing operator's semantics change, or delete the
-  // artifacts dir). Deterministic inputs ⇒ read-back and re-derivation are
-  // value-identical, so every oracle hash is path-independent.
 
   private def artifactsDir: String =
     sys.props.getOrElse("graft.artifacts.dir", "/tmp/graft_artifacts")

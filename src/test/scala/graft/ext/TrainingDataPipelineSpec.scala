@@ -34,7 +34,6 @@ class TrainingDataPipelineSpec extends SparkSpec {
     assert((0 until 5).map(s.getLong) == Seq(0L, 0L, 0L, 0L, 0L), s.toString)
     assert(s.getDouble(5) == 0.0)
     assert(r.curated.count() == 0)
-    r.release()
   }
 
   test("every doc filtered away still yields a well-defined stats row") {
@@ -43,7 +42,6 @@ class TrainingDataPipelineSpec extends SparkSpec {
     val s = r.stats.head()
     assert(s.getLong(0) == 2L && s.getLong(3) == 0L && s.getLong(4) == 0L)
     assert(s.getDouble(5) == 0.0)
-    r.release()
   }
 
   test("chunkDocuments: coverage, overlap, and degenerate docs") {

@@ -60,11 +60,14 @@ class SplitDistinctAggregatesSpec extends SparkSpec {
     // re-decompress the wide column (the measured r6 loss case)
     assert(hasExpand(base.groupBy("k")
       .agg(count_distinct(col("s")), count_distinct(col("v")))))
-    // ...and `false` disables grouped splitting even for all-numeric sets
-    spark.conf.set("spark.graft.splitDistinctAggregates.grouped", "false")
-    try assert(hasExpand(base.groupBy("s")
-      .agg(count_distinct(col("k")), count_distinct(col("v")))))
-    finally spark.conf.unset("spark.graft.splitDistinctAggregates.grouped")
+    // ...and with the rule excluded, the all-numeric grouped shape the
+    // rule splits (next test) keeps Spark's Expand: the reference plan,
+    // and proof that `excludedRules` reaches the injected rule
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      SplitDistinctAggregates.ruleName)
+    try assert(hasExpand(base.groupBy("k")
+      .agg(count_distinct(col("v")), count_distinct(col("k")))))
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("grouped AUTO default: all-fixed-width distinct sets split without " +
@@ -104,12 +107,11 @@ class SplitDistinctAggregatesSpec extends SparkSpec {
 
   test("grouped multi-distinct splits: no Expand, per-group values exact, " +
     "null keys survive the reassembly join") {
+    // all-numeric inputs, so the fixed-width gate lets the split fire
     val withNullKey = Seq(
-      (Option(1L), "x", 10.0), (Option(1L), "y", 20.0), (None, "x", 30.0),
-      (None, "z", 40.0), (Option(2L), "x", 50.0), (Option(2L), "x", 60.0)
+      (Option(1L), 1L, 10.0), (Option(1L), 2L, 20.0), (None, 1L, 30.0),
+      (None, 3L, 40.0), (Option(2L), 1L, 50.0), (Option(2L), 1L, 60.0)
     ).toDF("k", "s", "v")
-    spark.conf.set("spark.graft.splitDistinctAggregates.grouped", "true")
-    try {
     val df = withNullKey.groupBy("k").agg(
       count_distinct(col("s")).as("ds"),
       count_distinct(col("v")).as("dv"),
@@ -127,8 +129,6 @@ class SplitDistinctAggregatesSpec extends SparkSpec {
       .select("ds", "dv")
     assert(noKey.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       .toSeq == Seq((1L, 2L), (2L, 2L), (2L, 2L)))
-    } finally
-      spark.conf.unset("spark.graft.splitDistinctAggregates.grouped")
   }
 
   test("single distinct set and non-deterministic children are untouched") {
