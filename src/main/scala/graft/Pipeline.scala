@@ -1,13 +1,12 @@
 package graft
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.SparkSession
 import graft.analytics.{Bootstrap, FactorAnalysisEM, MonteCarlo}
 import graft.etl.{CleanTraffic, CleanWeather, MergeTrafficWeather}
 import graft.gen.Generators
 import graft.io.{LakePaths, Layers}
 import graft.schema.Schemas
-import graft.util.DriverBudget
+import graft.util.Legs.concurrently
 
 /** E1: the full medallion pipeline (main.py:36-114), as one lazy Spark job
   * chain with parquet layer boundaries kept for restartability:
@@ -16,9 +15,10 @@ import graft.util.DriverBudget
   *   → factor analysis + monte carlo + bootstrap → gold parquet
   *
   * Stages that share only their inputs run as concurrent legs
-  * ([[concurrently]]): the two cleans, then the three gold stages. At
-  * lake sizes a stage's fixed driver costs (statistics collects, planning,
-  * small writes) set its latency, so legs fill cores one stage leaves idle.
+  * ([[graft.util.Legs.concurrently]]): the two cleans, then the three
+  * gold stages. At lake sizes a stage's fixed driver costs (statistics
+  * collects, planning, small writes) set its latency, so legs fill cores
+  * one stage leaves idle.
   *
   * Each stage is a pure DataFrame→DataFrame function; this object only wires
   * paths. Layer roots are plain Hadoop FS URIs, so `root` may be
@@ -132,41 +132,6 @@ object Pipeline {
       })
     merged.unpersist()
     ()
-  }
-
-  /** Daemon threads for [[concurrently]]'s legs; idle ones expire. */
-  private lazy val legPool = Executors.newCachedThreadPool { (r: Runnable) =>
-    val t = new Thread(r, "graft-pipeline-leg")
-    t.setDaemon(true)
-    t
-  }
-
-  /** Runs independent stage legs at once and returns when every leg has
-    * ended. A failure is rethrown only then — the first leg's in argument
-    * order, later ones attached as suppressed — so no leg's job is left
-    * running. Each leg runs under the caller's `DriverBudget` scope and
-    * active session: a pooled thread created earlier inherits neither.
-    */
-  private[graft] def concurrently(legs: (() => Unit)*): Unit = {
-    val budget = DriverBudget.scope
-    val session = SparkSession.getActiveSession
-    val running = legs.map { leg =>
-      legPool.submit(new Callable[Unit] {
-        def call(): Unit = {
-          session.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
-          try DriverBudget.within(budget)(leg())
-          finally SparkSession.clearActiveSession()
-        }
-      })
-    }
-    val failures = running.flatMap { f =>
-      try { f.get(); None }
-      catch { case e: ExecutionException => Some(e.getCause) }
-    }
-    failures.headOption.foreach { first =>
-      failures.tail.foreach(first.addSuppressed)
-      throw first
-    }
   }
 
   /** CLI: runMain graft.Pipeline [root] [nRows] [--bucketed[=N]]

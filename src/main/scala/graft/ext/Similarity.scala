@@ -4,7 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.DriverBudget
+import graft.util.{DriverBudget, Legs}
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -35,14 +35,12 @@ object Similarity {
 
   /** Cosine via graft's native fused expression (one codegen'd loop over the
     * unsafe array data — see graft.functions.CosineSimilarity); requires a
-    * GraftSession / GraftFunctions.register'd session. `cosineComposable`
-    * is the pure-builtin fallback with identical numerics.
+    * GraftSession / GraftFunctions.register'd session. Its pure-builtin
+    * twin, `dot(a, b) / (norm(a) * norm(b))`, lives in the tests
+    * (ScoringTwinsSpec pins the two on generated input).
     */
   def cosine(a: Column, b: Column): Column =
     call_function("cosine_similarity", a, b)
-
-  def cosineComposable(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
 
   /** Top-k most similar rows to the vector of `queryId` (excluded), by
     * cosine; deterministic ordering on (rounded sim desc, id asc).
@@ -290,6 +288,80 @@ object Similarity {
       .limit(k)
   }
 
+  // ------------------------------------------- ranked per-key selection
+
+  /** Per `key`, the `k` smallest (score, id) pairs in (score, id) order,
+    * as (key, id, score, rank) with rank 1..k: the one ranked selection
+    * behind the ANN operators. Scores are longs in [0, `scoreMax`]; a row
+    * with a null score or id is never selected.
+    *
+    * When the pairs pack into one order-preserving long ([[packBits]]) and
+    * k ≤ 64, the selection is the native `top_k_longs` aggregate over
+    * `shiftleft(score, idBits) + id`: a codegen HashAggregate with
+    * map-side combine, so at most k longs per key per partition cross the
+    * exchange and no row is sorted. Otherwise (negative, wide or
+    * non-integral ids, or a larger k: the aggregate's merge is O(k²)
+    * expression nodes) it is a `row_number` window ordered by (score, id),
+    * which shuffles and sorts every row. Both forms give the same rows.
+    */
+  private[graft] def smallestK(scored: DataFrame, key: String, score: String,
+      id: String, k: Int, scoreMax: BigInt,
+      idRange: Option[(Long, Long)]): DataFrame = {
+    val idBits = packBits(idRange, scoreMax)
+    if (idBits > 0 && k <= 64) {
+      val idType = scored.schema(id).dataType
+      scored.groupBy(key)
+        .agg(graft.functions.GraftFunctions.topKLongs(
+          shiftleft(col(score), idBits) + col(id).cast("long"), k).as("_pk"))
+        .select(col(key), posexplode(col("_pk")).as(Seq("_r0", "_p")))
+        .select(col(key),
+          col("_p").bitwiseAND(lit((1L << idBits) - 1)).cast(idType).as(id),
+          shiftright(col("_p"), idBits).as(score),
+          (col("_r0") + 1).cast("long").as("rank"))
+    } else {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(key).orderBy(asc(score), asc(id))
+      scored.filter(col(score).isNotNull && col(id).isNotNull)
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .select(key, id, score, "rank")
+    }
+  }
+
+  /** The id width when every (score, id) with a score in [0, `scoreMax`]
+    * and an id in `idRange` packs into `shiftleft(score, idBits) + id`
+    * below `top_k_longs`' Long.MaxValue sentinel (smaller packed = smaller
+    * (score, id)); -1 when ids are unknown or negative, or the pair does
+    * not fit.
+    */
+  private[graft] def packBits(idRange: Option[(Long, Long)],
+      scoreMax: BigInt): Int = idRange match {
+    case Some((lo, hi)) if lo >= 0 && scoreMax >= 0 =>
+      val idBits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(hi, 1L))
+      if (((scoreMax + 1) << idBits) <= BigInt(Long.MaxValue)) idBits else -1
+    case _ => -1
+  }
+
+  private def integralId(df: DataFrame, idCol: String): Boolean =
+    df.schema(idCol).dataType match {
+      case org.apache.spark.sql.types.ByteType |
+          org.apache.spark.sql.types.ShortType |
+          org.apache.spark.sql.types.IntegerType |
+          org.apache.spark.sql.types.LongType => true
+      case _ => false
+    }
+
+  /** (min, max) of an integral id column, one tiny aggregate job; None for
+    * another id type or no non-null id. */
+  private[graft] def idRange(df: DataFrame,
+      idCol: String): Option[(Long, Long)] =
+    if (!integralId(df, idCol)) None
+    else {
+      val r = df.agg(min(col(idCol)).cast("long"), max(col(idCol)).cast("long"))
+        .head()
+      if (r.isNullAt(0)) None else Some(r.getLong(0) -> r.getLong(1))
+    }
+
   /** Batch k-NN similarity JOIN: for EVERY query row, its top-k corpus
     * neighbors by cosine — the retrieval/labeling shape of a training-data
     * pipeline (one-query lookups are [[lshTopK]]).
@@ -297,8 +369,8 @@ object Similarity {
     * Scale shape: the QUERY side explodes into its multi-probe bucket set
     * (own bucket + the `nBits` Hamming-1 neighbors) and equi-joins the
     * bucketed corpus — the corpus is never replicated and never filtered
-    * with a quadratic cross-join predicate; ranking is a per-query window
-    * (parallel across queries). Each (query, candidate) pair arises from
+    * with a quadratic cross-join predicate; ranking is [[smallestK]] per
+    * query by (cos_sim desc, c_id). Each (query, candidate) pair arises from
     * at most one probe bucket (XOR masks are distinct), so no distinct
     * pass is needed.
     *
@@ -358,56 +430,19 @@ object Similarity {
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         round(cosine(col("q_vec"), col("c_vec")), 4).as("cos_sim"))
-    // (sim, id)-packing into the bounded top-k aggregate (the pqKnnJoin
-    // recipe): cos_sim is round(·, 4), so 10000·cos is an exact integer in
-    // [-10000, 10000] and (10000 − that) a nonnegative sort key; when ids
-    // fit the remaining bits the per-query top-k is a codegen HashAggregate
-    // with map-side combine instead of a window that shuffles AND SORTS
-    // every candidate pair. Unpacking k/10000.0 reproduces round(·, 4)'s
-    // double bit-for-bit (both are the nearest double to the same decimal).
-    val idType = corpus.schema(corpus.schema.fieldIndex(idCol)).dataType
-    val integralId = idType match {
-      case _: org.apache.spark.sql.types.IntegerType |
-          _: org.apache.spark.sql.types.LongType |
-          _: org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    val maxIdRow =
-      if (integralId)
-        corpus.agg(min(col(idCol)).cast("long"), max(col(idCol)).cast("long"))
-          .head()
-      else null
-    val idBits =
-      if (maxIdRow != null && !maxIdRow.isNullAt(1))
-        64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(maxIdRow.getLong(1), 1L))
-      else 64
-    // k ≤ 64: the bounded aggregate's merge identity is O(k²) expression
-    // nodes (measured fine through k = 64) — larger k falls back to the
-    // window form
-    val packable = k <= 64 && maxIdRow != null && !maxIdRow.isNullAt(0) &&
-      maxIdRow.getLong(0) >= 0 && idBits <= 47 // 20001 sim keys need 15 bits
-    if (packable) {
-      val simKey = (lit(10000L) - round(col("cos_sim") * 10000).cast("long"))
-      scored.groupBy("q_id")
-        .agg(graft.functions.GraftFunctions
-          .topKLongs(shiftleft(simKey, idBits) + col("c_id"), k).as("_ps"))
-        .select(col("q_id"), posexplode(col("_ps")).as(Seq("_r0", "_p")))
-        .select(col("q_id"),
-          col("_p").bitwiseAND(lit((1L << idBits) - 1)).cast(idType)
-            .as("c_id"),
-          ((lit(10000L) - shiftright(col("_p"), idBits)).cast("double") /
-            lit(10000.0)).as("cos_sim"),
-          (col("_r0") + 1).cast("long").as("rank"))
-        .orderBy("q_id", "rank")
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(desc("cos_sim"), asc("c_id"))
-      scored
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .orderBy("q_id", "rank")
-    }
+    // cos_sim is round(·, 4), so 10000 − 10000·cos is an exact integer key
+    // in [0, 20000]; unpacking (10000 − key)/10000.0 reproduces round(·,
+    // 4)'s double bit for bit (both are the nearest double to the same
+    // decimal)
+    val ranked = smallestK(
+      scored.select(col("q_id"), col("c_id"),
+        (lit(10000L) - round(col("cos_sim") * 10000).cast("long")).as("_sk")),
+      "q_id", "_sk", "c_id", k, BigInt(20000), idRange(corpus, idCol))
+    ranked.select(col("q_id"), col("c_id"),
+        ((lit(10000L) - col("_sk")).cast("double") / lit(10000.0))
+          .as("cos_sim"),
+        col("rank"))
+      .orderBy("q_id", "rank")
   }
 
   /** Label-noise detection by neighborhood disagreement (the confident-
@@ -1059,10 +1094,10 @@ object Similarity {
     *
     * Scale shape: corpus rows land in exactly ONE cell (integer argmin);
     * a query probes its `nProbe` nearest cells, so each (q, c) pair meets
-    * at most once — no dedup pass. k=1 ranks via groupBy + min(struct):
-    * partial aggregation consumes pairs map-side where the cell join
-    * produces them (the q141 argmax rule); k>1 uses a per-query window.
-    * Ties break (distance, then lowest c_id) identically in both engines.
+    * at most once — no dedup pass. Each query keeps its k nearest via
+    * [[smallestK]], whose packed form consumes pairs map-side where the
+    * cell join produces them (the q141 argmax rule). Ties break
+    * (distance, then lowest c_id) identically in both engines.
     *
     * Quantization and cell/code assignment run off ONE materialized `_vq`
     * projection per side (HOF-input rule). Recall < 1 by construction
@@ -1103,59 +1138,14 @@ object Similarity {
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         pqSdcDist(col("_qcodes"), col("_ccodes"), tables).as("sdc_dist"))
-    // (dist, id)-packing: min/top-k over ~10^8 pair rows via window or
-    // min(struct(...)) has no mutable hash buffer and plans as a
-    // SortAggregate/WindowExec that SORTS every pair row (measured 70 of
-    // 95 s at the 100× point). When (dist, id) provably fit one long —
-    // dist bound is exact driver math over the SDC tables, id bound one
-    // metadata-cheap max() — pack them so the per-key reduction is a
-    // HashAggregate with map-side combine (order-preserving:
-    // smallest packed = lexicographic (dist, c_id)). Fall back to the
-    // struct-min / window forms for out-of-range ids.
+    // a window or min(struct(...)) over ~10^8 pair rows sorts every pair
+    // row (measured 70 of 95 s at the 100× point); smallestK packs (dist,
+    // id) into the HashAggregate form whenever they fit one long — the
+    // dist bound is exact driver math over the SDC tables
     val maxDist = tables.map(t => t.map(_.max).max).sum
-    val maxIdRow = corpus.agg(
-      min(col(idCol)).cast("long"), max(col(idCol)).cast("long")).head()
-    val idBits = 64 - java.lang.Long.numberOfLeadingZeros(
-      math.max(if (maxIdRow.isNullAt(1)) 1L else maxIdRow.getLong(1), 1L))
-    val packable = !maxIdRow.isNullAt(0) && maxIdRow.getLong(0) >= 0 &&
-      idBits <= 62 && maxDist < (Long.MaxValue >> idBits) &&
-      (k == 1 || k <= 64) // TopKLongs merge is O(k²) expression nodes
-    if (packable && k == 1) {
-      scored.groupBy("q_id")
-        .agg(min(shiftleft(col("sdc_dist"), idBits) + col("c_id"))
-          .as("_p"))
-        .select(col("q_id"),
-          col("_p").bitwiseAND(lit((1L << idBits) - 1)).as("c_id"),
-          shiftright(col("_p"), idBits).as("sdc_dist"),
-          lit(1L).as("rank"))
-        .orderBy("q_id")
-    } else if (packable) {
-      // k > 1: the bounded native top-k aggregate (TopKLongs) — ≤ k longs
-      // per key per map partition cross the exchange, no candidate sort
-      // anywhere (the window form shuffles AND sorts every pair row)
-      scored.groupBy("q_id")
-        .agg(graft.functions.GraftFunctions
-          .topKLongs(shiftleft(col("sdc_dist"), idBits) + col("c_id"), k)
-          .as("_ps"))
-        .select(col("q_id"), posexplode(col("_ps")).as(Seq("_r0", "_p")))
-        .select(col("q_id"),
-          col("_p").bitwiseAND(lit((1L << idBits) - 1)).as("c_id"),
-          shiftright(col("_p"), idBits).as("sdc_dist"),
-          (col("_r0") + 1).cast("long").as("rank"))
-        .orderBy("q_id", "rank")
-    } else if (k == 1) {
-      scored.groupBy("q_id")
-        .agg(min(struct(col("sdc_dist"), col("c_id"))).as("_m"))
-        .select(col("q_id"), col("_m.c_id").as("c_id"),
-          col("_m.sdc_dist").as("sdc_dist"), lit(1L).as("rank"))
-        .orderBy("q_id")
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(asc("sdc_dist"), asc("c_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .orderBy("q_id", "rank")
-    }
+    smallestK(scored, "q_id", "sdc_dist", "c_id", k, BigInt(maxDist),
+        idRange(corpus, idCol))
+      .orderBy("q_id", "rank")
   }
 
   /** IVF index: KMeans coarse quantizer; rows tagged with their centroid id.
@@ -1626,29 +1616,19 @@ object Similarity {
     * (64 dims × (≤4000)² stays far under Long range), via graft's native
     * fused expression (whole-stage codegen; the composable HOF form runs
     * interpreted and allocates per evaluation — r11: the q258 graph
-    * build spent its whole budget there). [[qdistL2Composable]] is the
-    * bit-identity cross-check twin.
+    * build spent its whole budget there). Its HOF twin lives in the tests
+    * (ScoringTwinsSpec pins the two on generated input).
     */
   def qdistL2(a: Column, b: Column): Column =
     call_function("qdist_l2", a, b)
-
-  private[graft] def qdistL2Composable(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
 
   /** Degree-capped EXACT kNN graph over quantized vectors: for every
     * node its `degree` nearest by (integer L2, id) — the ORACLE
     * channel's index build (all-pairs, sf-gated like the q205 family;
     * [[knnGraphBucketed]] is the scale build). Output (s, d).
     *
-    * Per-node top-`degree` runs as the packed bounded aggregate
-    * (shiftleft(qd, idBits) + d into top_k_longs — the knnJoin/pqKnnJoin
-    * recipe: map-side codegen HashAggregate instead of a window that
-    * shuffles AND sorts every candidate pair) whenever the driver-checked
-    * bounds fit a long: qd ≤ dim·(2·maxAbs)², ids in [0, 2^idBits), and
-    * degree ≤ 64 (the aggregate's O(k²) merge limit). The window form
-    * stays as the general fallback — identical output by the same
-    * (qd, d) lexicographic order.
+    * Per-node top-`degree` is [[smallestK]] by (qd, d), packed whenever
+    * the [[quantBounds]] of the input fit a long.
     */
   def knnGraphExact(df: DataFrame, idCol: String, vecCol: String,
       degree: Int): DataFrame = {
@@ -1658,27 +1638,8 @@ object Similarity {
     val w = df.select(col(idCol).as("d"), quantVec(col(vecCol)).as("_vd"))
     val scored = v.crossJoin(w).filter(col("s") =!= col("d"))
       .withColumn("_qd", qdistL2(col("_vs"), col("_vd")))
-    // one tiny driver pass bounds the pack: max |quantized component|,
-    // dim, and the id range (the knnJoin packability check, adapted to
-    // integer distances)
-    val idBits = packIdBits(df, idCol, vecCol)
-    if (idBits > 0 && degree <= 64) {
-      val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-      scored.groupBy("s")
-        .agg(graft.functions.GraftFunctions
-          .topKLongs(shiftleft(col("_qd"), idBits) + col("d").cast("long"),
-            degree).as("_pk"))
-        .select(col("s"), explode(col("_pk")).as("_p"))
-        .select(col("s"),
-          col("_p").bitwiseAND(lit((1L << idBits) - 1)).cast(idType).as("d"))
-    } else {
-      val win = org.apache.spark.sql.expressions.Window
-        .partitionBy("s").orderBy(col("_qd"), col("d"))
-      scored
-        .withColumn("_rn", row_number().over(win))
-        .filter(col("_rn") <= degree)
-        .select("s", "d")
-    }
+    val (ids, qdMax) = quantBounds(df, idCol, vecCol)
+    smallestK(scored, "s", "_qd", "d", degree, qdMax, ids).select("s", "d")
   }
 
   /** Production graph build: the bucketed [[knnJoin]] (SRP buckets +
@@ -1716,41 +1677,33 @@ object Similarity {
     */
   def beamSearchTopK(df: DataFrame, idCol: String, vecCol: String,
       graph: DataFrame, queryPred: Column, k: Int, ef: Int,
-      hops: Int, entryId: Long): DataFrame =
+      hops: Int, entryId: Long): DataFrame = {
+    val (ids, qdMax) = quantBounds(df, idCol, vecCol)
     beamSearchTopKWithBounds(df, idCol, vecCol, graph, queryPred, k, ef,
-      hops, entryId, packIdBits(df, idCol, vecCol))
+      hops, entryId, packBits(ids, qdMax))
+  }
 
-  /** Driver-checked packability of the (qd, id) pair into one long:
-    * returns the id width when qd ≤ dim·(2·maxAbs)² and ids are
-    * nonnegative and narrow enough, else -1 (callers fall back to the
-    * window form). One tiny aggregate job — shared across the graph
-    * build / beam searches of one query via explicit passing.
+  /** The pack bounds of quantized-vector scores, in one tiny aggregate
+    * job: the id range and the largest integer L2² two vectors can reach,
+    * dim·(2·maxAbs)². The range is None (callers take the window form)
+    * for non-integral ids or when no vector has a component.
     */
-  private[graft] def packIdBits(df: DataFrame, idCol: String,
-      vecCol: String): Int = {
-    val idIntegral = df.schema(df.schema.fieldIndex(idCol)).dataType match {
-      case _: org.apache.spark.sql.types.IntegerType |
-          _: org.apache.spark.sql.types.LongType |
-          _: org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (!idIntegral) return -1
+  private[graft] def quantBounds(df: DataFrame, idCol: String,
+      vecCol: String): (Option[(Long, Long)], BigInt) = {
+    if (!integralId(df, idCol)) return (None, BigInt(0))
     val b = df.select(col(idCol).cast("long").as("_i"),
         quantVec(col(vecCol)).as("_q"))
       .agg(min(col("_i")), max(col("_i")),
         max(array_max(transform(col("_q"), x => abs(x)))),
         max(size(col("_q"))))
       .head()
-    // r12 (ADVICE): all-null/empty vectors aggregate slots 2/3 to null —
-    // report unpackable so callers take the window fallback instead of
-    // NPE-ing on getLong
-    if (b.isNullAt(0) || b.isNullAt(2) || b.isNullAt(3) ||
-        b.getLong(0) < 0) return -1
-    val idBits =
-      64 - java.lang.Long.numberOfLeadingZeros(math.max(b.getLong(1), 1L))
-    val maxAbs = BigInt(b.getLong(2))
-    val qdMax = BigInt(b.getInt(3)) * (2 * maxAbs) * (2 * maxAbs)
-    if (idBits + qdMax.bitLength <= 63) idBits else -1
+    // all-null/empty vectors aggregate slots 2/3 to null
+    if (b.isNullAt(0) || b.isNullAt(2) || b.isNullAt(3)) (None, BigInt(0))
+    else {
+      val maxAbs = BigInt(b.getLong(2))
+      (Some(b.getLong(0) -> b.getLong(1)),
+        BigInt(b.getInt(3)) * (2 * maxAbs) * (2 * maxAbs))
+    }
   }
 
   private[graft] def beamSearchTopKWithBounds(df: DataFrame, idCol: String,
@@ -1862,14 +1815,7 @@ object Similarity {
     // (or with non-integral ids or ragged vectors) the distributed
     // machinery below runs.
     locally {
-      val idIntegral = df.schema(df.schema.fieldIndex(idCol)).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-            org.apache.spark.sql.types.ShortType |
-            org.apache.spark.sql.types.IntegerType |
-            org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (idIntegral && DriverBudget.bytes > 0) {
+      if (integralId(df, idCol) && DriverBudget.bytes > 0) {
         val table = df.select(col(idCol).cast("long").as("v"),
           quantVec(col(vecCol)).as("_vv"), queryPred.as("_isq"))
         // a row holds the id, the vector and its elements, and the flag;
@@ -1981,28 +1927,14 @@ object Similarity {
       .select(col(idCol).as("q"), quantVec(col(vecCol)).as("_qv"))
     val nq = queries.count()
     // pack bounds computed ONCE and shared by brute force + every width
-    val idBits = packIdBits(df, idCol, vecCol)
+    val (ids, qdMax) = quantBounds(df, idCol, vecCol)
+    val idBits = packBits(ids, qdMax)
     val scored = vecs.crossJoin(broadcast(queries))
       .filter(col("q") =!= col("v"))
       .withColumn("_qd", qdistL2(col("_vv"), col("_qv")))
-    val brute = (if (idBits > 0) {
-      // packed top-k (the knnGraphExact recipe): map-side HashAggregate
-      // instead of a window sort of every (query, vector) pair
-      scored.groupBy("q")
-        .agg(graft.functions.GraftFunctions.topKLongs(
-          shiftleft(col("_qd"), idBits) + col("v").cast("long"), k).as("_pk"))
-        .select(col("q"), explode(col("_pk")).as("_p"))
-        .select(col("q"),
-          col("_p").bitwiseAND(lit((1L << idBits) - 1))
-            .cast(df.schema(df.schema.fieldIndex(idCol)).dataType).as("v"))
-    } else {
-      val win = org.apache.spark.sql.expressions.Window
-        .partitionBy("q").orderBy(col("_qd"), col("v"))
-      scored
-        .withColumn("_rn", row_number().over(win))
-        .filter(col("_rn") <= k)
-        .select("q", "v")
-    }).localCheckpoint() // EAGER: shared by the concurrently-driven widths
+    val brute = smallestK(scored, "q", "_qd", "v", k, qdMax, ids)
+      .select("q", "v")
+      .localCheckpoint() // EAGER: shared by the concurrently-driven widths
     // the per-width searches are independent serial chains of tiny stages
     // (hop -> broadcast -> hop ...); driving them from driver threads
     // overlaps those chains (guide-§2.6 back-fill) instead of paying each
@@ -2013,19 +1945,14 @@ object Similarity {
     // vs 3.0 s for this form at sf0.1: it halved the job count but
     // serialized the chains, and scheduling latency, not compute, is the
     // cost; the driver fast path above is what actually removes it.)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    val counts = Legs.concurrently(efs.map { ef => () =>
+      ef -> beamSearchTopKWithBounds(df, idCol, vecCol, graph,
+          queryPred, k, ef, hops, entryId, idBits)
+        .select("q", "v").join(brute, Seq("q", "v"))
+        .agg(count(lit(1)).as("_m"))
+        .head().getLong(0)
+    }: _*)
     val spark = df.sparkSession
-    val counts: Seq[(Int, Long)] = Await.result(
-      Future.traverse(efs) { ef => Future {
-        val m = beamSearchTopKWithBounds(df, idCol, vecCol, graph,
-            queryPred, k, ef, hops, entryId, idBits)
-          .select("q", "v").join(brute, Seq("q", "v"))
-          .agg(count(lit(1)).as("_m"))
-          .head().getLong(0)
-        ef -> m
-      }}, Duration.Inf)
     import spark.implicits._
     counts.toDF("_ef", "_m")
       .select(col("_ef").cast("long").as("beam_width"),

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
   *
   * Semantics match the composable form bit-for-bit: elements are widened to
   * double, accumulation is sequential, result = dot/(√na·√nb). Length
-  * mismatch or an empty/zero-norm side yields null (like zip_with's
-  * null-padding flowing through the aggregate).
+  * mismatch, a null element or an empty/zero-norm side yields null (like
+  * zip_with's null-padding or a null product flowing through the
+  * aggregate).
   */
 @ExpressionDescription(
   usage = "_FUNC_(a, b) - cosine similarity of two numeric arrays.",
@@ -53,6 +54,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
       val yi = if (isFloat) y.getFloat(i).toDouble else y.getDouble(i)
       dot += xi * yi; na += xi * xi; nb += yi * yi
@@ -80,13 +82,14 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |} else {
          |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
          |    double $xi = (double) $x.$get($i);
          |    double $yi = (double) $y.$get($i);
          |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
          |  }
          |  double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
          |  if ($denom == 0.0) { ${ev.isNull} = true; }
-         |  else { ${ev.value} = $dot / $denom; }
+         |  else if (!${ev.isNull}) { ${ev.value} = $dot / $denom; }
          |}
        """.stripMargin
     })

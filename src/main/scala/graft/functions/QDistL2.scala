@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * intermediate array per evaluation — at one evaluation per candidate
   * PAIR that dominated the q258 graph build (4M pairs × 64 dims). This
   * expression is one fused long loop over the unsafe `ArrayData` with full
-  * whole-stage codegen; `Similarity.qdistL2Composable` keeps the HOF form
-  * as the bit-identity cross-check (the MinHashSignature precedent).
+  * whole-stage codegen; the tests keep the HOF form (`ScoringTwins`) as
+  * the bit-identity cross-check (the MinHashSignature precedent).
   *
   * Semantics match the composable form exactly: length mismatch → null
   * (zip_with's null padding poisons the aggregate), any null element →

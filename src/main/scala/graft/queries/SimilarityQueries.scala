@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Similarity
+import graft.util.Legs
 import graft.queries.Q._
 
 /** Similarity search over `embeddings` (vec_id, embedding: Array[Float],
@@ -854,19 +855,16 @@ object SimilarityQueries {
             .as("_ccell"))
         // one lazy union of per-point count aggregates: the six grid
         // points are independent chains of small stages that run in the
-        // one write job. Their plans are built from concurrent driver
-        // threads: each point's codebooks and pqKnnJoin's id bounds are
-        // read while its plan is built (the q258 recall-curve pattern).
+        // one write job. Their plans are built as concurrent driver legs:
+        // each point's codebooks and pqKnnJoin's id bounds are read while
+        // its plan is built (the q258 recall-curve pattern).
         val grid = for {
           kCodes <- CurveCodes
           nProbe <- CurveProbes
         } yield (kCodes, nProbe)
         val denom = lit((CurveK * DcgQueries).toDouble)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val points = Await.result(
-          Future.traverse(grid) { case (kCodes, nProbe) => Future {
+        val points = Legs.concurrently(grid.map { case (kCodes, nProbe) =>
+          () => {
             val cbs = Similarity.pqCodebooksFixed(e, "vec_id", "embedding",
               dim = 64, m = PqM, kCodes = kCodes)
             val nn = Similarity.pqKnnJoin(
@@ -894,7 +892,8 @@ object SimilarityQueries {
                 (col("n_hits").cast("double") / denom).as("recall"),
                 (col("n_reachable").cast("double") / denom)
                   .as("reach_ceiling"))
-          }}, Duration.Inf)
+          }
+        }: _*)
         points.reduce(_ unionByName _).orderBy("pq_bits", "n_probe")
       },
       Some(ivfPqCurveOracleSql)

@@ -4,12 +4,14 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
-import graft.util.DriverBudget
+import graft.util.{DriverBudget, Legs}
 
-/** [[Pipeline.concurrently]]: each leg runs under the caller's
-  * `DriverBudget` scope and active session, also on a pooled thread
-  * created outside that scope, and a failure is rethrown only after every
-  * leg has ended.
+/** [[graft.util.Legs.concurrently]], the driver-thread fan-out behind
+  * the pipeline's stage legs, q248's grid points and q258's beam widths:
+  * each leg runs under the caller's `DriverBudget` scope and active
+  * session, also on a pooled thread created outside that scope, the legs'
+  * values come back in argument order, and a failure is rethrown only
+  * after every leg has ended.
   */
 class PipelineLegsSpec extends SparkSpec {
 
@@ -19,7 +21,7 @@ class PipelineLegsSpec extends SparkSpec {
   private def legs[T](n: Int)(read: => T): Seq[(Thread, T)] = {
     val seen = new ConcurrentLinkedQueue[(Thread, T)]()
     val all = new CountDownLatch(n)
-    Pipeline.concurrently(Seq.fill(n) { () =>
+    Legs.concurrently(Seq.fill(n) { () =>
       all.countDown()
       assert(all.await(30, TimeUnit.SECONDS), "legs did not run at once")
       seen.add(Thread.currentThread() -> read)
@@ -51,12 +53,23 @@ class PipelineLegsSpec extends SparkSpec {
     finally SparkSession.setActiveSession(spark)
   }
 
+  test("legs return their values in argument order, each read under the caller's scope") {
+    spark
+    // the first leg ends last, so completion order is not argument order
+    val got = DriverBudget.withBytes(5L)(Legs.concurrently(
+      () => { Thread.sleep(300); "a" -> DriverBudget.bytes },
+      () => { Thread.sleep(100); "b" -> DriverBudget.bytes },
+      () => "c" -> DriverBudget.bytes))
+    assert(got == Seq("a" -> 5L, "b" -> 5L, "c" -> 5L))
+    assert(Legs.concurrently[Int]().isEmpty)
+  }
+
   test("one failing leg: the helper throws its failure only after the other legs end") {
     val slowDone = new AtomicBoolean(false)
     val first = new IllegalStateException("first leg")
     val third = new IllegalArgumentException("third leg")
     val e = intercept[IllegalStateException] {
-      Pipeline.concurrently(
+      Legs.concurrently(
         () => throw first,
         () => { Thread.sleep(500); slowDone.set(true) },
         () => { Thread.sleep(100); throw third })

@@ -78,7 +78,7 @@ class GraphAnnSpec extends SparkSpec {
     ).toDF("a", "b")
     val cmp = rows.select(
       Similarity.qdistL2(col("a"), col("b")).as("native"),
-      Similarity.qdistL2Composable(col("a"), col("b")).as("hof"))
+      ScoringTwins.qdistL2Composable(col("a"), col("b")).as("hof"))
     assert(cmp.filter(not(col("native") <=> col("hof"))).count() == 0)
     // and on real quantized embedding pairs
     val v = e.limit(50).select(col("vec_id"),
@@ -87,7 +87,7 @@ class GraphAnnSpec extends SparkSpec {
       .crossJoin(v.select(col("vec_id").as("ib"), col("_q").as("qb")))
     val diff = p.select(
       Similarity.qdistL2(col("qa"), col("qb")).as("native"),
-      Similarity.qdistL2Composable(col("qa"), col("qb")).as("hof"))
+      ScoringTwins.qdistL2Composable(col("qa"), col("qb")).as("hof"))
       .filter(not(col("native") <=> col("hof")))
     assert(diff.count() == 0)
   }
@@ -103,7 +103,7 @@ class GraphAnnSpec extends SparkSpec {
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy("s").orderBy(col("_qd"), col("d"))
     val ref = v.crossJoin(w).filter(col("s") =!= col("d"))
-      .withColumn("_qd", Similarity.qdistL2Composable(col("_vs"), col("_vd")))
+      .withColumn("_qd", ScoringTwins.qdistL2Composable(col("_vs"), col("_vd")))
       .withColumn("_rn", row_number().over(win))
       .filter(col("_rn") <= 6)
       .select("s", "d")

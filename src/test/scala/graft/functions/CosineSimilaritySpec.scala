@@ -18,7 +18,7 @@ class CosineSimilaritySpec extends SparkSpec {
   test("native expression matches the composable zip_with form bit-for-bit") {
     val out = vecs.select(
       Similarity.cosine(col("a"), col("b")).as("native"),
-      Similarity.cosineComposable(col("a"), col("b")).as("composable"))
+      graft.ext.ScoringTwins.cosineComposable(col("a"), col("b")).as("composable"))
     assert(out.filter(col("native") =!= col("composable")).count() == 0)
   }
 
